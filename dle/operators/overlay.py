@@ -442,6 +442,8 @@ def insert_difference(existing: DataFrame | None, src: DataFrame,
     `existing`, per cell (/root/reference/sql/insert_difference.sql).
     Both inputs must already be tiled (have `cell`). Returns only the
     NEW rows (src attrs, differenced geom); the caller accumulates.
+    The engine folds all layers at once with insert_difference_fused;
+    this one-layer form is the reference the tests compare it against.
 
     Blockers per cell = union of existing geoms (equivalent to the
     reference's per-src-id union of intersecting outputs,

@@ -5,9 +5,11 @@ The Spark-idiomatic analogue of the reference's stage-level
 "already loaded" skips (/root/reference/designatedlands.py:503,
 :549-561) and sha-named download dirs (:167), but finer grained: one
 manifest row per (stage, cell) with the input fingerprint, row count
-and wall time. On resume, completed cells are pruned from the input
-BEFORE the expensive kernel UDFs run (the filter lands under the
-explode in the plan), so a killed job redoes only unfinished cells.
+and wall time. On resume, a stage's ``build_df`` gets the completed
+cells and removes them from the input of its grouped UDFs with
+`prune`, so a killed job redoes only unfinished cells. Spark keeps a
+filter on a stage's output above ``FlatMapGroupsInPandas``; pruning
+the output would still run every done cell through the kernel.
 """
 
 from __future__ import annotations
@@ -67,13 +69,21 @@ class Manifest:
         self._path(stage).unlink(missing_ok=True)
 
 
+def prune(df: DataFrame, skip_cells, col: str = "cell") -> DataFrame:
+    """`df` without the rows of `skip_cells`."""
+    return df.filter(~F.col(col).isin(list(skip_cells))) if skip_cells \
+        else df
+
+
 def run_stage(spark, manifest: Manifest, stage: str, fingerprint: str,
               build_df, out_root: str, partition_col: str = "cell",
               planned_cells: list[str] | None = None) -> DataFrame:
     """Compute-or-resume one pipeline stage.
 
-    ``build_df(skip_cells: set[str]) -> DataFrame`` must prune the given
-    completed cells as early as possible in its plan. Output parquet is
+    ``build_df(skip_cells: set[str]) -> DataFrame`` must `prune` the
+    given completed cells from the input of its grouped UDFs. Its
+    output is pruned again, so a ``build_df`` that cannot prune still
+    leaves the committed partitions untouched. Output parquet is
     partitioned by cell; a changed fingerprint invalidates everything.
 
     Crash-safe by construction: the parquet commit uses DYNAMIC
@@ -90,8 +100,7 @@ def run_stage(spark, manifest: Manifest, stage: str, fingerprint: str,
     done = manifest.done_cells(stage, fingerprint)
     df = build_df(done)
     t0 = time.perf_counter()
-    if done:
-        df = df.filter(~F.col(partition_col).isin(list(done)))
+    df = prune(df, done, partition_col)
     conf = spark.conf
     prev_mode = conf.get("spark.sql.sources.partitionOverwriteMode",
                          "static")

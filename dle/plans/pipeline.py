@@ -1,12 +1,12 @@
 """End-to-end vector pipeline — the `process-vector` analogue
 (SURVEY §3.1): designation layers -> land clip + attribute stamping
-(A4) -> precedence overlay (A5 loop) -> planarize (A7) -> qa rollups.
+(A4) -> precedence overlay (A5) -> planarize (A7) -> qa rollups.
 
-The precedence loop is inherently layer-serial (each layer may only
-claim space not already claimed — /root/reference/designatedlands.py:
-693-707); each iteration is one wide Spark job over all cells, and the
-accumulating output is localCheckpoint()ed per layer to keep lineage
-flat (SURVEY §7 "Sequential precedence loop").
+Precedence is the per-cell fold `insert_difference_fused`: tiled
+layers never interact across cells, so the reference's layer-serial
+loop (/root/reference/designatedlands.py:693-707) runs as one grouped
+UDF over all cells. With `ckpt_root` it is one `checkpoint.run_stage`
+stage, resumable per cell.
 """
 
 from __future__ import annotations
@@ -18,8 +18,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .. import datagen
 from ..config import DEFAULT_DEPTH
 from ..operators.overlay import (
-    clip, dissolve, insert_difference, planarize, tile_geoms, with_area,
+    clip, dissolve, insert_difference_fused, planarize, with_area,
 )
+from .checkpoint import Manifest, prune, run_stage
 
 REG_KEYS = ["designation", "src_id", "src_name", "process_order",
             "forest_restriction", "og_restriction", "mine_restriction"]
@@ -36,7 +37,6 @@ class VectorOutputs:
 
 def process_vector(spark: SparkSession, sf_dir: str,
                    depth: int = DEFAULT_DEPTH,
-                   fused: bool = False,
                    ckpt_root: str | None = None,
                    n_orders: int = 8,
                    two_scale: bool = True,
@@ -80,72 +80,29 @@ def process_vector(spark: SparkSession, sf_dir: str,
                    coarse_depth=cd)
     overlapping = dissolve(clipped, ["cell"] + REG_KEYS)
 
-    # A5/A6 precedence loop in ascending process_order. Layers are
+    # A5/A6 precedence in ascending process_order. Layers are
     # pre-dissolved per (cell, designation) first — the reference's
     # aggregated_insert_difference semantics (sql/
     # aggregated_insert_difference.sql:25-29): without this, two
     # same-layer features with different src_id could overlap each
     # other in the output.
-    agg_src = dissolve(overlapping,
-                       ["cell", "designation", "process_order"])
-    if fused:
-        # one-shuffle per-cell fold (insert_difference_fused); output
-        # proven identical to the loop form (tests + shared oracle)
-        from ..operators.overlay import insert_difference_fused
-        designatedlands = insert_difference_fused(agg_src)
+    def precedence(skip=()):
+        return insert_difference_fused(dissolve(
+            prune(overlapping, skip),
+            ["cell", "designation", "process_order"]))
+
+    if ckpt_root is None:
+        designatedlands = precedence()
     else:
-        orders = sorted(r[0] for r in
-                        agg_src.select("process_order").distinct()
-                        .collect())
-        acc: DataFrame | None = None
-        if ckpt_root is None:
-            # local/interactive: flatten lineage per layer. On a real
-            # cluster pass ckpt_root — localCheckpoint pins lineage to
-            # executor storage and dies with an executor.
-            for po in orders:
-                src = agg_src.filter(F.col("process_order") == po)
-                new = insert_difference(acc, src)
-                acc = new if acc is None else acc.unionByName(new)
-                acc = acc.localCheckpoint(eager=False)
-        else:
-            # Cluster-safe + resumable: each layer's accumulated output
-            # is committed to reliable storage through the Manifest
-            # (idempotent dynamic-partition-overwrite commits). A run
-            # killed mid-loop resumes at the first layer without
-            # manifest rows; completed layers reload from parquet.
-            from .checkpoint import Manifest, run_stage
-            man = Manifest(f"{ckpt_root}/manifest")
-            # every input that shapes layer contents must fingerprint,
-            # or a resume against different data reloads stale stages
-            fingerprint = (f"{sf_dir}|depth={depth}"
-                           f"|orders={n_orders}|v2")
-            for po in orders:
-                stage = f"precedence_{int(po):03d}"
-                stage_rows = man.rows(stage)
-                if not man.stale(stage, fingerprint) and stage_rows:
-                    if sum(r.get("rows", 0) for r in stage_rows) == 0:
-                        # layer completed with zero output (fully
-                        # eclipsed by earlier layers — plausible at
-                        # 42-layer registry scale): nothing to reload,
-                        # nothing to union (ADVICE r2)
-                        new_df = None
-                    else:
-                        new_df = spark.read.parquet(
-                            f"{ckpt_root}/{stage}").withColumn(
-                            "cell", F.col("cell").cast("string"))
-                else:
-                    src = agg_src.filter(F.col("process_order") == po)
-                    new = insert_difference(acc, src)
-                    new_df = run_stage(spark, man, stage, fingerprint,
-                                       lambda skip, df=new: df,
-                                       ckpt_root)
-                # each stage commits ONLY its own layer's rows (O(L)
-                # total I/O, not O(L^2) cumulative rewrites); the
-                # accumulator is a union of flat parquet scans
-                if new_df is not None:
-                    acc = new_df if acc is None else \
-                        acc.unionByName(new_df)
-        designatedlands = acc
+        # Cluster-safe and resumable: the fold commits to reliable
+        # storage through the manifest; a resume folds only the cells
+        # the manifest does not hold. Every input that shapes the
+        # output must fingerprint, or a resume against different data
+        # reloads a stale stage.
+        designatedlands = run_stage(
+            spark, Manifest(f"{ckpt_root}/manifest"), "precedence",
+            f"{sf_dir}|depth={depth}|orders={n_orders}|v3",
+            precedence, ckpt_root)
 
     # A7 planarize.
     planarized = planarize(overlapping, boundary_t)

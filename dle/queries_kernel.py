@@ -17,7 +17,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from . import datagen, sqlgen
-from .operators.overlay import dissolve, insert_difference, with_area
+from .operators.overlay import (
+    dissolve, insert_difference_fused, with_area,
+)
 from .sqlgen import preamble
 
 BAND_H = 40000.0
@@ -56,11 +58,10 @@ def o_dissolve_area_1d():
 
 
 def q_precedence_area_1d(spark, sf, n_orders: int = 8):
-    """A5/A6 precedence through the FUSED per-cell insert_difference
-    (band = cell): one shuffle instead of N sequential layer jobs —
-    same oracle as the driver-loop form, proving equivalence. (The
-    loop form itself is exercised by the pipeline tests.)"""
-    from .operators.overlay import insert_difference_fused
+    """A5/A6 precedence through the per-cell fold
+    insert_difference_fused (band = cell): one shuffle for all layers.
+    Oracle = per-order 1-D islands, the layer-by-layer semantics of the
+    reference loop."""
     b = datagen.bands_1d(spark, sf, n_orders=n_orders).withColumn(
         "cell", F.col("band").cast("string"))
     agg = dissolve(b.select("cell", "designation", "process_order", "geom"),
@@ -124,7 +125,6 @@ def q_precedence_multi(spark, sf, n_orders: int = 8):
     the A5 gates), surviving group count, agg_id uniqueness
     (n_agg_ids == n_groups), and the agg_id VALUES themselves
     cross-engine (min md5 per designation)."""
-    from .operators.overlay import insert_difference_fused
     b = datagen.bands_1d(spark, sf, n_orders=n_orders).withColumn(
         "cell", F.col("band").cast("string"))
     src = b.select("cell", "designation", "process_order", "geom")
@@ -600,25 +600,22 @@ def o_buffer_area():
 def q_pipeline_resume_rollup(spark, sf, n_orders: int = 8):
     """J checkpoint/resume gate (VERDICT r3 #6 — the reference's
     headline resumability, /root/reference/designatedlands.py:503,
-    :549-561): the RESUMABLE precedence loop (Manifest + run_stage,
-    idempotent dynamic-partition-overwrite commits) is run TWICE
-    against the same checkpoint root; the second pass must reload
-    every stage from the manifest without recomputing (all-skips),
-    and the rollup is computed from the RESUMED output. Oracle = the
-    same 1-D precedence islands as overlay_precedence_area_1d, plus a
-    constant `resumed_ok` column that is 1 only if pass 2 skipped all
-    n_orders stages."""
+    :549-561): the precedence fold as one checkpointed stage
+    (Manifest + run_stage, idempotent dynamic-partition-overwrite
+    commits) is run TWICE against the same checkpoint root; the second
+    pass must find every cell done, so it folds nothing and appends no
+    manifest row, and the rollup is computed from the RESUMED output.
+    Oracle = the same 1-D precedence islands as
+    overlay_precedence_area_1d, plus a constant `resumed_ok` column
+    that is 1 only if pass 2 appended no manifest row."""
     import hashlib
     import tempfile
     from pathlib import Path
 
-    from .operators.overlay import insert_difference
-    from .plans.checkpoint import Manifest, run_stage
+    from .plans.checkpoint import Manifest, prune, run_stage
 
     b = datagen.bands_1d(spark, sf, n_orders=n_orders).withColumn(
         "cell", F.col("band").cast("string"))
-    agg = dissolve(b.select("cell", "designation", "process_order", "geom"),
-                   ["cell", "designation", "process_order"]).persist()
     # CONTENT fingerprint (ADVICE r4): fold the sf parquet files'
     # (name, size, mtime) into both the checkpoint root and the stage
     # fingerprint, so a regenerated fixture under the same path — or a
@@ -630,39 +627,27 @@ def q_pipeline_resume_rollup(spark, sf, n_orders: int = 8):
         h.update(f"{p.name}:{st.st_size}:{st.st_mtime_ns}".encode())
     tag = h.hexdigest()[:12]
     root = Path(tempfile.gettempdir()) / f"dle_resume_{tag}"
-    fingerprint = f"{sf}|{tag}|orders={n_orders}|v1"
+    fingerprint = f"{sf}|{tag}|orders={n_orders}|v2"
+    man = Manifest(str(root / "manifest"))
 
-    def run_loop():
-        man = Manifest(str(root / "manifest"))
-        acc, skipped = None, 0
-        for po in range(1, n_orders + 1):
-            stage = f"prec_{po:03d}"
-            stage_rows = man.rows(stage)
-            if not man.stale(stage, fingerprint) and stage_rows:
-                skipped += 1
-                if sum(r.get("rows", 0) for r in stage_rows) == 0:
-                    new_df = None
-                else:
-                    new_df = spark.read.parquet(
-                        str(root / stage)).withColumn(
-                        "cell", F.col("cell").cast("string"))
-            else:
-                src = agg.filter(F.col("process_order") == po)
-                new = insert_difference(acc, src)
-                new_df = run_stage(spark, man, stage, fingerprint,
-                                   lambda skip, df=new: df, str(root))
-            if new_df is not None:
-                acc = new_df if acc is None else acc.unionByName(new_df)
-        return acc, skipped
+    def precedence(skip):
+        src = prune(b, skip).select(
+            "cell", "designation", "process_order", "geom")
+        return insert_difference_fused(
+            dissolve(src, ["cell", "designation", "process_order"]))
 
-    run_loop()                      # pass 1: compute (or resume) + commit
-    acc, skipped = run_loop()       # pass 2: must be pure manifest skips
-    agg.unpersist(False)            # acc reads parquet only — safe now
+    def run():
+        return run_stage(spark, man, "precedence", fingerprint,
+                         precedence, str(root))
+
+    run()                           # pass 1: compute (or resume) + commit
+    n_rows = len(man.rows("precedence"))
+    acc = run()                     # pass 2: every cell already done
+    resumed_ok = len(man.rows("precedence")) == n_rows
     out = with_area(acc).groupBy("designation").agg(
         F.round(F.sum("area_m2"), 0).cast("bigint").alias("area_m2"))
     return out.withColumn(
-        "resumed_ok",
-        F.lit(1 if skipped == n_orders else 0).cast("int"))
+        "resumed_ok", F.lit(1 if resumed_ok else 0).cast("int"))
 
 
 def o_pipeline_resume_rollup():

@@ -33,22 +33,25 @@ def main():
 
     spark = SparkSession.builder.appName("dle-process-vector") \
         .getOrCreate()
+    from dle.operators.overlay import planarize
     from dle.plans.pipeline import process_vector, qa_rollups
-    from dle.plans.checkpoint import Manifest, run_stage
+    from dle.plans.checkpoint import Manifest, prune, run_stage
     from dle.sources.io import dump
 
     from dle import telemetry
     telemetry.enable(spark)  # lossy-fallback counter in qa output
 
     man = Manifest(f"{out_dir}/manifest")
-    # ckpt_root => the precedence loop commits each layer to reliable
-    # storage (resume-safe on executor loss; no localCheckpoint).
+    # ckpt_root => the precedence fold commits to reliable storage
+    # (resume-safe on executor loss).
     out = process_vector(spark, sf_dir, depth=depth,
                          ckpt_root=f"{out_dir}/stages")
     fingerprint = f"{sf_dir}|depth={depth}"
     planar = run_stage(
         spark, man, "planarized", fingerprint,
-        lambda skip: out.planarized, out_dir)
+        lambda skip: planarize(prune(out.overlapping, skip),
+                               prune(out.boundary_tiled, skip)),
+        out_dir)
     dump(out.designatedlands, f"{out_dir}/designatedlands")
     qa = qa_rollups(out)
     qa_flat = {

@@ -1,7 +1,7 @@
 """Checkpoint manifest: idempotent commits, zero-row cell recording,
-and mid-loop kill/resume for the Manifest-backed precedence loop
-(north rule: "resumable from checkpoint with per-partition lineage +
-metrics"; VERDICT r1 next-steps #9 + ADVICE medium finding)."""
+and kill/resume for the checkpointed precedence stage (north rule:
+"resumable from checkpoint with per-partition lineage + metrics";
+VERDICT r1 next-steps #9 + ADVICE medium finding)."""
 
 from __future__ import annotations
 
@@ -86,78 +86,126 @@ def test_run_stage_zero_row_stage_no_crash(spark, tmp_path):
     assert len(man.rows("s")) == len(rows)
 
 
-def test_precedence_loop_skips_zero_output_layer(spark, tmp_path,
-                                                 monkeypatch):
-    """A layer fully eclipsed by earlier layers (plausible at 42-layer
-    registry scale) must not abort the ckpt loop, and a resume must
-    skip it without recomputation (ADVICE r2 medium + low)."""
+def _rollup(df):
+    from dle.operators.overlay import with_area
+    return {
+        (r["cell"], r["designation"]): round(r["a"], 3)
+        for r in with_area(df).groupBy("cell", "designation")
+        .agg(F.sum("area_m2").alias("a")).collect()}
+
+
+def _raise_on(cells=None):
+    """mapInPandas body raising on any row of `cells` (every row when
+    None): an executor-side failure bound to a cell."""
+    def check(batches):
+        for pdf in batches:
+            hit = pdf["cell"] if cells is None \
+                else pdf["cell"][pdf["cell"].isin(cells)]
+            if len(hit):
+                raise RuntimeError(f"raised on cell {hit.iloc[0]}")
+            yield pdf
+    return check
+
+
+def _guard_fold(monkeypatch, cells=None):
+    """Make any row of `cells` reaching the fold's input raise."""
+    real = pipeline.insert_difference_fused
+    monkeypatch.setattr(
+        pipeline, "insert_difference_fused",
+        lambda src, **kw: real(
+            src.mapInPandas(_raise_on(cells), src.schema), **kw))
+
+
+def test_precedence_stage_resumes_after_kill(spark, tmp_path,
+                                             monkeypatch):
+    """An executor dies mid-fold on one cell; the stage commits nothing,
+    and a rerun against the same root matches the uncheckpointed run."""
     ckpt = str(tmp_path / "ck")
-    real = pipeline.insert_difference
-    calls = {"n": 0}
+    baseline = _rollup(pipeline.process_vector(spark, SF,
+                                               depth=2).designatedlands)
+    cells = sorted({c for c, _ in baseline})
+    victim = cells[len(cells) // 2]
+    real = pipeline.insert_difference_fused
 
-    def eclipse(existing, src, **kw):
-        calls["n"] += 1
-        po = src.select("process_order").first()["process_order"]
-        out = real(existing, src, **kw)
-        return out.where(F.lit(False)) if int(po) == 3 else out
+    def dying(src, **kw):
+        out = real(src, **kw)
+        return out.mapInPandas(_raise_on([victim]), out.schema)
 
-    monkeypatch.setattr(pipeline, "insert_difference", eclipse)
-    first = pipeline.process_vector(spark, SF, depth=2, ckpt_root=ckpt)
-    desigs1 = {r["designation"] for r in
-               first.designatedlands.select("designation")
-               .distinct().collect()}
-    assert "desig_03" not in desigs1
-    man = Manifest(f"{ckpt}/manifest")
-    assert man.rows("precedence_003")
-    assert sum(r["rows"] for r in man.rows("precedence_003")) == 0
-
-    # resume: every layer (incl. the empty one) loads from manifest —
-    # insert_difference is never called again
-    n_before = calls["n"]
-    resumed = pipeline.process_vector(spark, SF, depth=2,
-                                      ckpt_root=ckpt)
-    desigs2 = {r["designation"] for r in
-               resumed.designatedlands.select("designation")
-               .distinct().collect()}
-    assert calls["n"] == n_before
-    assert desigs2 == desigs1
-
-
-def test_precedence_loop_resumes_after_kill(spark, tmp_path,
-                                            monkeypatch):
-    """Kill the Manifest-backed precedence loop mid-way; a rerun
-    completes from the checkpoint and matches the uncheckpointed run."""
-    ckpt = str(tmp_path / "ck")
-    calls = {"n": 0}
-    real = pipeline.insert_difference
-
-    def dying(existing, src, **kw):
-        calls["n"] += 1
-        if calls["n"] > 3:
-            raise RuntimeError("simulated executor loss")
-        return real(existing, src, **kw)
-
-    monkeypatch.setattr(pipeline, "insert_difference", dying)
-    with pytest.raises(RuntimeError):
+    monkeypatch.setattr(pipeline, "insert_difference_fused", dying)
+    with pytest.raises(Exception, match=f"raised on cell {victim}"):
         pipeline.process_vector(spark, SF, depth=2, ckpt_root=ckpt)
-    monkeypatch.setattr(pipeline, "insert_difference", real)
+    monkeypatch.undo()
+    assert not Manifest(f"{ckpt}/manifest").rows("precedence")
 
     resumed = pipeline.process_vector(spark, SF, depth=2,
                                       ckpt_root=ckpt)
-    baseline = pipeline.process_vector(spark, SF, depth=2)
+    assert _rollup(resumed.designatedlands) == baseline
 
-    def rollup(df):
-        from dle.operators.overlay import with_area
-        return {
-            (r["cell"], r["designation"]): round(r["a"], 3)
-            for r in with_area(df).groupBy("cell", "designation")
-            .agg(F.sum("area_m2").alias("a")).collect()}
 
-    assert rollup(resumed.designatedlands) == \
-        rollup(baseline.designatedlands)
-    # at least the first layers came from the checkpoint
+def test_precedence_stage_resume_folds_only_unfinished_cells(
+        spark, tmp_path, monkeypatch):
+    """A manifest that lost half its cells (a kill between the parquet
+    commit and the manifest append) resumes by folding only the lost
+    cells; done cells never reach the fold."""
+    ckpt = str(tmp_path / "ck")
+    full = _rollup(pipeline.process_vector(
+        spark, SF, depth=2, ckpt_root=ckpt).designatedlands)
     man = Manifest(f"{ckpt}/manifest")
-    assert man.rows("precedence_001")
+    rows = man.rows("precedence")
+    kept = rows[: len(rows) // 2]
+    assert kept and len(kept) < len(rows)
+    man.clear("precedence")
+    man.append("precedence", kept)
+
+    _guard_fold(monkeypatch, [r["cell"] for r in kept])
+    resumed = pipeline.process_vector(spark, SF, depth=2,
+                                      ckpt_root=ckpt)
+    assert _rollup(resumed.designatedlands) == full
+    assert sorted(r["cell"] for r in man.rows("precedence")) == \
+        sorted(r["cell"] for r in rows)
+
+
+def test_precedence_stage_drops_eclipsed_designation(spark, tmp_path,
+                                                     monkeypatch):
+    """A designation lying wholly inside an earlier layer gets no
+    output, and a resume against the complete root runs the fold on no
+    cell and commits nothing."""
+    from pyspark.sql import Window
+
+    ckpt = str(tmp_path / "ck")
+    real = pipeline.insert_difference_fused
+
+    def with_eclipsed(src, **kw):
+        # each cell's first piece again, as the last layer: the earlier
+        # copy covers it exactly
+        w = Window.partitionBy("cell").orderBy("process_order",
+                                               "designation")
+        first = src.withColumn("_r", F.row_number().over(w)) \
+            .where("_r = 1").drop("_r")
+        shadow = first.withColumn("designation", F.lit("eclipsed")) \
+            .withColumn("process_order", F.lit(99).cast(
+                src.schema["process_order"].dataType))
+        return real(src.unionByName(shadow), **kw)
+
+    monkeypatch.setattr(pipeline, "insert_difference_fused",
+                        with_eclipsed)
+    first = pipeline.process_vector(spark, SF, depth=2, ckpt_root=ckpt)
+    desigs = {r["designation"] for r in
+              first.designatedlands.select("designation")
+              .distinct().collect()}
+    assert desigs and "eclipsed" not in desigs
+    man = Manifest(f"{ckpt}/manifest")
+    n_rows = len(man.rows("precedence"))
+    assert n_rows
+
+    monkeypatch.undo()
+    _guard_fold(monkeypatch)
+    resumed = pipeline.process_vector(spark, SF, depth=2,
+                                      ckpt_root=ckpt)
+    assert {r["designation"] for r in
+            resumed.designatedlands.select("designation")
+            .distinct().collect()} == desigs
+    assert len(man.rows("precedence")) == n_rows
 
 
 def test_dissolve_explode_parts_empty_group(spark):

@@ -90,18 +90,33 @@ def test_planarize_first_designation_wins_matches_precedence(outputs):
         assert by_first[d] == pytest.approx(prec[d], rel=1e-6), d
 
 
+def _reference_loop(src, **kw):
+    """The reference's layer loop (designatedlands.py:693-707): one
+    insert_difference per ascending process_order, each differencing
+    against the rows accumulated so far."""
+    from dle.operators.overlay import insert_difference
+    orders = sorted(r[0] for r in
+                    src.select("process_order").distinct().collect())
+    acc = None
+    for po in orders:
+        new = insert_difference(
+            acc, src.where(F.col("process_order") == po), **kw)
+        acc = (new if acc is None else acc.unionByName(new)) \
+            .localCheckpoint(eager=False)
+    return acc
+
+
 def test_fused_precedence_equals_loop(spark, outputs):
-    """insert_difference_fused (one shuffle) must reproduce the
-    layer-loop's rows and geometry exactly on real 2-D WKB layers."""
-    from dle.operators.overlay import dissolve as _dis
-    from dle.operators.overlay import insert_difference_fused
-    agg = _dis(outputs.overlapping,
-               ["cell", "designation", "process_order"])
-    fused = insert_difference_fused(agg)
+    """The pipeline's per-cell fold must reproduce the reference layer
+    loop's rows and geometry on real 2-D WKB layers."""
+    # materialized once: the loop reads it once per layer
+    agg = dissolve(outputs.overlapping,
+                   ["cell", "designation", "process_order"]) \
+        .localCheckpoint()
     a = {(r["cell"], r["designation"]): r["area_m2"]
-         for r in with_area(fused).collect()}
-    b = {(r["cell"], r["designation"]): r["area_m2"]
          for r in with_area(outputs.designatedlands).collect()}
+    b = {(r["cell"], r["designation"]): r["area_m2"]
+         for r in with_area(_reference_loop(agg)).collect()}
     assert set(a) == set(b)
     # equal regions up to snap tolerance: the loop form re-snaps its
     # accumulated output each iteration, the fused form diffs against
@@ -223,8 +238,7 @@ def test_keep_multi_fused_equals_loop(spark):
     through the fused one-shuffle fold must equal the driver-loop form
     (insert_difference per ascending order, keep_multi on the first
     aggregation) — identical per-designation areas and group counts."""
-    from dle.operators.overlay import (insert_difference,
-                                       insert_difference_fused)
+    from dle.operators.overlay import insert_difference_fused
     b = datagen.bands_1d(spark, SF).withColumn(
         "cell", F.col("band").cast("string"))
     src = b.select("cell", "designation", "process_order", "geom")
@@ -235,15 +249,7 @@ def test_keep_multi_fused_equals_loop(spark):
               .agg(F.sum("area_m2").alias("a"),
                    F.count(F.lit(1)).alias("n")).collect()}
 
-    orders = sorted(r["process_order"] for r in
-                    src.select("process_order").distinct().collect())
-    acc = None
-    for po in orders:
-        new = insert_difference(
-            acc, src.where(F.col("process_order") == po),
-            keep_multi=True)
-        acc = new if acc is None else acc.unionByName(new)
-    loop = with_area(acc)
+    loop = with_area(_reference_loop(src, keep_multi=True))
     l_rows = {(r["designation"],): (round(r["a"]), r["n"]) for r in
               loop.groupBy("designation")
               .agg(F.sum("area_m2").alias("a"),
