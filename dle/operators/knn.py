@@ -1,314 +1,252 @@
 """Spatial kNN join (north_star: "pandas UDFs for point-in-polygon,
 polygon intersection, and kNN").
 
-`knn_join_rects`: for every point, the k nearest rectangle features by
-euclidean distance to the feature's boundary/interior (distance 0 when
-inside). Physical recipe mirrors the PIP join: the feature side is the
-small dimension table -> broadcast; distance evaluation stays JVM-side
-(codegen); top-k per point is one map-side-combinable min_by chain via
-window row_number over (distance, feat_id) with a deterministic
-tiebreak.
+For every point, the k nearest rectangle features by euclidean distance
+to the feature's boundary/interior (distance 0 when inside), ranked by
+(d2, feat_id). Distances are exact BIGINT squared meters for integral
+coordinates: float64 ``max(x0 - px, px - x1, 0)`` per axis, summed
+squares, truncating int64 cast — the same arithmetic as the DuckDB
+oracle, so ranking is reproducible bit-for-bit across engines and
+partitionings.
 
-Distances are exact BIGINT squared-meters (integral coordinates), so
-ranking is reproducible bit-for-bit across engines and partitionings.
+Physical recipe, shared by both entry points: the feature table is a
+dimension table. It is collected once to the driver (bounded by
+``spatial_join.MAX_BROADCAST_FEATURES``; above it the call raises),
+shipped as a numpy broadcast, and each point's top-k is computed inside
+one ``mapInPandas`` over the points — no point-side exchange, nothing
+point x feature sized ever materialized as rows.
 
-Scale path (10^12 points x 10^5 features): the broadcast variant is
-O(points x features) per partition — fine for dimension-sized feature
-sets (the reference has 42 layers). For large feature sets use
-`knn_join_cells`: candidates restricted to features whose cell-ring
-distance can beat the current k-th best — implemented as a cover-cells
-join at a chosen depth plus ring expansion, falling back to brute force
-for the (rare) points whose ring search exhausts. Round 1 ships the
-broadcast variant + the cell-pruned candidate generator.
+  * `knn_join_rects` ranks every point against every feature.
+  * `knn_join_pruned` first ranks a point against only the features
+    whose bbox, dilated by ``ring`` cells, covers the point's cell
+    (a CSR cell -> feature index built on the driver), and keeps that
+    answer when it is provably complete; the rest of the batch falls
+    back to the full ranking. Results are identical to the brute form.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
+import numpy as np
+from pyspark.sql import DataFrame
 
-from .spatial_join import explode_rect_cells
+from . import spatial_join
+from ..cells import cell_xy_np
+from ..config import res_at
 
-
-# Top-k frames persisted by knn_join_pruned, keyed PER SparkSession
-# (ADVICE r3, low: a flat global let one session's call unpersist a
-# frame a different session's still-unconsumed result depended on).
-# Contract (VERDICT r4 #8 — the old SINGLE-OUTSTANDING-RESULT rule is
-# retired): each session keeps up to _KEEP_PER_SESSION most-recent
-# frames persisted, so interleaved calls that deep never silently
-# recompute a prior unconsumed result's candidate join; older frames
-# are unpersisted (always CORRECT — persist is an optimization, a
-# released frame recomputes lazily). Entries for STOPPED sessions are
-# pruned on every call (ADVICE r4, low: the cached DataFrame pins the
-# session object, so without pruning a multi-session process leaked
-# one entry per dead session). Release explicitly via release_cache()
-# when done.
-_KEEP_PER_SESSION = 4
-_PERSISTED: dict[int, list] = {}  # id(session) -> [(session, df), ...]
-
-
-def _prune_stopped() -> None:
-    """Drop cache entries whose SparkSession has been stopped — their
-    persisted frames died with the context, keeping the entry only
-    pins the dead session object."""
-    for k in list(_PERSISTED):
-        entries = _PERSISTED[k]
-        alive = False
-        try:
-            sess = entries[0][0] if entries else None
-            alive = (sess is not None
-                     and sess.sparkContext._jsc is not None)
-        except Exception:
-            alive = False
-        if not alive:
-            _PERSISTED.pop(k, None)
+_NP_INT = {"int": np.int32, "bigint": np.int64,
+           "smallint": np.int16, "tinyint": np.int8}
 
 
 def release_cache(session=None) -> None:
-    """Unpersist every top-k frame cached by previous knn_join_pruned
-    calls in `session` (every session when None). Safe to call any
-    time: a released frame recomputes lazily if still consumed
-    afterwards."""
-    keys = list(_PERSISTED) if session is None else [id(session)]
-    for k in keys:
-        for _, df in _PERSISTED.pop(k, []):
-            try:
-                df.unpersist(False)
-            except Exception:
-                pass  # session already stopped — nothing to release
+    """No-op: the kNN operators persist nothing. Kept so callers that
+    release engine caches between runs need no special case."""
 
 
-def _d2(px: str, py: str) -> F.Column:
-    dx = F.greatest(F.col("x0") - F.col(px), F.col(px) - F.col("x1"),
-                    F.lit(0.0))
-    dy = F.greatest(F.col("y0") - F.col(py), F.col(py) - F.col("y1"),
-                    F.lit(0.0))
-    return (dx * dx + dy * dy).cast("bigint")
+def _collect_features(rects: DataFrame, op: str):
+    """The feature table as numpy arrays (fid, x0, y0, x1, y1) ordered by
+    feat_id — array position is the feat_id tiebreak rank. One bounded
+    driver collect: raises ValueError above MAX_BROADCAST_FEATURES."""
+    cap = spatial_join.MAX_BROADCAST_FEATURES
+    rows = (rects.select("feat_id", "x0", "y0", "x1", "y1")
+            .orderBy("feat_id").limit(cap + 1).collect())
+    if len(rows) > cap:
+        raise ValueError(
+            f"{op}: feature table exceeds the {cap}-row broadcast cap "
+            "(MAX_BROADCAST_FEATURES)")
+    cols = list(zip(*rows)) or [()] * 5
+    return (np.array(cols[0], dtype=np.int64),
+            *(np.array(c, dtype=np.float64) for c in cols[1:]))
 
 
-def knn_join_rects(points: DataFrame, rects: DataFrame, k: int = 3,
-                   px: str = "px", py: str = "py",
-                   point_keys: list[str] | None = None) -> DataFrame:
-    """Broadcast brute-force kNN: every point against the (small)
-    feature table; returns point keys + feat_id + d2 + rank 1..k.
+def _cell_index(fx0, fy0, fx1, fy1, depth: int, ring: int):
+    """The pruning index (cells, indptr, ranks, depth, R²), R = ring *
+    res_at(depth): a CSR map from each occupied cell id
+    ``cx * 2^depth + cy`` (ascending) to the ascending feature ranks
+    whose bbox dilated by R covers it. Cell ranges use the floor/clamp
+    of `explode_rect_cells`, so a feature NOT listed for a point's cell
+    is farther than R from the point."""
+    R = ring * res_at(depth)
+    side = 1 << depth
+    ax, ay = cell_xy_np(fx0 - R, fy0 - R, depth)
+    bx, by = cell_xy_np(fx1 + R, fy1 + R, depth)
+    # an inverted bbox still covers its range, as sequence() does there
+    cx0, cx1 = np.minimum(ax, bx), np.maximum(ax, bx)
+    cy0, cy1 = np.minimum(ay, by), np.maximum(ay, by)
+    hy = cy1 - cy0 + 1
+    cnt = (cx1 - cx0 + 1) * hy
+    off = (np.arange(cnt.sum(), dtype=np.int64)
+           - np.repeat(np.cumsum(cnt) - cnt, cnt))
+    hy = np.repeat(hy, cnt)
+    cell = ((np.repeat(cx0, cnt) + off // hy) * side
+            + np.repeat(cy0, cnt) + off % hy)
+    order = np.argsort(cell, kind="stable")
+    cells, counts = np.unique(cell[order], return_counts=True)
+    indptr = np.concatenate([[0], np.cumsum(counts)])
+    ranks = np.repeat(np.arange(len(fx0), dtype=np.int64), cnt)[order]
+    return cells, indptr, ranks, depth, R * R
 
-    OPTIMIZATION r7 (guide §4.2/§8): the original crossJoin + window
-    form materialized points x features ROWS in the JVM (495k x 5k =
-    2.5G rows at sf0.1) and locally sorted them below the partial
-    rank limit — ~100 GB of sort spill, 90+ s. The decision needs only
-    the 40-byte feature tuple, so the feature table (dimension-sized
-    by this operator's contract) ships as a plain numpy broadcast and
-    each Arrow batch computes exact top-k per point vectorized —
-    the score matrix lives only chunk-at-a-time in numpy and nothing
-    point x feature sized is ever materialized as rows. Distances,
-    tiebreaks and ranks are bit-identical to the window form:
-    the same float64 ops as _d2 then truncating bigint cast, ranking
-    by the strictly-unique combined key d2 * n_features + feat_rank
-    == (d2 asc, feat_id asc)."""
-    import numpy as np
-    import pandas as pd
 
+def _topk(pxs, pys, fx0, fy0, fx1, fy1, k: int):
+    """Exact top-k per point against the given features: (sel, d2), int64
+    arrays of shape (points, min(k, features)); sel indexes the feature
+    arrays, rows ordered by (d2, index). The score matrix lives only
+    chunk-at-a-time in preallocated numpy buffers, and ranking uses the
+    strictly-unique combined key d2 * nf + index."""
+    n, nf = len(pxs), len(fx0)
+    kk = min(k, nf)
+    sel_out = np.empty((n, kk), dtype=np.int64)
+    d2_out = np.empty((n, kk), dtype=np.int64)
+    if n == 0 or kk <= 0:
+        return sel_out, d2_out
+    colidx = np.arange(nf, dtype=np.int64)
+    # the combined key fits int64 for any d2 the coordinate domain can
+    # produce; guarded anyway
+    key_cap = (np.iinfo(np.int64).max // nf) - nf
+    chunk = max(1, 4_000_000 // nf)
+    dx = np.empty((min(chunk, n), nf))
+    dy = np.empty_like(dx)
+    tmp = np.empty_like(dx)
+    for s in range(0, n, chunk):
+        e = min(s + chunk, n)
+        b = e - s
+        dxv, dyv, tmpv = dx[:b], dy[:b], tmp[:b]
+        pc = pxs[s:e, None]
+        np.subtract(fx0[None, :], pc, out=dxv)
+        np.subtract(pc, fx1[None, :], out=tmpv)
+        np.maximum(dxv, tmpv, out=dxv)
+        np.maximum(dxv, 0.0, out=dxv)
+        pc = pys[s:e, None]
+        np.subtract(fy0[None, :], pc, out=dyv)
+        np.subtract(pc, fy1[None, :], out=tmpv)
+        np.maximum(dyv, tmpv, out=dyv)
+        np.maximum(dyv, 0.0, out=dyv)
+        np.multiply(dxv, dxv, out=dxv)
+        np.multiply(dyv, dyv, out=dyv)
+        np.add(dxv, dyv, out=dxv)          # dxv = d2 (float64)
+        d2 = dxv.astype(np.int64)
+        if d2.max(initial=0) > key_cap:    # never at map scale
+            sel = np.stack([np.lexsort((colidx, row))[:kk] for row in d2])
+            d2s = np.take_along_axis(d2, sel, axis=1)
+        else:
+            d2 *= nf                       # in-place combined
+            d2 += colidx[None, :]          # key (d2, index)
+            if kk < nf:
+                part = np.argpartition(d2, kk - 1, axis=1)[:, :kk]
+                sel = np.take_along_axis(part, np.argsort(
+                    np.take_along_axis(d2, part, axis=1), axis=1), axis=1)
+            else:
+                sel = np.argsort(d2, axis=1)
+            # recover exact d2 from the key: (key - index) / nf
+            d2s = np.take_along_axis(d2, sel, axis=1)
+            d2s -= sel
+            d2s //= nf
+        sel_out[s:e] = sel
+        d2_out[s:e] = d2s
+    return sel_out, d2_out
+
+
+def _knn_batch(pxs, pys, feats, k: int, index=None):
+    """Top-k of one batch of points: (sel, d2) as in `_topk`, sel being
+    feature ranks. With an `index` from `_cell_index`, points are
+    grouped by cell and ranked against their cell's candidates first; a
+    point keeps that answer when it has >= k candidates and its k-th
+    d2 <= R² (every unlisted feature is farther than R). All other
+    points, and every point when `index` is None, are ranked against
+    the whole feature table."""
+    _, fx0, fy0, fx1, fy1 = feats
+    if index is None:
+        return _topk(pxs, pys, fx0, fy0, fx1, fy1, k)
+    cells, indptr, ranks, depth, bound = index
+    n = len(pxs)
+    sel = np.empty((n, min(k, len(fx0))), dtype=np.int64)
+    d2 = np.empty_like(sel)
+    todo = np.ones(n, dtype=bool)
+    if 0 < k <= len(fx0) and n and len(cells):
+        cx, cy = cell_xy_np(pxs, pys, depth)
+        cell = cx * (1 << depth) + cy
+        order = np.argsort(cell, kind="stable")
+        cs = cell[order]
+        starts = np.flatnonzero(np.r_[True, cs[1:] != cs[:-1]])
+        ends = np.r_[starts[1:], n]
+        pos = np.minimum(np.searchsorted(cells, cs[starts]),
+                         len(cells) - 1)
+        for a, b, p in zip(starts, ends, pos):
+            if cells[p] != cs[a]:
+                continue
+            cand = ranks[indptr[p]:indptr[p + 1]]
+            if len(cand) < k:
+                continue
+            rows = order[a:b]
+            s, d = _topk(pxs[rows], pys[rows], fx0[cand], fy0[cand],
+                         fx1[cand], fy1[cand], k)
+            ok = d[:, -1] <= bound
+            rows = rows[ok]
+            sel[rows] = cand[s[ok]]
+            d2[rows] = d[ok]
+            todo[rows] = False
+    rest = np.flatnonzero(todo)
+    if len(rest):
+        sel[rest], d2[rest] = _topk(pxs[rest], pys[rest],
+                                    fx0, fy0, fx1, fy1, k)
+    return sel, d2
+
+
+def _map_knn(points: DataFrame, rects: DataFrame, feats, index, k: int,
+             px: str, py: str, point_keys: list[str] | None) -> DataFrame:
+    """One mapInPandas over the points: point keys + feat_id + d2 +
+    rank 1..min(k, features) per point."""
     point_keys = point_keys or ["page_id", "cand_i"]
-    feats = (rects.select("feat_id", "x0", "y0", "x1", "y1")
-             .orderBy("feat_id").collect())  # dimension-sized
-    fid = np.array([r["feat_id"] for r in feats], dtype=np.int64)
-    fx0 = np.array([r["x0"] for r in feats], dtype=np.float64)
-    fy0 = np.array([r["y0"] for r in feats], dtype=np.float64)
-    fx1 = np.array([r["x1"] for r in feats], dtype=np.float64)
-    fy1 = np.array([r["y1"] for r in feats], dtype=np.float64)
-    nf = len(fid)
-    bc = points.sparkSession.sparkContext.broadcast(
-        (fid, fx0, fy0, fx1, fy1))
-
+    bc = points.sparkSession.sparkContext.broadcast((feats, index))
     pk_types = {f.name: f.dataType.simpleString()
                 for f in points.schema.fields}
     feat_t = rects.schema["feat_id"].dataType.simpleString()
     out_schema = ", ".join(
         [f"`{c}` {pk_types[c]}" for c in point_keys]
         + [f"`feat_id` {feat_t}", "`d2` bigint", "`rank` int"])
-    _np_int = {"int": np.int32, "bigint": np.int64,
-               "smallint": np.int16, "tinyint": np.int8}
 
     def topk(it):
-        fid, fx0, fy0, fx1, fy1 = bc.value
-        kk = min(k, nf)
-        colidx = np.arange(nf, dtype=np.int64)
-        # combined (d2, feat_rank) key fits int64 for any d2 the
-        # coordinate domain can produce; guarded anyway
-        key_cap = (np.iinfo(np.int64).max // max(nf, 1)) - nf
-        chunk = max(1, 4_000_000 // max(nf, 1))
+        feats, index = bc.value
+        kk = min(k, len(feats[0]))
         for pdf in it:
             n = len(pdf)
-            if n == 0 or nf == 0:
+            if n == 0 or kk <= 0:
                 continue
-            pxs = pdf[px].to_numpy(dtype=np.float64)
-            pys = pdf[py].to_numpy(dtype=np.float64)
-            reps, fsel, d2sel, ranks = [], [], [], []
-            # preallocated chunk buffers, all ops in place: these
-            # kernels are memory-bandwidth bound at 32 concurrent
-            # workers, so every avoided (B x F) temporary is wall time
-            dx = np.empty((min(chunk, n), nf))
-            dy = np.empty_like(dx)
-            tmp = np.empty_like(dx)
-            for s in range(0, n, chunk):
-                e = min(s + chunk, n)
-                b = e - s
-                dxv, dyv, tmpv = dx[:b], dy[:b], tmp[:b]
-                pc = pxs[s:e, None]
-                np.subtract(fx0[None, :], pc, out=dxv)
-                np.subtract(pc, fx1[None, :], out=tmpv)
-                np.maximum(dxv, tmpv, out=dxv)
-                np.maximum(dxv, 0.0, out=dxv)
-                pc = pys[s:e, None]
-                np.subtract(fy0[None, :], pc, out=dyv)
-                np.subtract(pc, fy1[None, :], out=tmpv)
-                np.maximum(dyv, tmpv, out=dyv)
-                np.maximum(dyv, 0.0, out=dyv)
-                np.multiply(dxv, dxv, out=dxv)
-                np.multiply(dyv, dyv, out=dyv)
-                np.add(dxv, dyv, out=dxv)          # dxv = d2 (float64)
-                d2 = dxv.astype(np.int64)
-                if d2.max(initial=0) > key_cap:  # never at map scale
-                    sel = np.stack([
-                        np.lexsort((colidx, row))[:kk] for row in d2])
-                    d2s = np.take_along_axis(d2, sel, axis=1)
-                else:
-                    d2 *= nf                       # in-place combined
-                    d2 += colidx[None, :]          # key (d2, feat_rank)
-                    if kk < nf:
-                        part = np.argpartition(d2, kk - 1,
-                                               axis=1)[:, :kk]
-                        sel = np.take_along_axis(
-                            part, np.argsort(np.take_along_axis(
-                                d2, part, axis=1), axis=1), axis=1)
-                    else:
-                        sel = np.argsort(d2, axis=1)
-                    # recover exact d2 from the key: (key - rank)/nf
-                    d2s = np.take_along_axis(d2, sel, axis=1)
-                    d2s -= sel
-                    d2s //= nf
-                reps.append(np.repeat(np.arange(s, e), kk))
-                fsel.append(sel.ravel())
-                d2sel.append(d2s.ravel())
-                ranks.append(np.tile(np.arange(1, kk + 1), b))
-            rep = np.concatenate(reps)
-            res = pdf.iloc[rep][point_keys].reset_index(drop=True)
-            res["feat_id"] = fid[np.concatenate(fsel)].astype(
-                _np_int.get(feat_t, np.int64))
-            res["d2"] = np.concatenate(d2sel)
-            res["rank"] = np.concatenate(ranks).astype(np.int32)
+            sel, d2 = _knn_batch(pdf[px].to_numpy(dtype=np.float64),
+                                 pdf[py].to_numpy(dtype=np.float64),
+                                 feats, k, index)
+            res = pdf.iloc[np.repeat(np.arange(n), kk)][point_keys] \
+                .reset_index(drop=True)
+            res["feat_id"] = feats[0][sel.ravel()].astype(
+                _NP_INT.get(feat_t, np.int64))
+            res["d2"] = d2.ravel()
+            res["rank"] = np.tile(np.arange(1, kk + 1, dtype=np.int32), n)
             yield res
 
-    return points.select(*point_keys, px, py).mapInPandas(
-        topk, out_schema)
+    return points.select(*point_keys, px, py).mapInPandas(topk, out_schema)
+
+
+def knn_join_rects(points: DataFrame, rects: DataFrame, k: int = 3,
+                   px: str = "px", py: str = "py",
+                   point_keys: list[str] | None = None) -> DataFrame:
+    """Brute-force kNN: every point ranked against the whole (broadcast)
+    feature table; returns point keys + feat_id + d2 + rank 1..k."""
+    feats = _collect_features(rects, "knn_join_rects")
+    return _map_knn(points, rects, feats, None, k, px, py, point_keys)
 
 
 def knn_join_pruned(points: DataFrame, rects: DataFrame, k: int = 3,
                     depth: int = 7, ring: int = 3,
                     px: str = "px", py: str = "py",
                     point_keys: list[str] | None = None) -> DataFrame:
-    """Scale-path kNN: cell-ring candidate pruning + exact-completeness
-    check + brute-force fallback for the (rare) unresolved points.
+    """Cell-pruned kNN, same output as `knn_join_rects`, in the same
+    single mapInPandas pass.
 
-    Completeness bound (exact, per point): a feature covering NO cell
-    within `ring` cells of the point's cell lies entirely outside the
-    ring box, hence at distance >= the point's distance to the ring-box
-    edge. If the point has >= k ring candidates and its k-th best d2
-    <= that bound squared, the ring answer is provably the global
-    answer. Everything else (sparse-neighborhood points) falls back to
-    the broadcast brute force — results are hash-identical to pure
-    brute force, verified at the correctness gate."""
-    from ..cells import sql_cell_xy
-    from ..config import res_at
-    point_keys = point_keys or ["page_id", "cand_i"]
-    cs = res_at(depth)
-    R = ring * cs  # dilation radius in meters
-
-    # DILATED-FEATURE candidates: expand every feature bbox by R and
-    # explode its cover cells ONCE (broadcast side). A point joins on
-    # its single cell id, so each (point, feature) pair appears exactly
-    # once — no point-side explosion, no dedupe shuffle. Any feature
-    # NOT matched has bbox distance > R from the point's whole cell,
-    # hence distance > R from the point: constant completeness bound.
-    n = (1 << depth) - 1
-    rd = (rects
-          .withColumn("_ex0", F.col("x0") - R)
-          .withColumn("_ey0", F.col("y0") - R)
-          .withColumn("_ex1", F.col("x1") + R)
-          .withColumn("_ey1", F.col("y1") + R))
-    rd = explode_rect_cells(rd, "_ex0", "_ey0", "_ex1", "_ey1", depth)
-    rd = (rd.withColumn("cellid",
-                        F.col("_cx") * (n + 1) + F.col("_cy"))
-          .drop("_cx", "_cy", "cell", "_ex0", "_ey0", "_ex1", "_ey1"))
-    cx, cy = sql_cell_xy(px, py, depth)
-    p = points.withColumn(
-        "cellid", F.expr(f"({cx}) * {n + 1} + ({cy})"))
-    cand = p.join(F.broadcast(rd), "cellid")
-
-    w = Window.partitionBy(*point_keys).orderBy("d2", "feat_id")
-    wp = Window.partitionBy(*point_keys)
-    # ONE shuffle by point key: row_number, then count/max windows over
-    # the same partitioning (no extra exchange); persist the tiny top-k
-    # so the resolved/fallback branches don't recompute the candidates
-    # (bounded per-session LRU — see the cache note above).
-    _prune_stopped()
-    ranked = (cand.select(*point_keys, "feat_id",
-                          _d2(px, py).alias("d2"))
-              .withColumn("rank", F.row_number().over(w))
-              .where(F.col("rank") <= k)
-              .withColumn("_n", F.count(F.lit(1)).over(wp))
-              .withColumn("_kth", F.max("d2").over(wp))
-              .persist())
-    entries = _PERSISTED.setdefault(id(points.sparkSession), [])
-    entries.append((points.sparkSession, ranked))
-    while len(entries) > _KEEP_PER_SESSION:
-        _, old = entries.pop(0)
-        old.unpersist(False)
-    ok = (F.col("_n") >= k) & (F.col("_kth") <= F.lit(R * R))
-    resolved = ranked.where(ok)
-    unresolved_pts = points.join(
-        resolved.select(*point_keys).distinct(), point_keys, "left_anti")
-    fallback = knn_join_rects(unresolved_pts, rects, k, px, py,
-                              point_keys)
-    return resolved.select(*point_keys, "feat_id", "d2", "rank") \
-        .unionByName(fallback.select(*point_keys, "feat_id", "d2",
-                                     "rank"))
-
-
-def knn_candidates_cells(points: DataFrame, rects: DataFrame,
-                         depth: int, ring: int = 1,
-                         px: str = "px", py: str = "py") -> DataFrame:
-    """Cell-pruned candidate pairs: features covering any cell within
-    `ring` cells of the point's cell. The scale-path pre-filter: at
-    depth d with ring r, a candidate set bounded by local density
-    instead of the whole feature table. Exactness requires a fallback
-    for points with fewer than k candidates in the ring (caller checks
-    counts and escalates ring or falls back to broadcast)."""
-    from ..cells import sql_cell_xy, sql_quadkey
-    from .spatial_join import explode_rect_cells
-
-    cx, cy = sql_cell_xy(px, py, depth)
-    n = (1 << depth) - 1
-    # integer cell ids (cx * 2^depth + cy): much cheaper to build and
-    # join than 49 quadkey strings per point
-    p = (points
-         .withColumn("_pcx", F.expr(cx)).withColumn("_pcy", F.expr(cy))
-         .withColumn("_dx", F.explode(F.expr(
-             f"sequence(-{ring}, {ring})")))
-         .withColumn("_dy", F.explode(F.expr(
-             f"sequence(-{ring}, {ring})")))
-         .withColumn("_ncx", F.expr(
-             f"least({n}, greatest(0, _pcx + _dx))"))
-         .withColumn("_ncy", F.expr(
-             f"least({n}, greatest(0, _pcy + _dy))"))
-         # (clamped duplicates at domain edges are deduped below)
-         .withColumn("cellid",
-                     F.col("_ncx") * (n + 1) + F.col("_ncy")))
-    r = explode_rect_cells(rects, "x0", "y0", "x1", "y1", depth)
-    r = r.withColumn("cellid",
-                     F.col("_cx") * (n + 1) + F.col("_cy")) \
-         .drop("_cx", "_cy", "cell")
-    pairs = p.join(F.broadcast(r), "cellid")
-    keys = [c for c in points.columns]
-    return pairs.dropDuplicates(keys + ["feat_id"]) \
-        .drop("_pcx", "_pcy", "_dx", "_dy", "_ncx", "_ncy", "cellid")
+    Completeness bound (exact for integral coordinates): with R = ring *
+    res_at(depth), a feature whose R-dilated bbox does not cover the
+    point's cell is farther than R from the point. So if the point has
+    >= k candidates in its cell and its k-th d2 <= R², the candidate
+    answer is the global answer. Points in sparse neighborhoods fail the
+    check and are ranked against every feature in the same batch."""
+    feats = _collect_features(rects, "knn_join_pruned")
+    index = _cell_index(*feats[1:], depth, ring)
+    return _map_knn(points, rects, feats, index, k, px, py, point_keys)

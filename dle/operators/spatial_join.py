@@ -29,6 +29,10 @@ from pyspark.sql import Column, DataFrame, functions as F
 from ..cells import sql_cell_xy, sql_quadkey
 from ..config import GRID_SIZE, XMIN, YMIN
 
+# Row cap for a dimension table collected to the driver and broadcast
+# (the reference registry is 42 layers / thousands of features).
+MAX_BROADCAST_FEATURES = 200_000
+
 
 def _cell_col(x_expr: str, y_expr: str, depth: int) -> Column:
     cx, cy = sql_cell_xy(x_expr, y_expr, depth)
@@ -222,7 +226,8 @@ def pip_polygon_precedence_fold(points: DataFrame, polys: DataFrame,
                                 order_col: str = "process_order",
                                 tiebreak: str = "feat_id",
                                 point_keys: list[str] | None = None,
-                                max_broadcast_features: int = 200_000,
+                                max_broadcast_features: int = (
+                                    MAX_BROADCAST_FEATURES),
                                 ) -> DataFrame:
     """ZERO-POINT-EXCHANGE precedence over ARBITRARY polygon layers —
     the polygon-exact analogue of the rect path's in-scan fold
