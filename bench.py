@@ -24,29 +24,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from dle import queries as q  # noqa: E402
 from dle.session import get_spark  # noqa: E402
 
-# HEADLINE is a representative subset, not the full 70+ registry,
-# ROTATED per round like the registry CORE (VERDICT r4 #6) so every
-# gate gets benched within a few rounds while the suite stays under
-# the ~120 s sf0.1 budget (VERDICT r3 #3).
-# Deliberately OMITTED for suite cost this round — each a redundant
-# twin of a benched query, with its r4 measured time banked in
-# BENCH_r04.json: spatial_knn brute (pruned is hash-identical),
-# spatial_cell_assign (every pip gate assigns cells), spatial_pip_join
-# + spatial_restriction_max (same broadcast-index scan as the
-# precedence/rollup folds), ann_cosine_topk/ann_ivf_topk/
-# ann_lsh_buckets (subsumed by ann_lsh_topk + ann_ivf_trained_topk),
-# dedup_minhash_buckets (ngram_jaccard runs the same banding),
-# multimodal_pipeline/resize (decode_stats covers the decode path),
-# events_window_stats (streaming_window_rollup drains the identical
-# agg) + sliding/sessions, asof_click_nearest/purchase (forward
-# covers the cogrouped searchsorted this round),
-# overlay_planarize_coverage/labels_1d (qa_class_sums runs the same
-# planarize pass), overlay_precedence_area_1d (42-layer variant is
-# the scale case), the constant-output qa_planarized_totals, and
-# pipeline_resume_rollup (measures checkpoint I/O, not engine
-# throughput). Correctness for every omitted query is still
-# driver-gated (CORRECTNESS_r*.json) or replicable via
-# tools/check_oracle.py.
+# HEADLINE is a subset of the registry, not all of it: the suite must
+# stay inside its ~120 s wall-time budget at sf0.1. Every registered
+# query is still checked against its oracle by Tier-1.
 HEADLINE = [
     "spatial_pip_precedence",
     "spatial_clip_area_ha",
@@ -56,8 +36,6 @@ HEADLINE = [
     "rel_join_revenue_by_nation",
     "dedup_exact",
     "text_stats",
-    # r3 additions (keep appended so round-over-round common-query
-    # comparisons stay clean)
     "multimodal_decode_stats",
     "raster_zonal_stats",
     "overlay_precedence_area_42",
@@ -66,145 +44,20 @@ HEADLINE = [
     "text_repetition",
     "vocab_topk",
     "pack_sequences",
-    # r4 additions (appended: keeps common-query diffs clean)
     "text_length_quantiles",
     "corpus_filter_stats",
-    # r5 rotation: new gates + previously-unbenched registry members
-    # (VERDICT r4 #6 named asof_forward, langid/bpe/fingerprint among
-    # the 22). Rotated OUT this round to stay under the 120 s budget
-    # (each banked in BENCH_r04/r05 and still correctness-gated):
-    # spatial_pip_polygon + url_canonical_dedup (r4-measured twins of
-    # benched paths), qa_compare_designation (10.3 s — the same
-    # planarize pass as qa_class_sums plus an arrays_overlap join; the
-    # single most expensive registry query), raster_precedence_pixels
-    # (zonal runs the same burn+fold), streaming_resume_rollup
-    # (measures checkpoint/restart I/O like pipeline_resume_rollup,
-    # not engine throughput; measured 5.5 s in the r5 trial run).
-    # overlay_precedence_area_42 STAYS (r3 block): it is the 42-layer
-    # scale case, not a twin. Further r5 budget trims after the full
-    # 52-query trial measured 128.3 s on a noisy leg (each banked in
-    # that trial, all still correctness-gated): overlay_clip_area
-    # (3.49 s — clip kernel also measured by spatial_clip_area_ha and
-    # inside every precedence query) and text_bytes_invariant (5.07 s
-    # — an equi-join + byte rollup whose join path rel_join_revenue_by
-    # _nation and whose doc scan text_stats both cover). A second
-    # 50-query leg still measured 132.9 s (the shared host runs ~25%
-    # slow vs the r4 leg), so four more unchanged-since-r4 twins went
-    # out (timings banked in that leg + BENCH_r04): boundary_build_area
-    # (8.45 s — composes the separately-benched buffer
-    # [overlay_buffer_area] and dissolve [overlay_dissolve_area_1d]
-    # stages), overlay_intersect_pairs (5.66 s — the pairwise slab
-    # kernel also runs inside every clip/precedence query), ann_lsh_topk
-    # (4.84 s — banding measured by dedup_ngram_jaccard, ANN search by
-    # ann_ivf_trained_topk), streaming_window_rollup (2.95 s — the
-    # identical agg drains in the r4-banked measurement; code unchanged
-    # this round), spatial_cell_pyramid (2.24 s — hierarchical-cell
-    # rollup now also measured by the new spatial_tile_mixed_counts),
-    # pages_topk_per_host (2.12 s — same TakeOrderedAndProject shape as
-    # vocab_topk), dedup_chunk_shared (2.74 s — shingle+groupBy
-    # machinery measured by dedup_ngram_jaccard and decon_overlap).
     "overlay_precedence_multi",
     "spatial_tile_mixed_counts",
     "spatial_pip_mixed_join",
-    # r5 curation additions (new gates always bench in their round)
     "text_pii_redact",
-    # r6 rotation (VERDICT r5 #5): qa_compare_designation IN — the
-    # single most expensive registry query (r5 trial: 10.3 s) finally
-    # benched against dropped twins; boundary_build_area back IN for an
-    # honest re-measure (its subdivide stage's row assembly was
-    # columnized this round; r5-leg banked time 8.45 s);
-    # quality_score_trained IN (new gate). Rotated OUT to pay for them
-    # (each banked in BENCH_r05.json, unchanged code, still
-    # correctness-gated): qa_class_sums (5.65 s — the identical
-    # planarize pass now runs inside qa_compare_designation),
-    # kmeans_centroids (3.07 s — Lloyd's iterations measured inside
-    # ann_ivf_trained_topk), asof_click_forward (3.01 s — cogrouped
-    # searchsorted unchanged since r4), overlay_buffer_area (3.18 s —
-    # the buffer kernel runs inside boundary_build_area's marine
-    # dilation), dedup_components (5.29 s — label propagation over the
-    # LSH candidate graph whose banding dedup_ngram_jaccard measures),
-    # sketch_distinct_kmv (1.77 s — scan-side sketch, unchanged).
     "qa_compare_designation",
     "boundary_build_area",
     "quality_score_trained",
-    # r6 budget trims: the first r6 trial leg measured the 41-query
-    # roster at 110.9 s — inside the 120 s hard budget but without the
-    # >= 25 s slow-leg margin (identical rosters have measured +25-30%
-    # on back-to-back legs). Five measured-this-leg twins went out,
-    # each banked in that trial and still correctness-gated:
-    # spatial_polygon_precedence (4.82 s — rect-rect precedence fold;
-    # the precedence-fold family is measured by spatial_pip_precedence,
-    # overlay_precedence_area_42 and overlay_precedence_multi),
-    # spatial_rollup_counts (3.31 s — same broadcast-index PIP scan as
-    # the precedence gates, distinct-cells agg on top),
-    # pages_latest_capture (2.46 s — window dedup over the pages scan
-    # that pages_host_rollup/split_assign also measure),
-    # dedup_simhash (2.05 s — pure-JVM scan like the benched text_*
-    # gates), text_fingerprint (1.51 s — same scan shape as
-    # text_stats/langid/bpe).
-    # streaming_decon_rollup measured 5.6 s in its r5 trial but is
-    # excluded under the same rule as streaming_resume_rollup: the
-    # cost is the availableNow drain's checkpoint/stream setup, not
-    # engine throughput — the underlying operator's engine cost IS
-    # benched (the decon_report gate runs the identical broadcast
-    # shingle join batch-side).
-    # late-r6 gates (new gates always bench in their round):
-    # dedup_survivors (the end-to-end dedup corpus output — banding +
-    # label-propagation components + corpus stamp; measured 5.92 s in
-    # an isolated sf0.1 trial) and decon_report (the per-bench
-    # contamination rollup; 1.31 s same trial). Rotated OUT to pay,
-    # each banked in the 36-query r6 trial leg (/tmp/r6_bench2.log,
-    # total 90.44 s) and still correctness-gated: decon_overlap
-    # (2.53 s — shares _overlap_pairs with the benched decon_report;
-    # same broadcast shingle join, transposed rollup),
-    # quality_score_linear (1.09 s — identical zero-exchange scan plan
-    # as the benched quality_score_trained, closed-form vs broadcast
-    # weights), dedup_ngram_jaccard (2.99 s — its LSH banding is the
-    # same _shingle_lsh_pairs the benched dedup_survivors runs; the
-    # remaining array_intersect verification is a broadcast-pruned
-    # pair-count-bounded projection). A 35-query trial leg with these
-    # two measured 92.03 s.
-    # dedup_semantic (late-r6 gate) first measured 16.47 s isolated —
-    # the driver union-find dispatch in connected_components (collect
-    # probe = the edge list, one job instead of per-pass joins +
-    # convergence collects) brought it to 5.75 s (and dedup_survivors
-    # 4.64 -> 2.91 s, dedup_components 5.29 -> 2.79 s banked), so it
-    # benches this round after all. ann_ivf_trained_topk rotated OUT
-    # to pay (4.26 s isolated r6 trial, banked; its k-means training +
-    # scan-side assignment run identically inside the benched
-    # dedup_semantic; the IVF probe/top-k tail is the r5-banked 4.01 s
-    # twin of the still-benched ANN family).
     "dedup_survivors",
     "decon_report",
     "dedup_semantic",
-    # ann_pq_topk (late-r6 gate, 3.14 s isolated trial): the PQ memory
-    # path — scan-side encode + ADC scoring + per-query top-k. Paid
-    # for by two banked scan-shape twins from the 35-query trial legs:
-    # text_langid (1.26 s — same corpus scan shape as the benched
-    # text_stats) and corpus_sample_stratified (1.10 s — scan-side
-    # md5-bucket arithmetic like the benched corpus_filter_stats).
     "ann_pq_topk",
-    # bpe_train_merges (late-r6 gate, 4.62 s isolated trial): BPE
-    # tokenizer TRAINING — per round a pair-count groupBy, a 1-row
-    # driver pull, and a zero-exchange merge fold. Paid for by two
-    # banked twins (r6 trial legs, still correctness-gated):
-    # text_bpe_tokens (0.86 s — the APPLY side; the train gate scans
-    # the same corpus and does strictly more per token) and
-    # pages_html_invariant (1.25 s — equi-join + byte rollup; the join
-    # path is benched by rel_join_revenue_by_nation, the doc scan by
-    # text_stats).
     "bpe_train_merges",
-    # final r6 margin trim: a 33-query leg with bpe_train_merges
-    # measured 96.33 s (a ~10% slow leg) — over the ~95 s soft cap, so
-    # three twins measured in that same leg went out (banked there,
-    # all still correctness-gated): overlay_dissolve_area_1d (2.63 s —
-    # the A2 dissolve is composed inside the benched
-    # boundary_build_area and every precedence gate),
-    # spatial_tile_feature_counts (1.77 s — single-depth tiling; the
-    # benched spatial_tile_mixed_counts runs the superset mixed-depth
-    # tiler), pages_split_assign (1.60 s — url-hash split arithmetic,
-    # the same scan shape as the benched pages_host_rollup /
-    # corpus_filter_stats).
 ]
 
 

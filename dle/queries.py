@@ -4,7 +4,8 @@ plus their DuckDB oracle SQL twins.
 Every oracle-checked query follows the cross-engine determinism rules
 (see sqlgen.py): integral-double coordinates, md5 as the only string
 hash, integer aggregation before any division, explicit aliases on
-every computed column (the driver hash-compares by sorted column name).
+every computed column (dle.resultcheck hash-compares by sorted column
+name).
 
 Engine callables go through the real operator path (cell explode /
 broadcast join / refine / map-side-combinable aggregation); oracles are
@@ -641,99 +642,8 @@ _LOCAL = {
                                 o_rel_top_orders_per_cust),
 }
 
-_ALL = {**_LOCAL, **KERNEL_QUERIES, **TEXT_QUERIES, **WEB_QUERIES,
-        **RASTER_QUERIES}
-
-# Registry ORDER IS LOAD-BEARING (VERDICT r3 #1): the driver's
-# correctness gate samples the FIRST 50 entries in insertion order.
-# CORE_R5 is the explicit slot list for this round; everything not
-# named lands in TAIL (51+), still verified locally each round by
-# tools/check_oracle.py. Rotation rule: no gate's last driver-green
-# row may age more than ~2 rounds; a new/changed gate always takes a
-# CORE slot in the round it changes.
-#
-# r6 composition (VERDICT r5 #1 — the only freshness debt left): ALL
-# 32 r4-green TAIL members cycle back in at once, fully discharging
-# the rotation debt in one round (after r6 every gate's last
-# driver-green row is r5 or r6, max green-age 1) + 3 new gates
-# (quality_score_trained, the real-weights classifier swap;
-# dedup_survivors, the end-to-end dedup corpus output; decon_report,
-# the per-bench contamination rollup) + the 11 gates whose code paths
-# changed this round (decon broadcast guard, columnized mixed
-# tiling/subdivide, limit-collect fold dispatch, epoch-dedup streaming
-# sinks, optional-PIL decode dispatch) + 4 r5-green family keepers.
-# The 34 demoted gates are ALL r5-green (age 1), rotate back r7/r8.
-CORE_R6 = [
-    # all 32 r4-green TAIL members cycled back (last driver row = r4)
-    "spatial_restriction_max",
-    "spatial_tile_feature_counts",
-    "spatial_pip_polygon",
-    "text_bytes_invariant",
-    "rel_pricing_summary",
-    "rel_join_revenue_by_nation",
-    "rel_anti_join_customers",
-    "overlay_clip_area",
-    "overlay_precedence_area_42",
-    "overlay_planarize_coverage_1d",
-    "qa_compare_designation",
-    "qa_class_sums",
-    "dedup_simhash",
-    "text_fingerprint",
-    "sketch_distinct_kmv",
-    "text_stats",
-    "text_langid",
-    "text_bpe_tokens",
-    "ann_cosine_topk",
-    "ann_lsh_topk",
-    "asof_click_forward",
-    "asof_click_nearest",
-    "range_join_promos",
-    "pages_host_rollup",
-    "pages_split_assign",
-    "text_repetition",
-    "dedup_chunk_shared",
-    "vocab_topk",
-    "pages_topk_per_host",
-    "spatial_cell_pyramid",
-    "raster_precedence_pixels",
-    "raster_forest_pixels",
-    # new this round
-    "quality_score_trained",
-    "dedup_survivors",
-    "decon_report",
-    "dedup_semantic",
-    "ann_pq_topk",
-    "bpe_train_merges",
-    # code paths changed this round (rule: changed gate takes CORE)
-    "decon_overlap",
-    "quality_score_linear",
-    "spatial_tile_mixed_counts",
-    "spatial_pip_mixed_join",
-    "spatial_polygon_precedence",
-    "streaming_decon_rollup",
-    "multimodal_decode_stats",
-    "streaming_window_rollup",
-    "streaming_resume_rollup",
-    "pipeline_resume_rollup",
-    "boundary_build_area",
-    # r5-green keeper (family coverage; dedup_minhash_buckets,
-    # overlay_precedence_multi, ann_ivf_trained_topk,
-    # overlay_dissolve_area_1d and pack_sequences ceded their slots to
-    # the five new r6 gates above — all r5-green age 1, back in r7;
-    # dedup_semantic runs ann_ivf_trained's k-means training +
-    # assignment machinery and boundary_build_area composes the A2
-    # dissolve, so those families stay sampled)
-    "spatial_knn_pruned",
-]
-
-assert len(CORE_R6) == 50, f"CORE must fill exactly 50 slots, got {len(CORE_R6)}"
-assert len(set(CORE_R6)) == 50, "duplicate CORE slot"
-_missing = [n for n in CORE_R6 if n not in _ALL]
-assert not _missing, f"CORE names not registered: {_missing}"
-
-QUERIES = {name: _ALL[name] for name in CORE_R6}
-# ---- TAIL (51+): r5-green twins awaiting rotation back in r7/r8 ----
-QUERIES.update({k: v for k, v in _ALL.items() if k not in QUERIES})
+QUERIES = {**_LOCAL, **KERNEL_QUERIES, **TEXT_QUERIES, **WEB_QUERIES,
+           **RASTER_QUERIES}
 
 
 def queries():
@@ -741,4 +651,4 @@ def queries():
 
 
 def oracles():
-    return {k: v[1]() for k, v in QUERIES.items() if v[1] is not None}
+    return {k: v[1]() for k, v in QUERIES.items()}

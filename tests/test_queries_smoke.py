@@ -1,4 +1,5 @@
-"""Smoke + determinism tests for the query surface at sf0.001.
+"""The query surface at sf0.001: every registered query against its
+DuckDB oracle twin, the golden pins, and determinism checks.
 
 The partition-invariance check (same result at different parallelism)
 is the determinism gate FIXTURES.md §6 requires before the N vs 4N
@@ -7,10 +8,28 @@ scaling bench.
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
+import pytest
+
 import __spark_entry__ as entrymod
 from dle import queries as q
+from dle.resultcheck import compare, duck_views, table_hash
 
 SF = "/root/testdata/sf0.001"
+ORACLES = entrymod.oracle_sql()
+# rows, sorted cols and table_hash of 16 gates, pinned from the DuckDB
+# oracle at sf0.001 (FIXTURES.md §6).
+GOLDEN = json.loads(
+    (Path(__file__).parent / "golden" / "sf0001.json").read_text())
+
+
+@pytest.fixture(scope="module")
+def duck():
+    con = duck_views(SF)
+    yield con
+    con.close()
 
 
 def test_entry_returns_rows(spark):
@@ -20,16 +39,22 @@ def test_entry_returns_rows(spark):
     assert set(df.columns) == {"designation", "n_points", "n_pages"}
 
 
-def test_every_query_runs(spark):
-    for name, fn in entrymod.queries().items():
-        df = fn(spark, SF)
-        assert df.count() > 0, name
+@pytest.mark.parametrize("name", list(ORACLES))
+def test_query_matches_oracle(spark, duck, name):
+    sdf = entrymod.queries()[name](spark, SF)
+    srows = sdf.collect()
+    assert len(srows) > 0
+    problems = compare(sdf.columns, srows, sdf.schema,
+                       duck.sql(ORACLES[name]))
+    assert not problems, "; ".join(problems)
+    if name in GOLDEN:
+        got = {"rows": len(srows), "cols": sorted(sdf.columns),
+               "sha256": table_hash(sdf.columns, srows)}
+        assert got == GOLDEN[name], f"golden pin {name} drifted"
 
 
-def test_oracle_keys_subset_of_queries():
-    qs = entrymod.queries()
-    for k in entrymod.oracle_sql():
-        assert k in qs
+def test_every_query_has_oracle():
+    assert set(ORACLES) == set(entrymod.queries())
 
 
 def test_pip_join_partition_invariance(spark):

@@ -5,18 +5,12 @@ tail chunks, exact duplicates) on BOTH engines."""
 
 from __future__ import annotations
 
-import sys
-from pathlib import Path
-
 import duckdb
 import pandas as pd
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
-
-from check_oracle import table_hash  # noqa: E402
-
-from dle import queries_web as w  # noqa: E402
+from dle import queries_web as w
+from dle.resultcheck import compare
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -54,13 +48,8 @@ def duck(edge_sf):
 def test_edge_parity(spark, edge_sf, duck, name):
     qfn, ofn = w.WEB_QUERIES[name]
     sdf = qfn(spark, edge_sf)
-    srows = [tuple(r) for r in sdf.collect()]
-    rel = duck.sql(ofn())
-    drows = rel.fetchall()
-    assert len(srows) == len(drows), (srows, drows)
-    assert sorted(sdf.columns) == sorted(rel.columns)
-    assert table_hash(sdf.columns, srows) == \
-        table_hash(list(rel.columns), drows)
+    assert compare(sdf.columns, sdf.collect(), sdf.schema,
+                   duck.sql(ofn())) == []
 
 
 def test_repetition_semantics(spark, edge_sf):

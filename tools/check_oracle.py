@@ -1,74 +1,23 @@
-"""Local replica of the driver's correctness gate.
+"""Command-line form of the oracle check Tier-1 runs.
 
 Runs every __spark_entry__.queries() entry on Spark and its
-oracle_sql() twin on DuckDB at sf0.01, then compares row count, sorted
-column names, and an order-insensitive value hash. Run before every
-commit that touches the query surface:
+oracle_sql() twin on DuckDB (default sf0.01; Tier-1 runs sf0.001) and
+compares them with dle.resultcheck.compare: row count, sorted column
+names, column types and an order-insensitive value hash.
 
     python tools/check_oracle.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
 
-import hashlib
 import sys
 from pathlib import Path
-
-import duckdb
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from dle.resultcheck import compare, duck_views  # noqa: E402
 from dle.session import get_spark  # noqa: E402
-from dle.sqlgen import TABLES  # noqa: E402
-
-
-def norm_cell(v):
-    if v is None:
-        return "\\N"
-    if isinstance(v, float):
-        if v != v:
-            return "nan"
-        if v == int(v) and abs(v) < 1e15:
-            return str(int(v))
-        return f"{v:.10g}"
-    if isinstance(v, bytes):
-        return v.hex()
-    return str(v)
-
-
-def table_hash(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
-        "\x01".join(norm_cell(r[i]) for i in order) for r in rows)
-    h = hashlib.sha256()
-    for ln in lines:
-        h.update(ln.encode())
-        h.update(b"\n")
-    return h.hexdigest()
-
-
-_DUCK_CANON = {
-    "BIGINT": "bigint", "INTEGER": "int", "SMALLINT": "int",
-    "DOUBLE": "double", "FLOAT": "float", "VARCHAR": "string",
-    "BLOB": "binary", "BOOLEAN": "boolean", "HUGEINT": "hugeint",
-    "DECIMAL": "decimal", "TIMESTAMP": "timestamp", "DATE": "date",
-}
-
-
-def canon_duck(t: str) -> str:
-    return _DUCK_CANON.get(t.split("(")[0].upper(), t.lower())
-
-
-def type_mismatches(sdf, dcols, dtypes) -> list[str]:
-    stypes = {f.name: f.dataType.simpleString() for f in sdf.schema}
-    out = []
-    for c, t in zip(dcols, dtypes):
-        dc = canon_duck(t)
-        sc = stypes.get(c)
-        if sc is not None and dc != sc:
-            out.append(f"{c}: spark={sc} duckdb={dc}")
-    return out
 
 
 def main():
@@ -78,60 +27,26 @@ def main():
     spark = get_spark("oracle-check", master="local[8]",
                       shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"create view {t} as select * from '{sf}/{t}.parquet'")
+    con = duck_views(sf)
 
     qs = entrymod.queries()
-    os_ = entrymod.oracle_sql()
     fails = []
-    for name, fn in qs.items():
+    for name, sql in entrymod.oracle_sql().items():
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf)
+            sdf = qs[name](spark, sf)
             srows = sdf.collect()
-            scols = sdf.columns
         except Exception as e:
             print(f"FAIL {name}: spark error {e}")
             fails.append(name)
             continue
-        if name not in os_:
-            print(f"OK?  {name}: rows-only ({len(srows)} rows, no oracle)")
-            continue
         try:
-            rel = con.sql(os_[name])
-            dcols = list(rel.columns)
-            dtypes = [str(t) for t in rel.types]
-            drows = rel.fetchall()
+            problems = compare(sdf.columns, srows, sdf.schema, con.sql(sql))
         except Exception as e:
             print(f"FAIL {name}: duckdb error {str(e)[:300]}")
             fails.append(name)
             continue
-        problems = []
-        if len(srows) != len(drows):
-            problems.append(f"rows {len(srows)} != {len(drows)}")
-        if sorted(scols) != sorted(dcols):
-            problems.append(f"cols {sorted(scols)} != {sorted(dcols)}")
-        tm = type_mismatches(sdf, dcols, dtypes)
-        if tm:
-            problems.append(f"type mismatch: {tm}")
-        if not problems:
-            sh = table_hash(scols, [tuple(r) for r in srows])
-            dh = table_hash(dcols, drows)
-            if sh != dh:
-                problems.append("value hash mismatch")
-                so = sorted(range(len(scols)), key=lambda i: scols[i])
-                do = sorted(range(len(dcols)), key=lambda i: dcols[i])
-                sset = {tuple(norm_cell(r[i]) for i in so) for r in srows}
-                dset = {tuple(norm_cell(r[i]) for i in do) for r in drows}
-                ex_s = list(sset - dset)[:3]
-                ex_d = list(dset - sset)[:3]
-                if ex_s:
-                    problems.append(f"spark-only: {ex_s}")
-                if ex_d:
-                    problems.append(f"duck-only: {ex_d}")
         if problems:
             print(f"FAIL {name}: " + "; ".join(str(p)[:400]
                                                for p in problems))
