@@ -1,14 +1,16 @@
-"""Bench harness: headline engine queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Bench harness: engine queries at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default:
+the cores this process may run on).
+
+    python bench.py              # the HEADLINE roster
+    python bench.py q1 q2 ...    # only the named registered queries
 
 Prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "docs_per_sec": ...}
 
-Set BENCH_SCALING=1 to also run the flagship at local[N] and local[4N]
-on identical input and report throughput + scaling efficiency (the
-sandbox evidence for the north rule's two-cluster-size criterion; see
-BENCH/BASELINE.md).
+Per-layer detail (jobs, stages, shuffle, spill, Python and kernel time)
+comes from `perfbench/run.py --trace 1`.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from dle import queries as q  # noqa: E402
-from dle.session import get_spark  # noqa: E402
+from dle.session import default_cpus, get_spark  # noqa: E402
 
 # HEADLINE is a subset of the registry, not all of it: the suite must
 # stay inside its ~120 s wall-time budget at sf0.1. Every registered
@@ -61,21 +63,19 @@ HEADLINE = [
 ]
 
 
-REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
+BEST_OF = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
 
 
-def run_suite(spark, sf_dir):
-    """Each query executes REPS times, min taken: the sandbox host is
+def run_suite(spark, sf_dir, names):
+    """Each query executes BEST_OF times, min taken: the sandbox host is
     shared, and single-shot timings swing 2-5x with ambient load
     (measured; see BENCH/BASELINE.md variance note). min-of-2 keeps
     the suite honest about engine cost without tripling wall time."""
     qs = q.queries()
     times = {}
-    for name in HEADLINE:
-        if name not in qs:
-            continue
+    for name in names:
         best = None
-        for _ in range(max(1, REPS)):
+        for _ in range(max(1, BEST_OF)):
             t0 = time.perf_counter()
             # count() forces full execution w/o driver-side collect cost
             qs[name](spark, sf_dir).count()
@@ -90,8 +90,12 @@ def n_docs(spark, sf_dir):
 
 
 def main():
+    names = sys.argv[1:] or HEADLINE
+    unknown = sorted(set(names) - set(q.queries()))
+    if unknown:
+        raise SystemExit(f"unknown query name(s): {', '.join(unknown)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = get_spark("dle-bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     # warm BOTH execution paths once so timings measure the engine:
@@ -99,15 +103,11 @@ def main():
     # Python worker pool + numpy import in every worker)
     q.queries()["spatial_rollup_counts"](spark, sf_dir).count()
     q.queries()["overlay_dissolve_area_1d"](spark, sf_dir).count()
-    times = run_suite(spark, sf_dir)
+    times = run_suite(spark, sf_dir, names)
     total = round(sum(times.values()), 2)
     docs = n_docs(spark, sf_dir)
     flag = times.get("spatial_pip_precedence", total) or total
-    # VERDICT r3 #2: the r3 JSON line (46 times + 46 row counts) outgrew
-    # the driver's tail-capture window and recorded as "parsed": null.
-    # Row counts are CORRECTNESS's job, so they are gone; times are 2dp;
-    # separators= strips whitespace; stdout is flushed and the JSON is
-    # the FINAL line this process prints.
+    # one compact final line: the driver parses only the tail of stdout
     out = {
         "metric": "overlay+dissolve headline suite wall time",
         "value": total,
@@ -117,7 +117,7 @@ def main():
         "docs": docs,
         "docs_per_sec": round(docs / flag, 1) if flag else None,
         "cpus": cpus,
-        "reps": REPS,
+        "reps": BEST_OF,
     }
     spark.stop()
     sys.stdout.flush()

@@ -14,9 +14,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
+
+
 def get_spark(app: str = "dle", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cpus, 32)

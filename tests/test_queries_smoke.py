@@ -2,8 +2,8 @@
 DuckDB oracle twin, the golden pins, and determinism checks.
 
 The partition-invariance check (same result at different parallelism)
-is the determinism gate FIXTURES.md §6 requires before the N vs 4N
-scaling bench.
+is the determinism gate FIXTURES.md §6 requires before any timing at
+two parallelism levels is compared.
 """
 
 from __future__ import annotations
@@ -14,6 +14,7 @@ from pathlib import Path
 import pytest
 
 import __spark_entry__ as entrymod
+import bench
 from dle import queries as q
 from dle.resultcheck import compare, duck_views, table_hash
 
@@ -47,6 +48,10 @@ def test_query_matches_oracle(spark, duck, name):
     problems = compare(sdf.columns, srows, sdf.schema,
                        duck.sql(ORACLES[name]))
     assert not problems, "; ".join(problems)
+    # Python runs only as Arrow batches: a row-wise UDF node in the
+    # executed plan means one pickle round trip per row
+    plan = sdf._jdf.queryExecution().executedPlan().toString()
+    assert "BatchEvalPython" not in plan, f"{name}: row-wise Python UDF"
     if name in GOLDEN:
         got = {"rows": len(srows), "cols": sorted(sdf.columns),
                "sha256": table_hash(sdf.columns, srows)}
@@ -55,6 +60,10 @@ def test_query_matches_oracle(spark, duck, name):
 
 def test_every_query_has_oracle():
     assert set(ORACLES) == set(entrymod.queries())
+
+
+def test_headline_names_registered():
+    assert set(bench.HEADLINE) <= set(q.queries())
 
 
 def test_pip_join_partition_invariance(spark):
