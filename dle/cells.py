@@ -65,7 +65,10 @@ def cell_bounds(key: str) -> tuple[float, float, float, float]:
 
 
 def cover(x0: float, y0: float, x1: float, y1: float, depth: int) -> list[str]:
-    """All depth-``depth`` cells whose bbox intersects [x0,x1)x[y0,y1).
+    """All depth-``depth`` cells whose interior meets the bbox
+    [x0,x1]x[y0,y1], clamped to the grid. A zero-width or zero-height
+    bbox lying on a cell boundary meets no interior; it gets the cell
+    of its min corner.
 
     The `explode(cover_cells(geom))` planning primitive (SURVEY §2 A3/E1).
     """
@@ -75,8 +78,8 @@ def cover(x0: float, y0: float, x1: float, y1: float, depth: int) -> list[str]:
     ay0 = _clamp(int((y0 - YMIN) // res), 0, n)
     # half-open: a rect ending exactly on a cell boundary does not enter
     # the next cell
-    ax1 = _clamp(int(-((XMIN - x1) // res)) - 1, 0, n)
-    ay1 = _clamp(int(-((YMIN - y1) // res)) - 1, 0, n)
+    ax1 = max(_clamp(int(-((XMIN - x1) // res)) - 1, 0, n), ax0)
+    ay1 = max(_clamp(int(-((YMIN - y1) // res)) - 1, 0, n), ay0)
     return [
         quadkey(cx, cy, depth)
         for cy in range(ay0, ay1 + 1)

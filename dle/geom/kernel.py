@@ -214,18 +214,15 @@ def _sweep(tagged: list[tuple[int, list]], grid: float,
         idx = idx[order]
         m = len(idx)
         if labels:
-            # OPTIMIZATION r7 (vectorized run emission): the old path
-            # walked every boundary interval in Python, built a label
-            # tuple via np.flatnonzero for EACH (O(active) per slab)
-            # and constructed a Trap per candidate run — on the qa
-            # world 96% of candidates are zero-height (coincident
-            # band edges) and were discarded right after construction
-            # (1.34M built, 52k kept). Runs, the degeneracy filter and
-            # the four y values are computed as whole-slab array ops;
-            # Python now touches only EMITTED traps. Run boundaries,
-            # label values, emission order and the area>0 sign test
-            # are bit-identical to the scalar loop (same IEEE ops,
-            # multiplied by the positive 0.5*(xb-xa) factor only).
+            # Labels mode is always vectorized: runs, the degeneracy
+            # filter and the four y values are whole-slab array ops,
+            # so Python touches only EMITTED traps. Most candidate runs
+            # here are zero-height (coincident band edges: 96% on the
+            # qa world), and a per-candidate label tuple and Trap would
+            # be built only to be discarded. Run boundaries, label
+            # values, emission order and the area>0 sign test are
+            # bit-identical to a scalar walk (same IEEE ops, times the
+            # positive 0.5*(xb-xa) factor only).
             if m < 2:
                 continue
             mat = np.zeros((m, ntags), dtype=np.int64)
@@ -256,11 +253,12 @@ def _sweep(tagged: list[tuple[int, list]], grid: float,
                     tuple(np.flatnonzero(cum[starts[k]]).tolist())))
             continue
         # predicate path — runs merge across ALL consecutive covered
-        # intervals (no label test). Hybrid emission: the vectorized
-        # form wins on fat slabs (1.4x at 4000-feature unions, where
-        # salted dissolve groups live) but loses to the scalar loop on
-        # the small active sets typical of per-(cell, key) dissolve
-        # groups (measured crossover ~48 active edges).
+        # intervals (no label test). Two emission forms on purpose: the
+        # vectorized one wins on fat slabs (1.4x at 4000-feature
+        # unions) but loses to the scalar loop on the small active
+        # sets typical of per-(cell, key) dissolve groups (crossover
+        # ~48 active edges). One merged run-finder was bit-identical
+        # but 60% slower on small soups (ROADMAP #3), so both stay.
         if m < 2:
             continue
         wa = np.cumsum(np.where(tg[idx] == 0, w[idx], 0))
@@ -529,15 +527,6 @@ def as_rect(rings: list):
     if abs(area([r])) != (x1 - x0) * (y1 - y0):
         return None
     return float(x0), float(y0), float(x1), float(y1)
-
-
-def covered_by_bbox(rings: list, bx0, by0, bx1, by1) -> bool:
-    """Cheap ST_CoveredBy fastpath vs a rectangle (tile.sql:43-47)."""
-    for r in rings:
-        if (r[:, 0].min() < bx0 or r[:, 0].max() > bx1
-                or r[:, 1].min() < by0 or r[:, 1].max() > by1):
-            return False
-    return True
 
 
 def rasterize_mask(rings: list, x0: float, y0: float, res: float,

@@ -38,10 +38,8 @@ def spatial_overlay(df_a: DataFrame, df_b: DataFrame,
     if bad:
         raise ValueError(f"reserved columns in input: {sorted(bad)}")
 
-    a = tile_geoms(df_a, depth, geom, grid) \
-        .drop("bx0", "by0", "bx1", "by1")
+    a = tile_geoms(df_a, depth, geom, grid)
     b = tile_geoms(df_b, depth, geom, grid) \
-        .drop("bx0", "by0", "bx1", "by1") \
         .withColumnRenamed(geom, "_geom_b")
 
     out_fields = (

@@ -2,10 +2,10 @@
 around the slab-decomposition kernel.
 
 Physical shape shared by every operator:
-  1. JVM phase: bbox extraction once, `explode(cover_cells(bbox))`
-     (spatial_join.explode_rect_cells), shuffle/broadcast keyed by
-     `cell` — the reference's per-tile fan-out
-     (/root/reference/designatedlands.py:810-817) becomes Spark tasks.
+  1. Tile phase: `_tile` cuts every row by the cell grid in one
+     scan-side `mapInPandas`; operators then shuffle or broadcast
+     keyed by `cell` — the reference's per-tile fan-out
+     (designatedlands.py:810-817) becomes Spark tasks.
   2. Arrow phase: a grouped pandas UDF runs the numpy kernel on each
      cell group. Geometry never crosses cells after tiling, so groups
      are embarrassingly parallel — same guarantee the reference gets
@@ -22,41 +22,18 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, DoubleType
+from pyspark.sql.types import DoubleType
 
-from ..cells import cell_bounds
+from ..cells import cell_bounds, cover
 from ..config import SLIVER_AREA, SNAP_GRID
 from ..geom import kernel as K
 from ..geom import wkb
 from .. import telemetry
-from .spatial_join import explode_rect_cells
 
 GRID = SNAP_GRID
 
 
 # --------------------------------------------------------- helpers
-
-_bbox_udf = F.pandas_udf(
-    lambda g: pd.Series([_bbox(b) for b in g]),
-    ArrayType(DoubleType()))
-
-
-def _bbox(buf: bytes) -> list[float]:
-    rings = wkb.parse_rings(bytes(buf))
-    xs = np.concatenate([r[:, 0] for r in rings])
-    ys = np.concatenate([r[:, 1] for r in rings])
-    return [float(xs.min()), float(ys.min()),
-            float(xs.max()), float(ys.max())]
-
-
-def with_bbox(df: DataFrame, geom: str = "geom") -> DataFrame:
-    df = df.withColumn("_bb", _bbox_udf(geom))
-    return (df.withColumn("bx0", F.col("_bb")[0])
-              .withColumn("by0", F.col("_bb")[1])
-              .withColumn("bx1", F.col("_bb")[2])
-              .withColumn("by1", F.col("_bb")[3])
-              .drop("_bb"))
-
 
 _area_udf = F.pandas_udf(
     lambda g: pd.Series([K.area(wkb.parse_rings(bytes(b))) for b in g]),
@@ -77,105 +54,47 @@ def _schema_of(df: DataFrame, *extra: str) -> str:
 
 # ------------------------------------------------------------ tile
 
-def tile_geoms(df: DataFrame, depth: int, geom: str = "geom",
-               grid: float = GRID) -> DataFrame:
-    """A3 tile: dice every geometry by the cell grid. One output row per
-    (input row, covering cell) with geom clipped to the cell bbox
-    (coveredby fastpath: single-cell features pass through unclipped —
-    sql/tile.sql:43-47).
+def _tile(df: DataFrame, cells_of, geom: str, grid: float,
+          key: str | None = None) -> DataFrame:
+    """The one tiler (A3, sql/tile.sql:20-57): one output row per
+    (input row, cell) with the geometry cut to the cell; returns the
+    input columns plus ``cell``.
 
-    Physical shape: clipping each (row, cell) pair is per-row
-    independent, so it runs as `mapInPandas` directly over the exploded
-    scan output — NO shuffle (VERDICT r1 finding #4: the old
-    groupBy(cell) form forced a full exchange of the fact table before
-    any clip). Downstream dissolve/cogroup operators shuffle by cell
-    only when they actually group."""
-    bb = with_bbox(df, geom)
-    e = explode_rect_cells(bb, "bx0", "by0", "bx1", "by1", depth)
-    e = e.drop("_cx", "_cy")
-    out_schema = _schema_of(e)
-    gcol = geom
-    _acc = telemetry.capture()
+    Per row it parses the WKB once, takes the bbox from the rings and
+    lists the row's cells with ``cells_of(bbox, row[key])``. A piece
+    whose bbox lies inside its cell passes through unclipped (the
+    coveredby fastpath, sql/tile.sql:43-47); any other is clipped to
+    the cell, repaired, and kept only if it has area.
 
-    def clip_batches(it):
-        for pdf in it:
-            outs, keep = [], []
-            for i, (buf, cell) in enumerate(zip(pdf[gcol], pdf["cell"])):
-                x0, y0, x1, y1 = cell_bounds(cell)
-                rings = wkb.parse_rings(bytes(buf))
-                if K.covered_by_bbox(rings, x0, y0, x1, y1):
-                    outs.append(bytes(buf))
-                    keep.append(i)
-                    continue
-                clipped = K.clip_bbox(rings, x0, y0, x1, y1)
-                clipped = K.make_valid(clipped, grid)
-                if clipped and K.area(clipped) > 0:
-                    outs.append(wkb.rings_wkb(clipped))
-                    keep.append(i)
-            res = pdf.iloc[keep].copy()
-            res[gcol] = outs
-            telemetry.drain(_acc)
-            yield res
-
-    return e.mapInPandas(clip_batches, out_schema)
-
-
-def tile_geoms_mixed(df: DataFrame, depth_col: str = "tile_depth",
-                     geom: str = "geom", grid: float = GRID) -> DataFrame:
-    """A3 tile with PER-ROW cell depth (VERDICT r4 #5) — the
-    reference's TWO-SCALE tile system: 1:20k land tiles mixed with
-    coarser 1:250k marine tiles in one grid with prefix semantics
-    (/root/reference/sql/create_tiles.sql:21-90, esp. :45-63). Sparse
-    layer classes tile at a coarse depth (fewer, bigger cells — no
-    per-feature cell explosion for layers that barely overlap
-    anything), dense classes at a fine depth; the caller stamps
-    `depth_col` per row (e.g. by layer class).
-
-    Emitted quadkeys are PREFIX-COMPATIBLE across depths: a depth-d
-    key is the first d characters of every deeper key inside it, so
-    downstream prefix pruning (`cell LIKE 'prefix%'` — the reference's
-    map_tile pruning, sql/insert_difference.sql:27) and
-    startswith-joins work across mixed depths unchanged.
-
-    Physical shape matches tile_geoms: per-row independent cover +
-    clip in one mapInPandas over the scan — NO shuffle (the cover-cell
-    enumeration happens inside the kernel batch rather than as a JVM
-    explode, since the depth varies per row)."""
-    from ..cells import cell_bounds as _cb, cover as _cover
-
-    bb = with_bbox(df, geom)
-    out_schema = _schema_of(bb) + ", `cell` string"
+    Physical shape: tiling is per-row independent, so it is one
+    `mapInPandas` over the scan with NO shuffle; operators that group
+    (dissolve, cogroup) shuffle by cell themselves. Output columns are
+    built as lists and taken with one ``iloc`` per batch."""
+    out_schema = _schema_of(df, "`cell` string")
     _acc = telemetry.capture()
 
     def tile_batches(it):
-        # Columnar row assembly (VERDICT r5 #3): collect (source index,
-        # clipped geom, cell) lists and take ONE pdf.iloc[src] per
-        # batch — the tile_geoms keep-list pattern — instead of a
-        # Python dict per emitted (row, cell) pair, which dominated on
-        # dense fine-depth layers.
         for pdf in it:
-            depths = pdf[depth_col].to_numpy()
-            bxs0 = pdf["bx0"].to_numpy(dtype="float64")
-            bys0 = pdf["by0"].to_numpy(dtype="float64")
-            bxs1 = pdf["bx1"].to_numpy(dtype="float64")
-            bys1 = pdf["by1"].to_numpy(dtype="float64")
+            keys = pdf[key].to_numpy() if key else [None] * len(pdf)
             src, geoms, cells_out = [], [], []
-            for i in range(len(pdf)):
-                buf = bytes(pdf[geom].iloc[i])
+            for i, (buf, k) in enumerate(zip(pdf[geom], keys)):
+                buf = bytes(buf)
                 rings = wkb.parse_rings(buf)
-                for c in _cover(bxs0[i], bys0[i], bxs1[i], bys1[i],
-                                int(depths[i])):
-                    x0, y0, x1, y1 = _cb(c)
-                    if K.covered_by_bbox(rings, x0, y0, x1, y1):
-                        out_geom = buf
+                pts = np.concatenate(rings)
+                x0, y0 = pts.min(axis=0)
+                x1, y1 = pts.max(axis=0)
+                for c in cells_of((x0, y0, x1, y1), k):
+                    cx0, cy0, cx1, cy1 = cell_bounds(c)
+                    if cx0 <= x0 and cy0 <= y0 and x1 <= cx1 and y1 <= cy1:
+                        piece = buf
                     else:
-                        clipped = K.clip_bbox(rings, x0, y0, x1, y1)
-                        clipped = K.make_valid(clipped, grid)
+                        clipped = K.make_valid(
+                            K.clip_bbox(rings, cx0, cy0, cx1, cy1), grid)
                         if not clipped or K.area(clipped) <= 0:
                             continue
-                        out_geom = wkb.rings_wkb(clipped)
+                        piece = wkb.rings_wkb(clipped)
                     src.append(i)
-                    geoms.append(out_geom)
+                    geoms.append(piece)
                     cells_out.append(c)
             telemetry.drain(_acc)
             res = pdf.iloc[src].reset_index(drop=True)
@@ -183,86 +102,62 @@ def tile_geoms_mixed(df: DataFrame, depth_col: str = "tile_depth",
             res["cell"] = pd.Series(cells_out, dtype="object")
             yield res
 
-    return bb.mapInPandas(tile_batches, out_schema)
+    return df.mapInPandas(tile_batches, out_schema)
+
+
+def tile_geoms(df: DataFrame, depth: int, geom: str = "geom",
+               grid: float = GRID) -> DataFrame:
+    """A3 tile on the uniform depth-``depth`` grid: every row is cut by
+    the cells its bbox covers."""
+    return _tile(df, lambda bb, _: cover(*bb, depth), geom, grid)
+
+
+def tile_geoms_mixed(df: DataFrame, depth_col: str = "tile_depth",
+                     geom: str = "geom", grid: float = GRID) -> DataFrame:
+    """A3 tile with a PER-ROW depth read from ``depth_col`` — the
+    reference's two-scale tiles, 1:20k on land and 1:250k at sea
+    (sql/create_tiles.sql:45-63). The caller stamps
+    the depth per row, e.g. by layer class: sparse classes tile coarse
+    (few big cells), dense classes fine.
+
+    Quadkeys are prefix-compatible across depths: a depth-d key is the
+    first d characters of every deeper key inside it, so prefix pruning
+    (`cell LIKE 'prefix%'`, the reference's map_tile pruning,
+    sql/insert_difference.sql:27) and prefix joins work unchanged."""
+    return _tile(df, lambda bb, d: cover(*bb, int(d)), geom, grid,
+                 key=depth_col)
 
 
 def tile_geoms_grid(df: DataFrame, fine_cells: set, coarse_depth: int,
                     fine_depth: int, geom: str = "geom",
                     grid: float = GRID) -> DataFrame:
-    """A3 tile against a MIXED SPATIAL PARTITION (VERDICT r5 #4 — the
-    reference's actual two-scale grid semantics, /root/reference/sql/
-    create_tiles.sql:21-90): the grid itself is a partition of space —
-    coarse depth-``coarse_depth`` cells everywhere EXCEPT the cells
-    named in ``fine_cells`` (coarse quadkeys), which are refined to
-    depth-``fine_depth`` subcells. The reference keeps 1:250k tiles in
-    marine areas and 1:20k tiles on land; here ``fine_cells`` is
-    derived from the layer-class / boundary data (see
-    plans.pipeline.process_vector), so every feature — whatever layer —
-    is cut by the SAME grid, and cell keys align across all tables for
-    downstream cogroups exactly like the reference's map_tile.
-
-    Emitted keys are prefix-compatible across the two depths (a coarse
-    key is the prefix of every fine key inside it) and the partition
-    property guarantees a coarse key and a fine key never overlap
-    spatially.
-
-    Physical shape matches tile_geoms: per-row cover + clip in one
-    mapInPandas over the scan, NO shuffle; ``fine_cells`` rides the
-    task closure as a broadcast-sized set (|cells| <= 4^coarse_depth).
-    """
-    from ..cells import cell_bounds as _cb, cover as _cover
-
-    bb = with_bbox(df, geom)
-    out_schema = _schema_of(bb) + ", `cell` string"
-    gcol = geom
+    """A3 tile against a MIXED SPATIAL PARTITION (the reference's
+    two-scale grid, sql/create_tiles.sql:21-90):
+    depth-``coarse_depth`` cells everywhere EXCEPT the coarse quadkeys
+    in ``fine_cells``, which are refined to depth-``fine_depth``
+    subcells. ``fine_cells`` is derived from the layer-class / boundary
+    data (see plans.pipeline.process_vector), so every feature,
+    whatever its layer, is cut by the SAME grid and cell keys align
+    across tables for downstream cogroups, like the reference's
+    map_tile. A coarse key is the prefix of every fine key inside it,
+    and the two never overlap spatially. ``fine_cells`` rides the task
+    closure (|cells| <= 4^coarse_depth)."""
     fine_set = frozenset(fine_cells)
-    _acc = telemetry.capture()
 
-    def tile_batches(it):
-        for pdf in it:
-            bxs0 = pdf["bx0"].to_numpy(dtype="float64")
-            bys0 = pdf["by0"].to_numpy(dtype="float64")
-            bxs1 = pdf["bx1"].to_numpy(dtype="float64")
-            bys1 = pdf["by1"].to_numpy(dtype="float64")
-            src, geoms, cells_out = [], [], []
-            for i in range(len(pdf)):
-                buf = bytes(pdf[gcol].iloc[i])
-                rings = wkb.parse_rings(buf)
-                cells = []
-                for c in _cover(bxs0[i], bys0[i], bxs1[i], bys1[i],
-                                coarse_depth):
-                    if c in fine_set:
-                        # refine: fine covering cells inside this
-                        # coarse cell = cover of the bbox clamped to
-                        # the cell (half-open cover keeps the clamp
-                        # from leaking into neighbours)
-                        cx0, cy0, cx1, cy1 = _cb(c)
-                        cells.extend(_cover(
-                            max(bxs0[i], cx0), max(bys0[i], cy0),
-                            min(bxs1[i], cx1), min(bys1[i], cy1),
-                            fine_depth))
-                    else:
-                        cells.append(c)
-                for c in cells:
-                    x0, y0, x1, y1 = _cb(c)
-                    if K.covered_by_bbox(rings, x0, y0, x1, y1):
-                        out_geom = buf
-                    else:
-                        clipped = K.clip_bbox(rings, x0, y0, x1, y1)
-                        clipped = K.make_valid(clipped, grid)
-                        if not clipped or K.area(clipped) <= 0:
-                            continue
-                        out_geom = wkb.rings_wkb(clipped)
-                    src.append(i)
-                    geoms.append(out_geom)
-                    cells_out.append(c)
-            telemetry.drain(_acc)
-            res = pdf.iloc[src].reset_index(drop=True)
-            res[gcol] = pd.Series(geoms, dtype="object")
-            res["cell"] = pd.Series(cells_out, dtype="object")
-            yield res
+    def cells_of(bb, _):
+        out = []
+        for c in cover(*bb, coarse_depth):
+            if c not in fine_set:
+                out.append(c)
+                continue
+            # the fine cells inside c: cover of the bbox clamped to c
+            # (the half-open cover keeps the clamp out of neighbours)
+            cx0, cy0, cx1, cy1 = cell_bounds(c)
+            out += cover(max(bb[0], cx0), max(bb[1], cy0),
+                         min(bb[2], cx1), min(bb[3], cy1), fine_depth)
+        return out
 
-    return bb.mapInPandas(tile_batches, out_schema)
+    return _tile(df, cells_of, geom, grid)
 
 
 # -------------------------------------------------------- dissolve
@@ -376,11 +271,9 @@ def clip(df_a: DataFrame, df_b: DataFrame, depth: int,
     from."""
     if fine_cells is not None:
         a = tile_geoms_grid(df_a, fine_cells, coarse_depth, depth,
-                            geom, grid) \
-            .drop("bx0", "by0", "bx1", "by1")
+                            geom, grid)
     else:
-        a = tile_geoms(df_a, depth, geom, grid) \
-            .drop("bx0", "by0", "bx1", "by1")
+        a = tile_geoms(df_a, depth, geom, grid)
     if b_tiled:
         b = df_b.select("cell", F.col(geom).alias("_bgeom"))
     else:
@@ -590,8 +483,8 @@ def planarize(designations: DataFrame, boundary: DataFrame,
         tagged += [(nd + j, wkb.parse_rings(bytes(buf)))
                    for j, buf in enumerate(b_pdf["_bgeom"])]
         faces = K.planarize(tagged, grid)
-        # COLUMNIZED face assembly (OPTIMIZATION r7 — the r5
-        # tile_geoms_mixed pattern, VERDICT r5 #3, applied here): an
+        # COLUMNIZED face assembly (the column-list pattern of
+        # `_tile`): an
         # arrangement of n overlapping features yields O(n^2) faces
         # per cell, and the old path paid pandas .iloc + a Python
         # dict + a per-face lambda sort for each. Extract the

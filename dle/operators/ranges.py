@@ -8,8 +8,8 @@ covering TIME BUCKETS (bounded by interval_length / bucket + 1 rows
 per interval), points map to their single bucket, and the join is a
 hash equi-join on bucket (+ any equi-keys) with the exact BETWEEN as
 a post-filter. A point lives in exactly one bucket, so each matching
-pair survives exactly once — no dedupe shuffle (same ownership
-argument as the PIP cell join, spatial_join.py:18-22)."""
+pair survives exactly once — no dedupe shuffle (same argument as the
+PIP cell join, spatial_join.py:18-19)."""
 
 from __future__ import annotations
 

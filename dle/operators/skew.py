@@ -109,9 +109,9 @@ def subdivide(df: DataFrame, max_vertices: int = 128,
         return out
 
     def batches(it):
-        # Columnar row assembly (VERDICT r5 #3): one pdf.iloc[src] per
-        # batch instead of a per-part Python dict (the tile_geoms
-        # keep-list pattern).
+        # Columnar row assembly: one pdf.iloc[src] per batch instead
+        # of a per-part Python dict (the column-list pattern of
+        # overlay._tile).
         for pdf in it:
             src, geoms, parts = [], [], []
             for i in range(len(pdf)):

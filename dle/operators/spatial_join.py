@@ -16,10 +16,7 @@ Spark-native recipe (SURVEY.md §2 E1/E2/A10) is a TWO-PHASE join:
      pandas UDF (geom.kernel).
 
 Dedupe discipline: a point lies in exactly one cell, so point-in-polygon
-pairs are emitted exactly once (no distinct needed). Rect-rect pairs can
-match in several cells; they are assigned to the ownership cell — the
-cell containing the intersection bbox's min corner — so each pair
-survives in exactly one task with NO extra shuffle (SURVEY §2 E1 note).
+pairs are emitted exactly once (no distinct needed).
 """
 
 from __future__ import annotations
@@ -395,41 +392,6 @@ def _pip_polygon_precedence_pairs(points: DataFrame, polys: DataFrame,
     return (points.join(won, point_keys, "left")
             .select(*points.columns,
                     f"win_{order_col}", f"win_{tiebreak}"))
-
-
-def rect_rect_join(a: DataFrame, b: DataFrame, depth: int,
-                   suffix: str = "_b",
-                   broadcast_b: bool = True) -> DataFrame:
-    """Rect-rect intersects join with cell-ownership dedupe.
-
-    The generic `intersect`/spatial-join primitive (SURVEY §2 A8/E1) on
-    the rectangle fast path. Each intersecting (a, b) pair is kept only
-    in the cell that owns the intersection bbox's min corner.
-    """
-    res = GRID_SIZE / (1 << depth)
-    n = (1 << depth) - 1
-    bc = [c for c in b.columns]
-    b2 = b.select([F.col(c).alias(c + suffix) for c in bc])
-    ae = explode_rect_cells(a, "x0", "y0", "x1", "y1", depth)
-    be = explode_rect_cells(
-        b2, f"x0{suffix}", f"y0{suffix}", f"x1{suffix}", f"y1{suffix}", depth)
-    if broadcast_b:
-        be = F.broadcast(be.drop("_cx", "_cy"))
-    j = ae.join(be, "cell")
-    ix0 = F.greatest("x0", f"x0{suffix}")
-    iy0 = F.greatest("y0", f"y0{suffix}")
-    overlap = (
-        (ix0 < F.least("x1", f"x1{suffix}"))
-        & (iy0 < F.least("y1", f"y1{suffix}"))
-    )
-    own_cx = F.expr(
-        f"least({n}, greatest(0, cast(floor((greatest(x0, x0{suffix})"
-        f" - {XMIN!r}) / {res!r}) as bigint)))")
-    own_cy = F.expr(
-        f"least({n}, greatest(0, cast(floor((greatest(y0, y0{suffix})"
-        f" - {YMIN!r}) / {res!r}) as bigint)))")
-    owned = (F.col("_cx") == own_cx) & (F.col("_cy") == own_cy)
-    return j.where(overlap & owned).drop("_cx", "_cy")
 
 
 def precedence_resolve(pairs: DataFrame, point_keys: list[str],

@@ -53,8 +53,7 @@ def build_boundary(spark: SparkSession, pieces: DataFrame,
             buf = buffer_geoms(pieces.where(F.col("cls") == cls), r)
             rest = rest.unionByName(buf)
         pieces = rest
-    tiled = tile_geoms(pieces, depth) \
-        .drop("bx0", "by0", "bx1", "by1")
+    tiled = tile_geoms(pieces, depth)
     dis = dissolve(tiled, ["cell", "cls", "process_order"] + keys)
     sub = subdivide(dis, max_vertices=max_vertices)
     return insert_difference_fused(sub.drop("part_i"))

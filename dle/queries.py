@@ -298,8 +298,9 @@ def o_spatial_pip_mixed_join():
 
 def _o_tile_counts_at(depth: int, pred: str) -> str:
     """Closed-form covering-cell enumeration at one depth, mirroring
-    cells.cover exactly (HALF-OPEN upper bound: a rect ending on a
-    cell boundary does not enter the next cell)."""
+    cells.cover (HALF-OPEN upper bound: a rect ending on a cell
+    boundary does not enter the next cell). Layer rects have positive
+    width and height, so cover's zero-extent guard never applies."""
     res = GRID_SIZE / (1 << depth)
     n = (1 << depth) - 1
     qk = sql_quadkey("cx.i", "cy.i", depth, "duckdb")

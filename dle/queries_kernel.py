@@ -372,7 +372,7 @@ def _qa_world(spark, sf):
         (F.col("feat_id") % 6).cast("int").alias("forest_restriction"),
         ((F.col("feat_id") + 1) % 6).cast("int").alias("og_restriction"),
         ((F.col("feat_id") + 2) % 6).cast("int").alias("mine_restriction"))
-    tiled = tile_geoms(b, DEFAULT_DEPTH).drop("bx0", "by0", "bx1", "by1")
+    tiled = tile_geoms(b, DEFAULT_DEPTH)
     bnd = spark.createDataFrame(
         [(bytearray(W.polygon_wkb([np.array(
             [[QB[0], QB[1]], [QB[2], QB[1]], [QB[2], QB[3]],

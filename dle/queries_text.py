@@ -1713,11 +1713,6 @@ def _spark_dot(sub: str, lits: list) -> str:
             " (acc, x) -> acc + x)")
 
 
-def _duck_dot(sub: str, lits: list) -> str:
-    arr = "[" + ", ".join(repr(x) for x in lits) + "]"
-    return f"list_dot_product({sub}, {arr})"
-
-
 def q_ann_pq_topk(spark, sf):
     """Product-quantization ANN (the IVF-PQ MEMORY path the 100-TB
     story needs: a 64-dim float corpus compresses to PQ_M=8 one-byte

@@ -239,8 +239,9 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 # partition probe + 10 temp-view swaps — measured ~1.0 s of pure
 # driver-side latency per call at sf0.1, ~30 s across the 30-query
 # bench suite. Registration is CATALOG setup, not query work: memoize
-# it per (session, dir) with a parquet (size, mtime_ns) fingerprint so
-# regenerated fixtures self-invalidate (the checkpoint-root rule,
+# it per (session, dir) with a parquet (size, mtime_ns, inode, ctime_ns)
+# fingerprint so regenerated fixtures self-invalidate: a rewrite moves
+# ctime even when it keeps size and mtime (the checkpoint-root rule,
 # CLAUDE.md). NO query RESULTS are cached anywhere — memoized view
 # DataFrames are lazy plans; every action recomputes from the parquet.
 _REGISTERED: dict = {}  # id(spark) -> (spark, sf_dir, fingerprint)
@@ -255,7 +256,8 @@ def _dir_fingerprint(sf_dir: str) -> str:
         p = Path(f"{sf_dir}/{t}.parquet")
         if p.exists():
             st = p.stat()
-            parts.append(f"{t}:{st.st_size}:{st.st_mtime_ns}")
+            parts.append(f"{t}:{st.st_size}:{st.st_mtime_ns}"
+                         f":{st.st_ino}:{st.st_ctime_ns}")
     return "|".join(parts)
 
 

@@ -49,6 +49,41 @@ def test_cover_halfopen_on_boundary():
     assert cov == [cells.point_cell(x0 + 1, y0 + 1, 4)]
 
 
+def test_cover_equals_brute_force():
+    """cover lists exactly the cells whose interior meets the bbox. A
+    zero-extent axis on a cell boundary meets no interior; cover gives
+    it the min-corner cell, i.e. the cells met by the bbox widened to
+    the max side."""
+    rng = np.random.default_rng(5)
+    quarter = int(GRID_SIZE) >> 7       # a quarter of a depth-5 cell
+    for depth in range(1, 6):
+        n = 1 << depth
+        keys = [cells.quadkey(cx, cy, depth)
+                for cx in range(n) for cy in range(n)]
+        bounds = {k: cells.cell_bounds(k) for k in keys}
+        for i in range(300):
+            if i % 2:    # on the quarter-cell lattice: boundaries often
+                u = rng.integers(0, 1 << 7, 4) * quarter
+            else:
+                u = rng.integers(0, int(GRID_SIZE), 4)
+            x0, x1 = sorted(float(v) for v in u[:2])
+            y0, y1 = sorted(float(v) for v in u[2:])
+            if i % 5 == 0:
+                x1 = x0
+            if i % 7 == 0:
+                y1 = y0
+            x0, x1, y0, y1 = x0 + XMIN, x1 + XMIN, y0 + YMIN, y1 + YMIN
+            wx1 = x1 + 0.5 if x1 == x0 else x1
+            wy1 = y1 + 0.5 if y1 == y0 else y1
+            want = {k for k, (a, b, c, d) in bounds.items()
+                    if x0 < c and wx1 > a and y0 < d and wy1 > b}
+            got = cells.cover(x0, y0, x1, y1, depth)
+            assert len(got) == len(set(got))
+            assert set(got) == want, (depth, x0, y0, x1, y1)
+            if x1 == x0 and y1 == y0:
+                assert got == [cells.point_cell(x0, y0, depth)]
+
+
 def test_numpy_matches_scalar():
     rng = np.random.default_rng(3)
     xs = XMIN + rng.uniform(0, 1_500_000, 500)

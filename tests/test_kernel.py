@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from dle.geom import kernel as K
 from dle.geom import wkb
@@ -38,10 +38,30 @@ rect_st = st.tuples(
 ).map(lambda t: (t[0], t[1], t[0] + t[2], t[1] + t[3]))
 
 
+# 25 overlapping rects over a shared x-range: 50 active edges in the
+# slab [24, 200], past the 48 at which `_sweep` switches its predicate
+# emission to the vectorized (fat-slab) form
+FAT_SLAB = [(i, 12 * i, 200 + i, 12 * i + 20) for i in range(25)]
+
+
+def _max_active_edges(tagged, grid):
+    """Most edges active in one slab of the sweep (rectilinear input:
+    slab bounds are the edge endpoints)."""
+    x0, _, x1, _, _, _ = K._edges(tagged, grid)
+    xs = np.unique(np.concatenate([x0, x1]))
+    xm = 0.5 * (xs[:-1] + xs[1:])
+    return int(((x0[None, :] < xm[:, None])
+                & (xm[:, None] < x1[None, :])).sum(axis=1).max())
+
+
 @settings(max_examples=40, deadline=None)
 @given(st.lists(rect_st, min_size=1, max_size=12))
+@example(FAT_SLAB)
 def test_union_area_matches_grid_oracle(rects):
     ring_lists = [K.rect_rings(*r) for r in rects]
+    if rects == FAT_SLAB:
+        merged = [r for rl in ring_lists for r in rl]
+        assert _max_active_edges([(0, merged)], 1.0) >= 48
     got = K.union_all_area(ring_lists, grid=1.0)
     want = grid_union_area(rects)
     assert got == pytest.approx(want, rel=1e-9)
@@ -50,10 +70,13 @@ def test_union_area_matches_grid_oracle(rects):
 @settings(max_examples=40, deadline=None)
 @given(st.lists(rect_st, min_size=1, max_size=6),
        st.lists(rect_st, min_size=1, max_size=6))
+@example(FAT_SLAB, [(100, 0, 300, 150), (50, 200, 120, 400)])
 def test_boolean_identities(ra, rb):
     a = [r for rect in ra for r in K.rect_rings(*rect)]
     b = [r for rect in rb for r in K.rect_rings(*rect)]
     g = 1.0
+    if ra == FAT_SLAB:
+        assert _max_active_edges([(0, a), (1, b)], g) >= 48
     A = K.boolean_area(a, [], "a", g)
     B = K.boolean_area(b, [], "a", g)
     U = K.boolean_area(a, b, "or", g)

@@ -74,12 +74,27 @@ def test_dedup_minhash_single_hash_per_token(spark):
 def test_tile_geoms_has_no_shuffle(spark):
     """VERDICT r1 #4: tiling is per-row independent — the tile-only
     path must not exchange the fact table; only ops that group
-    (dissolve/cogroup) may shuffle."""
+    (dissolve/cogroup) may shuffle. Each of the three grid specs runs
+    as ONE Python node: the scan-side tiler, with no bbox UDF pass."""
+    from pyspark.sql import functions as F
+
     from dle import datagen
-    from dle.operators.overlay import tile_geoms
-    lay = datagen.layers_poly(spark, SF)
-    plan = _plan(tile_geoms(lay, 3))
-    assert "Exchange hashpartitioning" not in plan
+    from dle.operators.overlay import (
+        tile_geoms, tile_geoms_grid, tile_geoms_mixed,
+    )
+    # the fixture builds its WKB in a pandas UDF: tile a Python-free
+    # copy so the tiler is the only Python node in the plan
+    poly = datagen.layers_poly(spark, SF)
+    lay = spark.createDataFrame(poly.collect(), poly.schema)
+    mixed = lay.withColumn(
+        "tile_depth", F.when(F.col("feat_id") % 2 == 1, F.lit(3))
+        .otherwise(F.lit(5)).cast("int"))
+    for df in (tile_geoms(lay, 3), tile_geoms_mixed(mixed),
+               tile_geoms_grid(lay, {"00", "03", "12"}, 2, 4)):
+        plan = _plan(df)
+        assert "Exchange hashpartitioning" not in plan
+        assert plan.count("MapInPandas") == 1, plan
+        assert "EvalPython" not in plan, plan
 
 
 def test_polygon_fold_has_no_point_exchange(spark):

@@ -66,6 +66,20 @@ def test_headline_names_registered():
     assert set(bench.HEADLINE) <= set(q.queries())
 
 
+def test_check_oracle_rejects_unknown_names():
+    """A typo'd gate name must fail the CLI, not match nothing and
+    report 0 failures."""
+    import subprocess
+    import sys
+    tool = Path(__file__).resolve().parents[1] / "tools" / "check_oracle.py"
+    r = subprocess.run(
+        [sys.executable, str(tool), SF, "spatial_pip_join", "no_such_query"],
+        capture_output=True, text=True, timeout=120)
+    assert r.returncode == 1
+    assert "unknown query name(s): no_such_query" in r.stderr
+    assert "failures" not in r.stdout
+
+
 def test_pip_join_partition_invariance(spark):
     df = q.q_spatial_pip_join(spark, SF)
     a = sorted(map(tuple, df.coalesce(1).collect()))

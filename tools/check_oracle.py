@@ -6,6 +6,8 @@ compares them with dle.resultcheck.compare: row count, sorted column
 names, column types and an order-insensitive value hash.
 
     python tools/check_oracle.py [sf_dir] [name ...]
+
+An unknown name exits 1 before Spark starts.
 """
 
 from __future__ import annotations
@@ -24,6 +26,10 @@ def main():
     sf = sys.argv[1] if len(sys.argv) > 1 and "/" in sys.argv[1] \
         else "/root/testdata/sf0.01"
     only = [a for a in sys.argv[1:] if "/" not in a]
+    oracles = entrymod.oracle_sql()
+    unknown = sorted(set(only) - set(oracles))
+    if unknown:
+        raise SystemExit(f"unknown query name(s): {', '.join(unknown)}")
     spark = get_spark("oracle-check", master="local[8]",
                       shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -31,7 +37,7 @@ def main():
 
     qs = entrymod.queries()
     fails = []
-    for name, sql in entrymod.oracle_sql().items():
+    for name, sql in oracles.items():
         if only and name not in only:
             continue
         try:
