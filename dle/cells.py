@@ -12,10 +12,15 @@ prune files when data is written sorted/partitioned by ``cell``.
 Three synchronized implementations:
   * scalar Python (`point_cell`, `cover`) — driver-side planning/tests
   * vectorized numpy (`point_cell_np`) — inside pandas UDFs
-  * SQL expression emitters (`sql_point_cell`, …) parameterized by
-    dialect ("spark" | "duckdb") so the DuckDB oracle computes the
-    IDENTICAL cell assignment the engine computes (north-rule "tile
-    assignments match").
+  * SQL expression emitters (`sql_point_cell`, `sql_cover_xy`, …)
+    parameterized by dialect ("spark" | "duckdb") so the DuckDB oracle
+    computes the IDENTICAL cell assignment the engine computes
+    (north-rule "tile assignments match").
+
+`cover` and `sql_cover_xy` are the one bbox -> cells rule: every
+feature-side fan-out (tiler, polygon fold, cell joins, tile-count
+oracles) lists its cells through them. The kNN pruning index alone
+keeps a closed range (see `operators.knn._cell_index`).
 """
 
 from __future__ import annotations
@@ -119,16 +124,32 @@ def _shr(expr: str, bits: int, dialect: str) -> str:
     return f"(({expr}) >> {bits})"
 
 
-def sql_cell_xy(x_expr: str, y_expr: str, depth: int) -> tuple[str, str]:
-    """Dialect-neutral integer cell coords (floor/least/greatest are
-    identical in Spark SQL and DuckDB)."""
+def _sql_idx(v: str, origin: float, depth: int, high: bool = False) -> str:
+    """Clamped cell index of coordinate ``v``: the floor, or for a
+    half-open high end ``ceil - 1``."""
     res = GRID_SIZE / (1 << depth)
     n = (1 << depth) - 1
-    cx = (f"least({n}, greatest(0, "
-          f"cast(floor((({x_expr}) - {XMIN!r}) / {res!r}) as bigint)))")
-    cy = (f"least({n}, greatest(0, "
-          f"cast(floor((({y_expr}) - {YMIN!r}) / {res!r}) as bigint)))")
-    return cx, cy
+    fn, minus = ("ceil", " - 1") if high else ("floor", "")
+    return (f"least({n}, greatest(0, "
+            f"cast({fn}((({v}) - {origin!r}) / {res!r}) as bigint){minus}))")
+
+
+def sql_cell_xy(x_expr: str, y_expr: str, depth: int) -> tuple[str, str]:
+    """Dialect-neutral integer cell coords (floor/ceil/least/greatest
+    are identical in Spark SQL and DuckDB)."""
+    return _sql_idx(x_expr, XMIN, depth), _sql_idx(y_expr, YMIN, depth)
+
+
+def sql_cover_xy(x0: str, y0: str, x1: str, y1: str,
+                 depth: int) -> tuple[str, str, str, str]:
+    """Inclusive index bounds (cx0, cx1, cy0, cy1) of `cover`'s cells
+    for the bbox expressions: floor at the low end, ``ceil(...) - 1``
+    at the high end, clamped to the grid, and the high end never below
+    the low one (cover's zero-extent guard)."""
+    cx0, cy0 = sql_cell_xy(x0, y0, depth)
+    cx1 = _sql_idx(x1, XMIN, depth, high=True)
+    cy1 = _sql_idx(y1, YMIN, depth, high=True)
+    return cx0, f"greatest({cx1}, {cx0})", cy0, f"greatest({cy1}, {cy0})"
 
 
 def sql_quadkey(cx_expr: str, cy_expr: str, depth: int, dialect: str) -> str:

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import BinaryType
 
 from . import sqlgen
-from .config import XMIN, XMAX, YMIN, YMAX
+from .config import XMIN, YMIN
 from .geom import wkb
 
 

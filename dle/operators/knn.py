@@ -62,9 +62,13 @@ def _cell_index(fx0, fy0, fx1, fy1, depth: int, ring: int):
     """The pruning index (cells, indptr, ranks, depth, R²), R = ring *
     res_at(depth): a CSR map from each occupied cell id
     ``cx * 2^depth + cy`` (ascending) to the ascending feature ranks
-    whose bbox dilated by R covers it. Cell ranges use the floor/clamp
-    of `explode_rect_cells`, so a feature NOT listed for a point's cell
-    is farther than R from the point."""
+    whose bbox dilated by R covers it. Cell ranges are CLOSED (floor
+    at both ends, clamped), not cells.cover's half-open rule: the
+    completeness bound (k-th d2 <= R²) needs a point exactly R from a
+    feature to list that feature, and a dilated bbox ending on a cell
+    edge would drop the next cell under the half-open rule. So a
+    feature NOT listed for a point's cell is farther than R from the
+    point."""
     R = ring * res_at(depth)
     side = 1 << depth
     ax, ay = cell_xy_np(fx0 - R, fy0 - R, depth)

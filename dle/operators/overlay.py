@@ -61,7 +61,8 @@ def _tile(df: DataFrame, cells_of, geom: str, grid: float,
     input columns plus ``cell``.
 
     Per row it parses the WKB once, takes the bbox from the rings and
-    lists the row's cells with ``cells_of(bbox, row[key])``. A piece
+    lists the row's cells with ``cells_of(bbox, row[key])``. An empty
+    geometry gets no cell, as ``ST_Intersects`` with it is false. A piece
     whose bbox lies inside its cell passes through unclipped (the
     coveredby fastpath, sql/tile.sql:43-47); any other is clipped to
     the cell, repaired, and kept only if it has area.
@@ -80,6 +81,8 @@ def _tile(df: DataFrame, cells_of, geom: str, grid: float,
             for i, (buf, k) in enumerate(zip(pdf[geom], keys)):
                 buf = bytes(buf)
                 rings = wkb.parse_rings(buf)
+                if not rings:
+                    continue  # an empty geometry meets no cell
                 pts = np.concatenate(rings)
                 x0, y0 = pts.min(axis=0)
                 x1, y1 = pts.max(axis=0)

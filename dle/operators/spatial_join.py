@@ -23,8 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..cells import sql_cell_xy, sql_quadkey
-from ..config import GRID_SIZE, XMIN, YMIN
+from ..cells import sql_cell_xy, sql_cover_xy, sql_quadkey
 
 # Row cap for a dimension table collected to the driver and broadcast
 # (the reference registry is 42 layers / thousands of features).
@@ -36,65 +35,66 @@ def _cell_col(x_expr: str, y_expr: str, depth: int) -> Column:
     return F.expr(sql_quadkey(cx, cy, depth, "spark"))
 
 
+def _in_bbox(px: str, py: str, f: str = "") -> str:
+    """The half-open containment test [x0,x1) x [y0,y1) of a point in
+    the bbox columns of `f` (a struct prefix like ``"f."``, or none)."""
+    return (f"{px} >= {f}x0 and {px} < {f}x1"
+            f" and {py} >= {f}y0 and {py} < {f}y1")
+
+
 def with_point_cell(df: DataFrame, x: str, y: str, depth: int,
                     out: str = "cell") -> DataFrame:
     """Assign each point its quadkey cell (pure JVM expression)."""
     return df.withColumn(out, _cell_col(x, y, depth))
 
 
-def explode_rect_cells(df: DataFrame, x0: str, y0: str, x1: str, y1: str,
-                       depth: int, out: str = "cell") -> DataFrame:
-    """One row per (feature, covering cell): `explode(cover_cells(bbox))`.
+def with_cover_cells(df: DataFrame, depth: int) -> DataFrame:
+    """One row per (feature, covering cell) of the bbox columns
+    x0, y0, x1, y1: `explode(cells.cover(bbox))` as one plan column,
+    ``cell``, through `cells.sql_cover_xy`.
 
     Mirrors the reference's tiling of every layer before joins
     (/root/reference/sql/tile.sql:20-57) — but lazily, as plan columns,
     not a materialized tile table.
     """
-    res = GRID_SIZE / (1 << depth)
-    n = (1 << depth) - 1
+    cx0, cx1, cy0, cy1 = sql_cover_xy("x0", "y0", "x1", "y1", depth)
+    qk = sql_quadkey("cx", "cy", depth, "spark")
+    cells = (f"flatten(transform(sequence({cy0}, {cy1}), cy -> "
+             f"transform(sequence({cx0}, {cx1}), cx -> {qk})))")
+    return df.withColumn("cell", F.explode(F.expr(cells)))
 
-    def idx(v: str, origin: float) -> str:
-        return (f"least({n}, greatest(0, "
-                f"cast(floor((({v}) - {origin!r}) / {res!r}) as bigint)))")
 
-    df = (
-        df.withColumn("_cx0", F.expr(idx(x0, XMIN)))
-          .withColumn("_cx1", F.expr(idx(x1, XMIN)))
-          .withColumn("_cy0", F.expr(idx(y0, YMIN)))
-          .withColumn("_cy1", F.expr(idx(y1, YMIN)))
-          .withColumn("_cx", F.explode(F.expr("sequence(_cx0, _cx1)")))
-          .withColumn("_cy", F.explode(F.expr("sequence(_cy0, _cy1)")))
-          .withColumn(out, F.expr(sql_quadkey("_cx", "_cy", depth, "spark")))
-    )
-    return df.drop("_cx0", "_cx1", "_cy0", "_cy1")
+def _cell_join(points: DataFrame, feats: DataFrame, depths: list[int],
+               px: str, py: str, broadcast: bool = True) -> DataFrame:
+    """The one cell equi-join of the point pair joins: each point takes
+    its quadkey at every depth in `depths`, joins the cell-keyed
+    `feats` (broadcast: the dimension side), and keeps the pairs whose
+    feature bbox contains it."""
+    cells = [_cell_col(px, py, d) for d in sorted(set(depths))]
+    p = points.withColumn(
+        "cell", cells[0] if len(cells) == 1 else F.explode(F.array(*cells)))
+    f = F.broadcast(feats) if broadcast else feats
+    return p.join(f, "cell").where(F.expr(_in_bbox(px, py)))
 
 
 def pip_join_rects(points: DataFrame, rects: DataFrame, depth: int,
-                   px: str = "px", py: str = "py",
-                   broadcast_rects: bool = True) -> DataFrame:
-    """Point-in-rectangle spatial join (half-open [x0,x1) x [y0,y1)).
+                   px: str = "px", py: str = "py") -> DataFrame:
+    """Point-in-rectangle spatial join (half-open [x0,x1) x [y0,y1)):
+    pip_join_mixed's join at the single depth, over the rects' cover
+    cells.
 
-    Returns points columns + rect columns for every containing rect.
-    `broadcast_rects=True` is the dimension-layer case (42 designation
-    layers vs 10^12 pages): the exploded rect side is broadcast so the
-    petabyte point side never shuffles.
+    Returns `cell` + points columns + rect columns for every containing
+    rect. The exploded rect side is broadcast — the dimension-layer case
+    (42 designation layers vs 10^12 pages): the point side never
+    shuffles.
     """
-    r = explode_rect_cells(rects, "x0", "y0", "x1", "y1", depth)
-    if broadcast_rects:
-        r = F.broadcast(r)
-    p = with_point_cell(points, px, py, depth)
-    cond = (
-        (F.col(px) >= F.col("x0")) & (F.col(px) < F.col("x1"))
-        & (F.col(py) >= F.col("y0")) & (F.col(py) < F.col("y1"))
-    )
-    joined = p.join(r, "cell").where(cond).drop("_cx", "_cy")
-    return joined
+    return _cell_join(points, with_cover_cells(rects, depth), [depth],
+                      px, py)
 
 
 def pip_join_mixed(points: DataFrame, tiled: DataFrame,
                    depths: list[int],
-                   px: str = "px", py: str = "py",
-                   broadcast_tiled: bool = True) -> DataFrame:
+                   px: str = "px", py: str = "py") -> DataFrame:
     """Point join against a MIXED-DEPTH tiled layer table (the
     two-scale grid of overlay.tile_geoms_mixed / the reference's mixed
     1:20k + 1:250k tile names, sql/create_tiles.sql:45-63): each point
@@ -107,17 +107,7 @@ def pip_join_mixed(points: DataFrame, tiled: DataFrame,
     single-depth join. The exact predicate runs on the feature's
     ORIGINAL bbox columns (x0..y1), which tile_geoms_mixed passes
     through unchanged — pure JVM codegen."""
-    cells = F.array(*[
-        _cell_col(px, py, d) for d in sorted(set(depths))])
-    p = points.withColumn("cell", F.explode(cells))
-    t = tiled
-    if broadcast_tiled:
-        t = F.broadcast(t)
-    cond = (
-        (F.col(px) >= F.col("x0")) & (F.col(px) < F.col("x1"))
-        & (F.col(py) >= F.col("y0")) & (F.col(py) < F.col("y1"))
-    )
-    return p.join(t, "cell").where(cond)
+    return _cell_join(points, tiled, depths, px, py)
 
 
 def pip_index_join(points: DataFrame, rects: DataFrame, depth: int,
@@ -141,16 +131,14 @@ def pip_index_join(points: DataFrame, rects: DataFrame, depth: int,
     are interpreted, not codegen — that trade buys removal of a
     point-count-sized exchange (same reasoning as the minhash
     signatures; see CLAUDE.md)."""
-    r = explode_rect_cells(
-        rects.select("x0", "y0", "x1", "y1", *feat_cols),
-        "x0", "y0", "x1", "y1", depth)
+    r = with_cover_cells(
+        rects.select("x0", "y0", "x1", "y1", *feat_cols), depth)
     idx = r.groupBy("cell").agg(
         F.collect_list(F.struct("x0", "y0", "x1", "y1", *feat_cols))
         .alias("_cellfeats"))
     p = with_point_cell(points, px, py, depth)
     j = p.join(F.broadcast(idx), "cell")
-    contains = (f"filter(_cellfeats, f -> {px} >= f.x0 and {px} < f.x1"
-                f" and {py} >= f.y0 and {py} < f.y1)")
+    contains = f"filter(_cellfeats, f -> {_in_bbox(px, py, 'f.')})"
     return j.withColumn("_feats", F.expr(contains)).drop("_cellfeats")
 
 
@@ -196,22 +184,16 @@ def pip_join_polygons(points: DataFrame, polys: DataFrame, depth: int,
     create_designations_planarized.sql:60-61). `polys` needs bbox
     columns (x0, y0, x1, y1) alongside the WKB `geom`.
 
-    Physical shape is IDENTICAL to pip_join_rects — cell phase on the
-    bbox cover-cells (broadcast dimension side, the point side NEVER
-    shuffles), JVM bbox prefilter in codegen — plus an exact winding
-    refine as a vectorized Arrow-batch kernel over the surviving
-    candidates only. At 100 TB the refine cost is bounded by candidate
-    pairs (bbox-filtered), not points x features, and runs scan-side
-    in the same stage as the broadcast join."""
-    r = explode_rect_cells(polys, "x0", "y0", "x1", "y1", depth)
-    if broadcast_polys:
-        r = F.broadcast(r)
-    p = with_point_cell(points, px, py, depth)
-    bbox = (
-        (F.col(px) >= F.col("x0")) & (F.col(px) < F.col("x1"))
-        & (F.col(py) >= F.col("y0")) & (F.col(py) < F.col("y1"))
-    )
-    cand = p.join(r, "cell").where(bbox).drop("_cx", "_cy")
+    It is pip_join_rects — cell phase on the bbox cover-cells
+    (broadcast dimension side, the point side NEVER shuffles), JVM bbox
+    prefilter in codegen — plus an exact winding refine as a vectorized
+    Arrow-batch kernel over the surviving candidates only. At 100 TB
+    the refine cost is bounded by candidate pairs (bbox-filtered), not
+    points x features, and runs scan-side in the same stage as the
+    broadcast join. `broadcast_polys=False` shuffles both sides by cell
+    instead (the big-dimension fallback)."""
+    cand = _cell_join(points, with_cover_cells(polys, depth), [depth],
+                      px, py, broadcast_polys)
     refine = _pip_refine_udf()
     return cand.where(refine(F.col(px), F.col(py), F.col(geom)))
 
@@ -415,16 +397,3 @@ def precedence_resolve(pairs: DataFrame, point_keys: list[str],
     cols += [F.col(f"_w.{k}").alias(k) for k in keep]
     return out.select(*point_keys, *cols)
 
-
-def restriction_max(pairs: DataFrame, point_keys: list[str],
-                    cols: tuple[str, ...] = ("forest_restriction",
-                                             "og_restriction",
-                                             "mine_restriction"),
-                    ) -> DataFrame:
-    """Max restriction per point across ALL covering features — the
-    planarize `(sort_desc(array_agg(r)))[1]` semantics
-    (/root/reference/sql/create_designations_planarized.sql:87-89),
-    with COALESCE(.,0) for uncovered handled by the caller's outer join.
-    """
-    aggs = [F.max(c).alias(f"{c}_max") for c in cols]
-    return pairs.groupBy(*point_keys).agg(*aggs)

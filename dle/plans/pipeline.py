@@ -20,6 +20,7 @@ from ..config import DEFAULT_DEPTH
 from ..operators.overlay import (
     clip, dissolve, insert_difference_fused, planarize, with_area,
 )
+from ..sqlgen import dir_fingerprint
 from .checkpoint import Manifest, prune, run_stage
 
 REG_KEYS = ["designation", "src_id", "src_name", "process_order",
@@ -97,11 +98,12 @@ def process_vector(spark: SparkSession, sf_dir: str,
         # Cluster-safe and resumable: the fold commits to reliable
         # storage through the manifest; a resume folds only the cells
         # the manifest does not hold. Every input that shapes the
-        # output must fingerprint, or a resume against different data
-        # reloads a stale stage.
+        # output must fingerprint, the parquet content included, or a
+        # resume against different data reloads a stale stage.
         designatedlands = run_stage(
             spark, Manifest(f"{ckpt_root}/manifest"), "precedence",
-            f"{sf_dir}|depth={depth}|orders={n_orders}|v3",
+            f"{sf_dir}|{dir_fingerprint(sf_dir)}|depth={depth}"
+            f"|orders={n_orders}|v3",
             precedence, ckpt_root)
 
     # A7 planarize.

@@ -17,11 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import sqlgen
-from .cells import sql_point_cell, sql_quadkey
-from .config import DEFAULT_DEPTH, GRID_SIZE, XMIN, YMIN
+from .cells import sql_cover_xy, sql_point_cell, sql_quadkey
+from .config import DEFAULT_DEPTH
 from .operators.spatial_join import (
-    explode_rect_cells, pip_index_join, pip_join_rects,
-    precedence_resolve, restriction_max, with_point_cell,
+    pip_index_join, pip_join_rects, with_cover_cells, with_point_cell,
 )
 from .sqlgen import BX0, BX1, BY0, BY1, preamble, register_tables
 
@@ -116,8 +115,7 @@ def q_spatial_restriction_max(spark, sf):
     """Max restriction level per point across ALL covering layers — the
     planarize (sort_desc(array_agg(r)))[1] semantics (F4). IN-SCAN
     form: three array_max folds in the point scan, zero point-side
-    exchange (the groupBy-pairs form is still exercised through
-    operators.spatial_join.restriction_max in pytest)."""
+    exchange."""
     j = _pip_folded(spark, sf)
     maxes = [
         F.expr(f"array_max(transform(_feats, f -> f.{c}))")
@@ -211,29 +209,12 @@ def o_spatial_clip_area_ha():
 def q_spatial_tile_feature_counts(spark, sf):
     """Per-cell feature counts — the tile op's work histogram (A3); also
     the skew histogram that drives salting decisions."""
-    lay = _layers(spark, sf)
-    e = explode_rect_cells(lay, "x0", "y0", "x1", "y1", D)
+    e = with_cover_cells(_layers(spark, sf), D)
     return e.groupBy("cell").agg(F.count(F.lit(1)).alias("n_feats"))
 
 
 def o_spatial_tile_feature_counts():
-    res = GRID_SIZE / (1 << D)
-    n = (1 << D) - 1
-    qk = sql_quadkey("cx.i", "cy.i", D, "duckdb")
-    sx = sqlgen.series(1 << D, "cx", "i", "duckdb")
-    sy = sqlgen.series(1 << D, "cy", "i", "duckdb")
-    return (preamble("duckdb", pages=False) + f"""
- select {qk} as cell, cast(count(*) as bigint) as n_feats
- from layers, {sx}, {sy}
- where cx.i >= least({n}, greatest(0,
-         cast(floor((x0 - {XMIN!r}) / {res!r}) as bigint)))
-   and cx.i <= least({n}, greatest(0,
-         cast(floor((x1 - {XMIN!r}) / {res!r}) as bigint)))
-   and cy.i >= least({n}, greatest(0,
-         cast(floor((y0 - {YMIN!r}) / {res!r}) as bigint)))
-   and cy.i <= least({n}, greatest(0,
-         cast(floor((y1 - {YMIN!r}) / {res!r}) as bigint)))
- group by 1""")
+    return preamble("duckdb", pages=False) + _o_tile_counts_at(D, "true")
 
 
 def q_spatial_tile_mixed_counts(spark, sf):
@@ -297,12 +278,10 @@ def o_spatial_pip_mixed_join():
 
 
 def _o_tile_counts_at(depth: int, pred: str) -> str:
-    """Closed-form covering-cell enumeration at one depth, mirroring
-    cells.cover (HALF-OPEN upper bound: a rect ending on a cell
-    boundary does not enter the next cell). Layer rects have positive
-    width and height, so cover's zero-extent guard never applies."""
-    res = GRID_SIZE / (1 << depth)
-    n = (1 << depth) - 1
+    """Closed-form covering-cell enumeration at one depth over the
+    layers matching `pred`: the grid-index series joined on
+    cells.sql_cover_xy's ranges, the rule of cells.cover."""
+    cx0, cx1, cy0, cy1 = sql_cover_xy("x0", "y0", "x1", "y1", depth)
     qk = sql_quadkey("cx.i", "cy.i", depth, "duckdb")
     sx = sqlgen.series(1 << depth, "cx", "i", "duckdb")
     sy = sqlgen.series(1 << depth, "cy", "i", "duckdb")
@@ -310,14 +289,8 @@ def _o_tile_counts_at(depth: int, pred: str) -> str:
  select {qk} as cell, cast(count(*) as bigint) as n_feats
  from layers, {sx}, {sy}
  where {pred}
-   and cx.i >= least({n}, greatest(0,
-         cast(floor((x0 - {XMIN!r}) / {res!r}) as bigint)))
-   and cx.i <= least({n}, greatest(0,
-         cast(ceil((x1 - {XMIN!r}) / {res!r}) as bigint) - 1))
-   and cy.i >= least({n}, greatest(0,
-         cast(floor((y0 - {YMIN!r}) / {res!r}) as bigint)))
-   and cy.i <= least({n}, greatest(0,
-         cast(ceil((y1 - {YMIN!r}) / {res!r}) as bigint) - 1))
+   and cx.i between {cx0} and {cx1}
+   and cy.i between {cy0} and {cy1}
  group by 1"""
 
 

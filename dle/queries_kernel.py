@@ -616,16 +616,13 @@ def q_pipeline_resume_rollup(spark, sf, n_orders: int = 8):
 
     b = datagen.bands_1d(spark, sf, n_orders=n_orders).withColumn(
         "cell", F.col("band").cast("string"))
-    # CONTENT fingerprint (ADVICE r4): fold the sf parquet files'
-    # (name, size, mtime) into both the checkpoint root and the stage
-    # fingerprint, so a regenerated fixture under the same path — or a
-    # concurrent run against different data — self-invalidates instead
-    # of resuming from a stale/contended manifest.
-    h = hashlib.md5(sf.encode())
-    for p in sorted(Path(sf).glob("*.parquet")):
-        st = p.stat()
-        h.update(f"{p.name}:{st.st_size}:{st.st_mtime_ns}".encode())
-    tag = h.hexdigest()[:12]
+    # CONTENT fingerprint (ADVICE r4): fold sqlgen.dir_fingerprint into
+    # both the checkpoint root and the stage fingerprint, so a
+    # regenerated fixture under the same path — or a concurrent run
+    # against different data — self-invalidates instead of resuming
+    # from a stale/contended manifest.
+    tag = hashlib.md5(
+        f"{sf}|{sqlgen.dir_fingerprint(sf)}".encode()).hexdigest()[:12]
     root = Path(tempfile.gettempdir()) / f"dle_resume_{tag}"
     fingerprint = f"{sf}|{tag}|orders={n_orders}|v2"
     man = Manifest(str(root / "manifest"))

@@ -249,7 +249,10 @@ _VIEWS: dict = {}       # (id(spark), sf_dir, name) -> (spark, fp, df)
 _FRAMES: dict = {}      # (id(spark), sf_dir, key) -> (spark, fp, df)
 
 
-def _dir_fingerprint(sf_dir: str) -> str:
+def dir_fingerprint(sf_dir: str) -> str:
+    """Content fingerprint of the parquet tables under ``sf_dir`` (see
+    the memo note above): every memo and checkpoint stage reading the
+    dir folds it, so a rewrite under the same path invalidates them."""
     from pathlib import Path
     parts = []
     for t in TABLES:
@@ -291,7 +294,7 @@ def register_tables(spark, sf_dir: str) -> None:
     the dir is rewritten."""
     from pathlib import Path
     _prune_stopped_sessions()
-    fp = _dir_fingerprint(sf_dir)
+    fp = dir_fingerprint(sf_dir)
     hit = _REGISTERED.get(id(spark))
     if hit is not None and hit[1] == sf_dir and hit[2] == fp:
         return
@@ -317,7 +320,7 @@ def memo_frame(spark, sf_dir, key, build):
     only, every action recomputes from the parquet inputs. Used by
     datagen's WKB fixture builders, whose per-call SQL parse + UDF
     plan construction is identical every time."""
-    fp = _dir_fingerprint(sf_dir) if sf_dir is not None else ""
+    fp = dir_fingerprint(sf_dir) if sf_dir is not None else ""
     k = (id(spark), sf_dir, key)
     hit = _FRAMES.get(k)
     if hit is not None and hit[0] is spark and hit[1] == fp:

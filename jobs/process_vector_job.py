@@ -36,6 +36,7 @@ def main():
     from dle.operators.overlay import planarize
     from dle.plans.pipeline import process_vector, qa_rollups
     from dle.plans.checkpoint import Manifest, prune, run_stage
+    from dle.sqlgen import dir_fingerprint
     from dle.sources.io import dump
 
     from dle import telemetry
@@ -46,7 +47,7 @@ def main():
     # (resume-safe on executor loss).
     out = process_vector(spark, sf_dir, depth=depth,
                          ckpt_root=f"{out_dir}/stages")
-    fingerprint = f"{sf_dir}|depth={depth}"
+    fingerprint = f"{sf_dir}|{dir_fingerprint(sf_dir)}|depth={depth}"
     planar = run_stage(
         spark, man, "planarized", fingerprint,
         lambda skip: planarize(prune(out.overlapping, skip),

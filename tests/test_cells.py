@@ -49,18 +49,14 @@ def test_cover_halfopen_on_boundary():
     assert cov == [cells.point_cell(x0 + 1, y0 + 1, 4)]
 
 
-def test_cover_equals_brute_force():
-    """cover lists exactly the cells whose interior meets the bbox. A
-    zero-extent axis on a cell boundary meets no interior; cover gives
-    it the min-corner cell, i.e. the cells met by the bbox widened to
-    the max side."""
+def _cover_boxes():
+    """depth -> 300 bboxes, depths 1..5: half on the quarter-cell
+    lattice (cell boundaries often), half off-grid, with zero-width
+    and zero-height ones among both."""
     rng = np.random.default_rng(5)
     quarter = int(GRID_SIZE) >> 7       # a quarter of a depth-5 cell
+    out: dict = {}
     for depth in range(1, 6):
-        n = 1 << depth
-        keys = [cells.quadkey(cx, cy, depth)
-                for cx in range(n) for cy in range(n)]
-        bounds = {k: cells.cell_bounds(k) for k in keys}
         for i in range(300):
             if i % 2:    # on the quarter-cell lattice: boundaries often
                 u = rng.integers(0, 1 << 7, 4) * quarter
@@ -72,7 +68,22 @@ def test_cover_equals_brute_force():
                 x1 = x0
             if i % 7 == 0:
                 y1 = y0
-            x0, x1, y0, y1 = x0 + XMIN, x1 + XMIN, y0 + YMIN, y1 + YMIN
+            out.setdefault(depth, []).append(
+                (x0 + XMIN, y0 + YMIN, x1 + XMIN, y1 + YMIN))
+    return out
+
+
+def test_cover_equals_brute_force():
+    """cover lists exactly the cells whose interior meets the bbox. A
+    zero-extent axis on a cell boundary meets no interior; cover gives
+    it the min-corner cell, i.e. the cells met by the bbox widened to
+    the max side."""
+    for depth, boxes in _cover_boxes().items():
+        n = 1 << depth
+        keys = [cells.quadkey(cx, cy, depth)
+                for cx in range(n) for cy in range(n)]
+        bounds = {k: cells.cell_bounds(k) for k in keys}
+        for x0, y0, x1, y1 in boxes:
             wx1 = x1 + 0.5 if x1 == x0 else x1
             wy1 = y1 + 0.5 if y1 == y0 else y1
             want = {k for k, (a, b, c, d) in bounds.items()
@@ -102,3 +113,44 @@ def test_sql_emitters_match_python(spark):
     got = [r.c for r in df.selectExpr(f"{expr} as c").collect()]
     want = [cells.point_cell(x, y, 5) for x, y in rows]
     assert got == want
+
+    # the cover emitter's index ranges list exactly cover's cells, in
+    # both dialects, and the Spark explode helper emits exactly them
+    import duckdb
+    import pandas as pd
+
+    from dle.operators.spatial_join import with_cover_cells
+
+    con = duckdb.connect()
+    for depth, boxes in _cover_boxes().items():
+        want = [cells.cover(*b, depth) for b in boxes]
+        ranges = [f"{e} as r{j}" for j, e in enumerate(
+            cells.sql_cover_xy("x0", "y0", "x1", "y1", depth))]
+        pdf = pd.DataFrame(boxes, columns=["x0", "y0", "x1", "y1"])
+        pdf.insert(0, "i", range(len(boxes)))
+        con.register("boxes", pdf)
+        bdf = spark.createDataFrame(pdf)
+        for got_ranges in (
+                con.execute(f"select i, {', '.join(ranges)} from boxes")
+                .fetchall(),
+                bdf.selectExpr("i", *ranges).collect()):
+            got = {r[0]: [cells.quadkey(cx, cy, depth)
+                          for cy in range(r[3], r[4] + 1)
+                          for cx in range(r[1], r[2] + 1)]
+                   for r in got_ranges}
+            assert [got[i] for i in range(len(boxes))] == want, depth
+        exploded: dict = {}
+        for r in with_cover_cells(bdf, depth).collect():
+            exploded.setdefault(r["i"], []).append(r["cell"])
+        assert [sorted(exploded[i]) for i in range(len(boxes))] == \
+            [sorted(w) for w in want], depth
+
+    # a rect ending exactly on a cell edge does not enter the next cell
+    res = GRID_SIZE / (1 << 4)
+    edge = (XMIN + res + 0.5, YMIN + res + 0.5, XMIN + 3 * res,
+            YMIN + 2 * res)
+    rect = spark.createDataFrame([edge], "x0 double, y0 double,"
+                                         " x1 double, y1 double")
+    got = sorted(r["cell"] for r in with_cover_cells(rect, 4).collect())
+    assert got == sorted(cells.cover(*edge, 4))
+    assert len(got) == 2

@@ -208,6 +208,61 @@ def test_precedence_stage_drops_eclipsed_designation(spark, tmp_path,
     assert len(man.rows("precedence")) == n_rows
 
 
+def test_pipeline_resume_rollup_reruns_on_same_size_same_mtime_rewrite(
+        spark, tmp_path, monkeypatch):
+    """Rewriting the input under the same path, at the same byte size
+    and with the old mtime restored, invalidates the checkpointed
+    stage: the next call returns the figures of the new data, not the
+    output resumed from the old root."""
+    import os
+    import shutil
+    import tempfile
+    from pathlib import Path
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from dle import resultcheck
+    from dle.queries_kernel import (
+        o_pipeline_resume_rollup, q_pipeline_resume_rollup,
+    )
+
+    # checkpoint roots live under the temp dir: keep them in tmp_path
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    d = tmp_path / "sf"
+    d.mkdir()
+    for f in Path(SF).glob("*.parquet"):
+        shutil.copy(f, d / f.name)
+    d = str(d)
+    path = f"{d}/documents.parquet"
+    table = pq.read_table(path)
+    # plain encoding, no statistics: equal-width values give equal size
+    plain = dict(compression="NONE", use_dictionary=False,
+                 write_statistics=False)
+    pq.write_table(table, path, **plain)
+    st1 = os.stat(path)
+
+    def check():
+        df = q_pipeline_resume_rollup(spark, d)
+        rows = [tuple(r) for r in df.collect()]
+        con = resultcheck.duck_views(d)
+        problems = resultcheck.compare(
+            df.columns, rows, df.schema, con.sql(o_pipeline_resume_rollup()))
+        con.close()
+        assert problems == []
+        return sorted(rows)
+
+    before = check()
+    # bands derive from doc_id: shifted ids move every band
+    i = table.schema.get_field_index("doc_id")
+    pq.write_table(table.set_column(
+        i, "doc_id", pc.add(table.column("doc_id"), 1000)), path, **plain)
+    os.utime(path, ns=(st1.st_atime_ns, st1.st_mtime_ns))
+    st2 = os.stat(path)
+    assert (st2.st_size, st2.st_mtime_ns) == (st1.st_size, st1.st_mtime_ns)
+    assert check() != before
+
+
 def test_dissolve_explode_parts_empty_group(spark):
     """ADVICE r1: a group whose union is empty (all-degenerate geoms)
     must return an empty frame WITH part_i when explode_parts is set."""

@@ -87,10 +87,14 @@ def test_spatial_overlay_schema_and_collision(spark):
         F.col("feat_id").alias("a_id"), "geom").limit(40)
     b = _band_df(spark).select(
         F.col("feat_id").alias("b_id"), "geom").limit(40)
-    out = spatial_overlay(a, b, depth=3)
+    # an empty polygon intersects nothing: it forms no pair
+    empty = spark.createDataFrame(
+        [(-1, bytearray(wkb.polygon_wkb([])))], "a_id long, geom binary")
+    out = spatial_overlay(a.unionByName(empty), b, depth=3)
     assert set(out.columns) == {"a_id", "b_id", "cell", "geom"}
     rows = out.collect()
     assert len(rows) >= 40  # every feature overlaps itself at least
+    assert all(r["a_id"] != -1 for r in rows)
     self_pairs = [r for r in rows if r["a_id"] == r["b_id"]]
     assert len(self_pairs) >= 40
     with pytest.raises(ValueError, match="collision"):

@@ -127,7 +127,11 @@ def test_fused_precedence_equals_loop(spark, outputs):
 
 def test_tile_geoms_conserves_area(spark):
     lay = datagen.layers_poly(spark, SF).limit(30)
-    tiled = tile_geoms(lay, DEPTH)
+    # an empty polygon meets no cell (ST_Intersects is false): no tile
+    empty = lay.limit(1).withColumn("feat_id", F.lit(-1)).withColumn(
+        "geom", F.lit(bytearray(wkb.polygon_wkb([]))))
+    tiled = tile_geoms(lay.unionByName(empty), DEPTH)
+    assert tiled.where("feat_id = -1").count() == 0
     # oracle: per-feature VALID area (bowties have signed shoelace ~0
     # until repaired, so repair first — same rule tiling applies)
     a0 = sum(
