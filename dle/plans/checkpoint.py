@@ -5,11 +5,18 @@ The Spark-idiomatic analogue of the reference's stage-level
 "already loaded" skips (/root/reference/designatedlands.py:503,
 :549-561) and sha-named download dirs (:167), but finer grained: one
 manifest row per (stage, cell) with the input fingerprint, row count
-and wall time. On resume, a stage's ``build_df`` gets the completed
-cells and removes them from the input of its grouped UDFs with
-`prune`, so a killed job redoes only unfinished cells. Spark keeps a
-filter on a stage's output above ``FlatMapGroupsInPandas``; pruning
-the output would still run every done cell through the kernel.
+and wall time, and after them one stage-completion row (cell
+`STAGE_DONE`) with the stage's total row count and the schema of the
+frame it returned.
+
+A stage whose completion row matches the fingerprint resumes from the
+manifest alone: its parquet is re-read with the stored schema, and
+nothing is built, written or counted. Otherwise a stage's ``build_df``
+gets the completed cells and removes them from the input of its
+grouped UDFs with `prune`, so a killed job redoes only unfinished
+cells. Spark keeps a filter on a stage's output above
+``FlatMapGroupsInPandas``; pruning the output would still run every
+done cell through the kernel.
 """
 
 from __future__ import annotations
@@ -20,10 +27,12 @@ import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 
-# manifest cell name marking "stage finished with zero output cells";
-# never collides with real cells (quadkeys / cell ids)
+# manifest cell name of the stage-completion row, always the last row a
+# successful run_stage appends; never collides with real cells
+# (quadkeys / cell ids)
 STAGE_DONE = "__stage_done__"
 
 
@@ -56,10 +65,6 @@ class Manifest:
         return {r["cell"] for r in self.rows(stage)
                 if r["fingerprint"] == fingerprint and r["status"] == "ok"}
 
-    def stale(self, stage: str, fingerprint: str) -> bool:
-        return any(r["fingerprint"] != fingerprint
-                   for r in self.rows(stage))
-
     def append(self, stage: str, recs: list[dict]) -> None:
         with self._path(stage).open("a") as f:
             for r in recs:
@@ -80,36 +85,49 @@ def run_stage(spark, manifest: Manifest, stage: str, fingerprint: str,
               planned_cells: list[str] | None = None) -> DataFrame:
     """Compute-or-resume one pipeline stage.
 
-    ``build_df(skip_cells: set[str]) -> DataFrame`` must `prune` the
-    given completed cells from the input of its grouped UDFs. Its
-    output is pruned again, so a ``build_df`` that cannot prune still
-    leaves the committed partitions untouched. Output parquet is
-    partitioned by cell; a changed fingerprint invalidates everything.
+    A stage whose manifest holds a completion row for ``fingerprint``
+    is returned as its committed parquet read with the stored schema
+    (an empty frame of that schema when it has no rows): ``build_df``
+    is not called and no Spark job runs, unless the stage has more cell
+    directories than ``spark.sql.sources.parallelPartitionDiscovery.
+    threshold`` (32 by default), which Spark lists with a job. A changed
+    fingerprint invalidates everything.
+
+    Otherwise ``build_df(skip_cells: set[str]) -> DataFrame`` must
+    `prune` the given completed cells from the input of its grouped
+    UDFs. Its output is pruned again, so a ``build_df`` that cannot
+    prune still leaves the committed partitions untouched. Output
+    parquet is partitioned by cell; the call appends one row per new
+    cell and then the completion row with the total row count and the
+    schema of the returned frame. When the caller supplies
+    ``planned_cells`` (the cell universe for the stage), zero-row cells
+    get a row too.
 
     Crash-safe by construction: the parquet commit uses DYNAMIC
     partition overwrite, so a cell interrupted between its parquet
     commit and its manifest append is simply recomputed on resume and
-    REPLACES its partition — never appends a duplicate. When the caller
-    supplies ``planned_cells`` (the cell universe for the stage),
-    zero-row cells are recorded as done too, so they are not recomputed
-    on every resume."""
+    REPLACES its partition — never appends a duplicate. A kill before
+    the append ends, or a torn last line, leaves no completion row, so
+    the next call takes the per-cell path."""
     out_dir = Path(out_root) / stage
-    if manifest.stale(stage, fingerprint):
+    rows = manifest.rows(stage)
+    if any(r["fingerprint"] != fingerprint for r in rows):
         manifest.clear(stage)
         shutil.rmtree(out_dir, ignore_errors=True)
-    done = manifest.done_cells(stage, fingerprint)
-    df = build_df(done)
+        rows = []
+    # a zero-output marker written before completion rows held a schema
+    # is a plain done cell here; this run appends a full completion row
+    complete = [r for r in rows if r["cell"] == STAGE_DONE and "schema" in r]
+    if complete:
+        schema = StructType.fromJson(complete[-1]["schema"])
+        if not complete[-1]["rows"]:
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(str(out_dir))
+    done = {r["cell"] for r in rows if r["status"] == "ok"}
+    df = prune(build_df(done), done, partition_col)
     t0 = time.perf_counter()
-    df = prune(df, done, partition_col)
-    conf = spark.conf
-    prev_mode = conf.get("spark.sql.sources.partitionOverwriteMode",
-                         "static")
-    conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (df.write.mode("overwrite").partitionBy(partition_col)
-           .parquet(str(out_dir)))
-    finally:
-        conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+       .partitionBy(partition_col).parquet(str(out_dir)))
     wall_ms = int(1000 * (time.perf_counter() - t0))
     try:
         result = spark.read.parquet(str(out_dir))
@@ -138,18 +156,14 @@ def run_stage(spark, manifest: Manifest, stage: str, fingerprint: str,
         [c for c in planned_cells if c not in done]
         if planned_cells is not None else
         [c for c in counts if c not in done])
+    ts = int(time.time())
     recs = [{"stage": stage, "cell": c,
              "fingerprint": fingerprint, "rows": counts.get(c, 0),
-             "wall_ms": wall_ms, "status": "ok",
-             "ts": int(time.time())} for c in new_cells]
-    if not recs and not done:
-        # stage completed with zero output cells: write a stage-level
-        # done marker so resumes see the stage as finished (rows=0)
-        # rather than recomputing it forever (ADVICE r2 low)
-        recs = [{"stage": stage, "cell": STAGE_DONE,
-                 "fingerprint": fingerprint, "rows": 0,
-                 "wall_ms": wall_ms, "status": "ok",
-                 "ts": int(time.time())}]
-    if recs:
-        manifest.append(stage, recs)
+             "wall_ms": wall_ms, "status": "ok", "ts": ts}
+            for c in new_cells]
+    recs.append({"stage": stage, "cell": STAGE_DONE,
+                 "fingerprint": fingerprint, "rows": sum(counts.values()),
+                 "schema": result.schema.jsonValue(),
+                 "wall_ms": wall_ms, "status": "ok", "ts": ts})
+    manifest.append(stage, recs)
     return result

@@ -603,8 +603,9 @@ def q_pipeline_resume_rollup(spark, sf, n_orders: int = 8):
     :549-561): the precedence fold as one checkpointed stage
     (Manifest + run_stage, idempotent dynamic-partition-overwrite
     commits) is run TWICE against the same checkpoint root; the second
-    pass must find every cell done, so it folds nothing and appends no
-    manifest row, and the rollup is computed from the RESUMED output.
+    pass must find the stage's completion row, so it builds and folds
+    nothing and appends no manifest row, and the rollup is computed
+    from the RESUMED output.
     Oracle = the same 1-D precedence islands as
     overlay_precedence_area_1d, plus a constant `resumed_ok` column
     that is 1 only if pass 2 appended no manifest row."""

@@ -1,7 +1,8 @@
 """Checkpoint manifest: idempotent commits, zero-row cell recording,
-and kill/resume for the checkpointed precedence stage (north rule:
-"resumable from checkpoint with per-partition lineage + metrics";
-VERDICT r1 next-steps #9 + ADVICE medium finding)."""
+manifest-only resume of a finished stage, and kill/resume for the
+checkpointed precedence stage (north rule: "resumable from checkpoint
+with per-partition lineage + metrics"; VERDICT r1 next-steps #9 +
+ADVICE medium finding)."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dle.plans import pipeline
-from dle.plans.checkpoint import Manifest, run_stage
+from dle.plans.checkpoint import STAGE_DONE, Manifest, prune, run_stage
 
 SF = "/root/testdata/sf0.001"
 
@@ -34,7 +35,8 @@ def test_run_stage_recommit_is_idempotent(spark, tmp_path):
     out2 = run_stage(spark, man, "s", "fp", lambda skip: df,
                      str(tmp_path / "o"))
     assert out2.count() == 4  # not 8
-    assert {r["cell"] for r in man.rows("s")} == {"000", "001", "002"}
+    assert {r["cell"] for r in man.rows("s")
+            if r["cell"] != STAGE_DONE} == {"000", "001", "002"}
 
 
 def test_run_stage_skips_done_cells(spark, tmp_path):
@@ -42,6 +44,10 @@ def test_run_stage_skips_done_cells(spark, tmp_path):
     df = _input(spark)
     run_stage(spark, man, "s", "fp", lambda skip: df,
               str(tmp_path / "o"))
+    # without its completion row the stage resumes cell by cell
+    cells = [r for r in man.rows("s") if r["cell"] != STAGE_DONE]
+    man.clear("s")
+    man.append("s", cells)
     seen = []
 
     def build(skip):
@@ -59,7 +65,8 @@ def test_run_stage_zero_row_cell_among_nonempty(spark, tmp_path):
     run_stage(spark, man, "s", "fp", lambda skip: df,
               str(tmp_path / "o"),
               planned_cells=["000", "001", "002"])
-    recs = {r["cell"]: r["rows"] for r in man.rows("s")}
+    recs = {r["cell"]: r["rows"] for r in man.rows("s")
+            if r["cell"] != STAGE_DONE}
     assert recs == {"000": 2, "001": 1, "002": 0}
     # resume: the zero-row cell is NOT recomputed
     done = man.done_cells("s", "fp")
@@ -84,6 +91,68 @@ def test_run_stage_zero_row_stage_no_crash(spark, tmp_path):
                      str(tmp_path / "o"))
     assert out2.count() == 0
     assert len(man.rows("s")) == len(rows)
+
+
+@pytest.mark.parametrize("where", ["true", "v > 99"],
+                         ids=["rows", "zero_rows"])
+def test_run_stage_complete_stage_starts_no_job(spark, tmp_path, where):
+    """A stage whose manifest holds its completion row resumes from the
+    manifest alone: build_df is never called, no job runs in the call's
+    job group, and the frame has the computing call's schema, column
+    order and rows (an empty frame of the build schema for a stage with
+    no output)."""
+    sc = spark.sparkContext
+    man = Manifest(str(tmp_path / "m"))
+    df = _input(spark).where(where)
+    calls = []
+
+    def build(skip):
+        calls.append(set(skip))
+        return df
+
+    def in_group(group):
+        sc.setJobGroup(group, group)
+        try:
+            out = run_stage(spark, man, "s", "fp", build,
+                            str(tmp_path / "o"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    first, first_jobs = in_group(f"ckpt-compute-{where}")
+    assert len(calls) == 1 and first_jobs
+    n_rows = len(man.rows("s"))
+    resumed, resumed_jobs = in_group(f"ckpt-resume-{where}")
+    assert len(calls) == 1
+    assert resumed_jobs == []
+    assert resumed.schema == first.schema  # column order included
+    assert sorted(resumed.collect()) == sorted(first.collect())
+    assert len(man.rows("s")) == n_rows
+    if where != "true":
+        assert resumed.schema == df.schema
+
+
+def test_run_stage_cell_without_output_reruns_no_cell(spark, tmp_path):
+    """An input cell whose output is empty, with no planned_cells to
+    record it, is not recomputed on a rerun: the completed stage folds
+    no input row at all."""
+    man = Manifest(str(tmp_path / "m"))
+    src = _input(spark)
+
+    def build(skip, guard=False):
+        kept = prune(src, skip)
+        if guard:
+            kept = kept.mapInPandas(_raise_on(), kept.schema)
+        return kept.where("cell <> '002'")
+
+    out = run_stage(spark, man, "s", "fp", build, str(tmp_path / "o"))
+    assert out.count() == 3
+    rows = man.rows("s")
+    out2 = run_stage(spark, man, "s", "fp",
+                     lambda skip: build(skip, guard=True),
+                     str(tmp_path / "o"))
+    assert out2.count() == 3
+    assert man.rows("s") == rows
 
 
 def _rollup(df):

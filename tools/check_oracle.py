@@ -7,12 +7,17 @@ names, column types and an order-insensitive value hash.
 
     python tools/check_oracle.py [sf_dir] [name ...]
 
-An unknown name exits 1 before Spark starts.
+An unknown name exits 1 before Spark starts. What the queries leave in
+the temp dir (checkpoint roots, stream sources) goes to a directory of
+this run's own, removed at exit, so no later run resumes from it.
 """
 
 from __future__ import annotations
 
+import atexit
+import shutil
 import sys
+import tempfile
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -30,6 +35,9 @@ def main():
     unknown = sorted(set(only) - set(oracles))
     if unknown:
         raise SystemExit(f"unknown query name(s): {', '.join(unknown)}")
+    # registered before the session starts, so it runs after Spark stops
+    tempfile.tempdir = tempfile.mkdtemp(prefix="check-oracle-")
+    atexit.register(shutil.rmtree, tempfile.tempdir, True)
     spark = get_spark("oracle-check", master="local[8]",
                       shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
