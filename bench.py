@@ -17,7 +17,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -70,16 +72,26 @@ def run_suite(spark, sf_dir, names):
     """Each query executes BEST_OF times, min taken: the sandbox host is
     shared, and single-shot timings swing 2-5x with ambient load
     (measured; see BENCH/BASELINE.md variance note). min-of-2 keeps
-    the suite honest about engine cost without tripling wall time."""
+    the suite honest about engine cost without tripling wall time.
+    Each rep gets its own temp dir, removed after it: a checkpoint root
+    left by an earlier rep would let the next one resume instead of
+    compute."""
     qs = q.queries()
     times = {}
+    prev = tempfile.tempdir
     for name in names:
         best = None
         for _ in range(max(1, BEST_OF)):
-            t0 = time.perf_counter()
-            # count() forces full execution w/o driver-side collect cost
-            qs[name](spark, sf_dir).count()
-            dt = time.perf_counter() - t0
+            tmp = tempfile.mkdtemp(prefix="dle-bench-")
+            tempfile.tempdir = tmp
+            try:
+                t0 = time.perf_counter()
+                # count() forces full execution w/o driver-side collect
+                qs[name](spark, sf_dir).count()
+                dt = time.perf_counter() - t0
+            finally:
+                tempfile.tempdir = prev
+                shutil.rmtree(tmp, ignore_errors=True)
             best = dt if best is None else min(best, dt)
         times[name] = round(best, 2)
     return times

@@ -165,6 +165,13 @@ def tile_geoms_grid(df: DataFrame, fine_cells: set, coarse_depth: int,
 
 # -------------------------------------------------------- dissolve
 
+def _union_rings(bufs, grid: float) -> list:
+    """ST_Union of WKB geometries as one ring soup (empty when nothing
+    is left): the union step `dissolve` and the precedence fold share,
+    so both emit the same `wkb.rings_wkb` bytes for a group."""
+    return K.union_all([wkb.parse_rings(bytes(b)) for b in bufs], grid)
+
+
 def dissolve(df: DataFrame, keys: list[str], geom: str = "geom",
              grid: float = GRID, explode_parts: bool = False) -> DataFrame:
     """A2/F1 dissolve: union of all geometries per key group
@@ -179,8 +186,7 @@ def dissolve(df: DataFrame, keys: list[str], geom: str = "geom",
     _acc = telemetry.capture()
 
     def agg(pdf: pd.DataFrame) -> pd.DataFrame:
-        rings = K.union_all(
-            [wkb.parse_rings(bytes(b)) for b in pdf[geom]], grid)
+        rings = _union_rings(pdf[geom], grid)
         telemetry.drain(_acc)
         head = pdf.iloc[:1][keys]
         if not rings:
@@ -314,20 +320,26 @@ def clip(df_a: DataFrame, df_b: DataFrame, depth: int,
 
 # ------------------------------------------- precedence (A5/A6)
 
-def _aggregate_multi(src: DataFrame, geom: str, grid: float) -> DataFrame:
-    """A6 pre-aggregation: union `src` per (cell, every attribute
-    column) into ONE multipart row per group — the reference's
-    aggregated_insert_difference src CTE (/root/reference/sql/
-    aggregated_insert_difference.sql:16-30) — and stamp `agg_id`, a
-    DETERMINISTIC synthetic id (md5 of the group key values) replacing
-    the reference's nondeterministic `row_number() over ()` (:22).
-    Multipart geometry stays in one row (no ST_Dump)."""
-    keys = [c for c in src.columns if c != geom]
-    agg = dissolve(src, keys, geom=geom, grid=grid)
-    return agg.withColumn(
+def with_agg_id(df: DataFrame, geom: str = "geom") -> DataFrame:
+    """A6 `agg_id`: a DETERMINISTIC synthetic id per (cell, attributes)
+    group, the md5 of the group key values, replacing the reference's
+    nondeterministic `row_number() over ()`
+    (sql/aggregated_insert_difference.sql:22)."""
+    keys = [c for c in df.columns if c != geom]
+    return df.withColumn(
         "agg_id",
         F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string")
                                     for c in keys])))
+
+
+def _aggregate_multi(src: DataFrame, geom: str, grid: float) -> DataFrame:
+    """A6 pre-aggregation: union `src` per (cell, every attribute
+    column) into ONE multipart row per group — the reference's
+    aggregated_insert_difference src CTE
+    (sql/aggregated_insert_difference.sql:16-30) — stamped with
+    `with_agg_id`. Multipart geometry stays in one row (no ST_Dump)."""
+    keys = [c for c in src.columns if c != geom]
+    return with_agg_id(dissolve(src, keys, geom=geom, grid=grid), geom)
 
 
 def insert_difference(existing: DataFrame | None, src: DataFrame,
@@ -390,53 +402,64 @@ def insert_difference(existing: DataFrame | None, src: DataFrame,
 
 def insert_difference_fused(src: DataFrame, order_col: str = "process_order",
                             geom: str = "geom", grid: float = GRID,
-                            sliver: float = SLIVER_AREA,
-                            keep_multi: bool = False) -> DataFrame:
-    """A5/A6 with the layer loop FUSED into one shuffle: because
-    insert_difference is per-cell independent (tiled inputs never
-    interact across cells), the ascending-process_order accumulate-and-
-    difference loop can run inside one applyInPandas per cell instead
-    of L sequential Spark jobs. Semantics match the driver-loop form
-    exactly: the first order batch passes through unfiltered
-    (insert_difference returns src when existing is None), later
-    batches diff against the accumulated post-sliver-drop OUTPUT
-    geometry (the loop unions each round's NEW rows into `existing`),
-    and sliver drops (<= sliver m^2, insert_difference.sql:75) remove
-    the row from both the output and the accumulator. Wall clock is
-    one wide stage instead of L barriers.
+                            sliver: float = SLIVER_AREA) -> DataFrame:
+    """A5/A6 precedence: the reference's layer loop
+    (designatedlands.py:693-707) over aggregated_insert_difference
+    (sql/aggregated_insert_difference.sql), as ONE applyInPandas per
+    cell. Tiled inputs never interact across cells, so the loop runs
+    inside each cell's group instead of as L sequential Spark jobs.
 
-    `keep_multi=True` = the A6 aggregated variant (see
-    insert_difference): pre-union per (cell, attributes) with a
-    deterministic `agg_id`, multipart rows kept whole, polygonal-only
-    output guaranteed structurally by the kernel."""
-    if keep_multi:
-        src = _aggregate_multi(src, geom, grid)
+    Per cell, in ascending `order_col`, each order batch is first
+    unioned per group of every non-geometry column (nulls group
+    together, as in Spark): one row per group. A group of two or more
+    rows gets exactly the bytes `dissolve` on those keys emits; a lone
+    row passes through as it came (the fold takes valid polygonal
+    input, as it always has of its first batch). So two features of
+    one layer never overlap in the output, and a caller that must keep
+    pieces apart adds a column that tells them apart (build_boundary
+    keeps `part_i`). The first batch passes through; later batches
+    diff against the accumulated post-sliver-drop OUTPUT geometry, and
+    sliver drops (<= sliver m^2, insert_difference.sql:75) remove the
+    row from both the output and the accumulator. Layers of equal
+    order diff only against earlier orders. Multipart rows stay whole
+    (no ST_Dump); `with_agg_id` stamps the A6 `agg_id` on the result."""
     out_schema = _schema_of(src)
     cols = list(src.columns)
+    keys = [c for c in cols if c != geom]
     _acc = telemetry.capture()
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        gid = pdf.groupby(keys, dropna=False, sort=False).ngroup() \
+            .to_numpy()
+        # members[g] = rows of group g, found with one sort per cell
+        by_gid = np.argsort(gid, kind="stable")
+        members = np.split(by_gid, np.flatnonzero(np.diff(gid[by_gid])) + 1)
+        po = pdf[order_col].to_numpy()
+        geoms = pdf[geom].to_numpy()
         acc: list = []   # rings of OUTPUT rows so far (loop's `existing`)
         outs, keep = [], []
         first = True
-        # layers of equal order diff only against EARLIER layers (the
-        # loop form's semantics), so accumulate per order batch
         for po_val in sorted(pdf[order_col].unique()):
-            batch = np.flatnonzero(
-                (pdf[order_col] == po_val).to_numpy())
             batch_out: list = []
-            for i in batch:
-                rings = wkb.parse_rings(bytes(pdf[geom].iloc[i]))
+            for g in dict.fromkeys(gid[po == po_val]):
+                rows = members[g]
+                # a lone row is its own union: its bytes pass through
+                # with no kernel call (build_boundary's parts all do)
+                buf = bytes(geoms[rows[0]]) if len(rows) == 1 else \
+                    wkb.rings_wkb(_union_rings(geoms[rows], grid))
+                rings = wkb.parse_rings(buf)
+                if not rings:
+                    continue
                 if first:
                     # loop form: insert_difference(None, src) == src
-                    outs.append(bytes(pdf[geom].iloc[i]))
-                    keep.append(i)
+                    outs.append(buf)
+                    keep.append(rows[0])
                     batch_out.extend(rings)
                     continue
                 d = K.difference(rings, acc, grid)
                 if d and K.area(d) > sliver:
                     outs.append(wkb.rings_wkb(d))
-                    keep.append(i)
+                    keep.append(rows[0])
                     batch_out.extend(d)
             acc.extend(batch_out)
             first = False

@@ -56,4 +56,6 @@ def build_boundary(spark: SparkSession, pieces: DataFrame,
     tiled = tile_geoms(pieces, depth)
     dis = dissolve(tiled, ["cell", "cls", "process_order"] + keys)
     sub = subdivide(dis, max_vertices=max_vertices)
-    return insert_difference_fused(sub.drop("part_i"))
+    # part_i rides through the fold as a group key: without it the
+    # fold's per-group union would re-merge the parts subdivide split
+    return insert_difference_fused(sub).drop("part_i")

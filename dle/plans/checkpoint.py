@@ -66,9 +66,14 @@ class Manifest:
                 if r["fingerprint"] == fingerprint and r["status"] == "ok"}
 
     def append(self, stage: str, recs: list[dict]) -> None:
-        with self._path(stage).open("a") as f:
-            for r in recs:
-                f.write(json.dumps(r) + "\n")
+        with self._path(stage).open("ab+") as f:
+            # end a torn last line first, or the first record would be
+            # glued onto it and lost with it
+            if f.seek(0, 2):
+                f.seek(-1, 2)
+                if f.read(1) != b"\n":
+                    f.write(b"\n")
+            f.write("".join(json.dumps(r) + "\n" for r in recs).encode())
 
     def clear(self, stage: str) -> None:
         self._path(stage).unlink(missing_ok=True)

@@ -81,16 +81,14 @@ def process_vector(spark: SparkSession, sf_dir: str,
                    coarse_depth=cd)
     overlapping = dissolve(clipped, ["cell"] + REG_KEYS)
 
-    # A5/A6 precedence in ascending process_order. Layers are
-    # pre-dissolved per (cell, designation) first — the reference's
-    # aggregated_insert_difference semantics (sql/
-    # aggregated_insert_difference.sql:25-29): without this, two
-    # same-layer features with different src_id could overlap each
-    # other in the output.
+    # A5/A6 precedence in ascending process_order. The fold unions
+    # each (cell, designation, process_order) group before it
+    # differences — the reference's aggregated_insert_difference
+    # (sql/aggregated_insert_difference.sql:16-30) — so two same-layer
+    # features with different src_id never overlap in the output.
     def precedence(skip=()):
-        return insert_difference_fused(dissolve(
-            prune(overlapping, skip),
-            ["cell", "designation", "process_order"]))
+        return insert_difference_fused(prune(overlapping, skip).select(
+            "cell", "designation", "process_order", "geom"))
 
     if ckpt_root is None:
         designatedlands = precedence()

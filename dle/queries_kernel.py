@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from . import datagen, sqlgen
 from .operators.overlay import (
-    dissolve, insert_difference_fused, with_area,
+    dissolve, insert_difference_fused, with_agg_id, with_area,
 )
 from .sqlgen import preamble
 
@@ -59,14 +59,14 @@ def o_dissolve_area_1d():
 
 def q_precedence_area_1d(spark, sf, n_orders: int = 8):
     """A5/A6 precedence through the per-cell fold
-    insert_difference_fused (band = cell): one shuffle for all layers.
-    Oracle = per-order 1-D islands, the layer-by-layer semantics of the
-    reference loop."""
+    insert_difference_fused (band = cell): one grouped stage for all
+    layers, which unions each (cell, designation, process_order) group
+    before it differences. Oracle = per-order 1-D islands, the
+    layer-by-layer semantics of the reference loop."""
     b = datagen.bands_1d(spark, sf, n_orders=n_orders).withColumn(
         "cell", F.col("band").cast("string"))
-    agg = dissolve(b.select("cell", "designation", "process_order", "geom"),
-                   ["cell", "designation", "process_order"])
-    acc = insert_difference_fused(agg)
+    acc = insert_difference_fused(
+        b.select("cell", "designation", "process_order", "geom"))
     return with_area(acc).groupBy("designation").agg(
         F.round(F.sum("area_m2"), 0).cast("bigint").alias("area_m2"))
 
@@ -117,10 +117,10 @@ def o_precedence_area_42():
 def q_precedence_multi(spark, sf, n_orders: int = 8):
     """A6 aggregated_insert_difference as a FIRST-CLASS gate (VERDICT
     r4 #3, /root/reference/sql/aggregated_insert_difference.sql): the
-    fused precedence fold with `keep_multi=True` — src pre-unioned per
-    (cell, attributes) into one MULTIPOLYGON row per group with the
+    fused precedence fold, which unions src per (cell, attributes)
+    into one MULTIPOLYGON row per group, then `with_agg_id` stamps the
     deterministic md5 `agg_id` replacing the reference's
-    `row_number() over ()` (:22), no part dump, polygonal-only output.
+    `row_number() over ()` (:22); no part dump, polygonal-only output.
     Verified per designation: total area (same 1-D islands oracle as
     the A5 gates), surviving group count, agg_id uniqueness
     (n_agg_ids == n_groups), and the agg_id VALUES themselves
@@ -128,7 +128,7 @@ def q_precedence_multi(spark, sf, n_orders: int = 8):
     b = datagen.bands_1d(spark, sf, n_orders=n_orders).withColumn(
         "cell", F.col("band").cast("string"))
     src = b.select("cell", "designation", "process_order", "geom")
-    acc = insert_difference_fused(src, keep_multi=True)
+    acc = with_agg_id(insert_difference_fused(src))
     return with_area(acc).groupBy("designation").agg(
         F.round(F.sum("area_m2"), 0).cast("bigint").alias("area_m2"),
         F.count(F.lit(1)).alias("n_groups"),
@@ -600,7 +600,8 @@ def o_buffer_area():
 def q_pipeline_resume_rollup(spark, sf, n_orders: int = 8):
     """J checkpoint/resume gate (VERDICT r3 #6 — the reference's
     headline resumability, /root/reference/designatedlands.py:503,
-    :549-561): the precedence fold as one checkpointed stage
+    :549-561): the precedence fold (which unions each group itself,
+    so the stage is one grouped UDF) as one checkpointed stage
     (Manifest + run_stage, idempotent dynamic-partition-overwrite
     commits) is run TWICE against the same checkpoint root; the second
     pass must find the stage's completion row, so it builds and folds
@@ -631,8 +632,7 @@ def q_pipeline_resume_rollup(spark, sf, n_orders: int = 8):
     def precedence(skip):
         src = prune(b, skip).select(
             "cell", "designation", "process_order", "geom")
-        return insert_difference_fused(
-            dissolve(src, ["cell", "designation", "process_order"]))
+        return insert_difference_fused(src)
 
     def run():
         return run_stage(spark, man, "precedence", fingerprint,

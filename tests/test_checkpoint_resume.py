@@ -59,6 +59,19 @@ def test_run_stage_skips_done_cells(spark, tmp_path):
     assert out.count() == 4  # done cells retained from parquet
 
 
+def test_manifest_append_after_torn_line_keeps_first_record(tmp_path):
+    """A kill mid-append leaves a torn last line; the next append ends
+    it first, so its own first record is not glued onto the torn line
+    and lost with it."""
+    man = Manifest(str(tmp_path / "m"))
+    a, c, done = ({"cell": k} for k in ("a", "c", STAGE_DONE))
+    man.append("s", [a])
+    with man._path("s").open("a") as f:
+        f.write('{"cell": "b", "fingerp')
+    man.append("s", [c, done])
+    assert man.rows("s") == [a, c, done]
+
+
 def test_run_stage_zero_row_cell_among_nonempty(spark, tmp_path):
     man = Manifest(str(tmp_path / "m"))
     df = _input(spark).where("cell <> '002'")
@@ -245,11 +258,13 @@ def test_precedence_stage_drops_eclipsed_designation(spark, tmp_path,
     real = pipeline.insert_difference_fused
 
     def with_eclipsed(src, **kw):
-        # each cell's first piece again, as the last layer: the earlier
-        # copy covers it exactly
+        # every piece of each cell's first designation again, as the
+        # last layer: the earlier copy covers it exactly (the fold
+        # unions both copies to the same bytes; one piece alone is not
+        # exactly inside that union after snap rounding)
         w = Window.partitionBy("cell").orderBy("process_order",
                                                "designation")
-        first = src.withColumn("_r", F.row_number().over(w)) \
+        first = src.withColumn("_r", F.dense_rank().over(w)) \
             .where("_r = 1").drop("_r")
         shadow = first.withColumn("designation", F.lit("eclipsed")) \
             .withColumn("process_order", F.lit(99).cast(

@@ -136,6 +136,13 @@ def test_dissolve_shuffles_once_by_keys(spark):
     assert "FlatMapGroupsInPandas" in plan or "ArrowEvalPython" in plan
 
 
+def test_precedence_is_one_grouped_stage(spark):
+    """The fold unions each group itself: precedence runs as ONE grouped
+    pandas stage, with no dissolve stage in front of it."""
+    plan = _plan(q.queries()["overlay_precedence_area_1d"](spark, SF))
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+
+
 def test_pip_mixed_join_no_point_shuffle(spark):
     """Mixed-depth PIP join: the point side takes a bounded 2-way
     explode + broadcast equi-join — no point-side hash exchange, no
