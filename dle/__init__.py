@@ -15,7 +15,8 @@ Package map (SURVEY.md section references):
                 boolean ops (§2 H/I; shapely fast-path if installed)
   operators   — overlay ops A1-A10, raster B1-B3, dedup/similarity/text
   plans       — end-to-end pipelines + checkpoint manifest (§2 J, §4)
-  sources     — registry validation + IO helpers (§2 C)
+  sources     — IO helpers: dump sink, GeoPackage export, GeoTIFF (§2 C)
+  streaming   — availableNow drains behind the streaming_* gates (§2 J)
 """
 
 __version__ = "0.1.0"

@@ -71,7 +71,6 @@ DEFAULT_CONFIG = {
     "resolution": 10,      # raster cell size, m (B1/B2 operators)
     # engine extensions (not in the reference's dict):
     "depth": DEFAULT_DEPTH,      # quadkey tile depth (the 20k grid)
-    "extent": EXTENT,            # processing bounds, BC Albers metres
 }
 
 _INT_KEYS = ("n_processes", "resolution", "depth")
@@ -82,8 +81,7 @@ def load_config(config_file: str | None = None) -> dict:
     section, with the reference's exact typing rules: out_path
     lowercased, integer keys int()ed, unknown keys carried through
     (read_config does a plain dict update), n_processes=-1 resolved to
-    cores-1 and clamped to the core count. `extent` accepts four
-    comma-separated numbers."""
+    cores-1 and clamped to the core count."""
     import configparser
     import os
 
@@ -107,13 +105,6 @@ def load_config(config_file: str | None = None) -> dict:
                 except ValueError as e:
                     raise ConfigValueError(
                         f"{k}={d[k]!r} is not an integer") from e
-        if "extent" in d and isinstance(d["extent"], str):
-            parts = [p for p in d["extent"].replace(",", " ").split()
-                     if p]
-            if len(parts) != 4:
-                raise ConfigValueError(
-                    f"extent must be 4 numbers, got {d['extent']!r}")
-            d["extent"] = tuple(float(p) for p in parts)
         cfg.update(d)
 
     import multiprocessing

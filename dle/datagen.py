@@ -107,15 +107,15 @@ def _tri_wkb(orient, x0, y0, x1, y1):
 _tri_wkb_udf = F.pandas_udf(_tri_wkb, BinaryType())
 
 
-def boundary_land(spark: SparkSession) -> DataFrame:
-    """bc_boundary_land analogue: one polygon covering ~70% of the
-    extent with a ragged (sawtooth) west coast and two interior holes."""
+def _coast_rings():
+    """The boundary fixture's rings: a CCW shell covering ~70% of the
+    extent with a ragged (sawtooth) west coast, and two interior
+    rectangles (CCW, as standalone polygons)."""
     east = XMIN + 1_400_000.0
     south = YMIN + 30_000.0
     north = YMIN + 1_300_000.0
     west_base = XMIN + 60_000.0
-    pts = [(east, south)]
-    pts.append((east, north))
+    pts = [(east, south), (east, north)]
     # ragged west edge: sawtooth from north to south
     n_teeth = 24
     ys = np.linspace(north, south, n_teeth + 1)
@@ -126,11 +126,18 @@ def boundary_land(spark: SparkSession) -> DataFrame:
     shell = np.array(pts, dtype=np.float64)
     if wkb.ring_area(shell) < 0:
         shell = shell[::-1]
-    hole1 = _rect_pts(XMIN + 500_000, YMIN + 500_000,
-                      XMIN + 600_000, YMIN + 620_000)[::-1]
-    hole2 = _rect_pts(XMIN + 900_000, YMIN + 200_000,
-                      XMIN + 1_000_000, YMIN + 260_000)[::-1]
-    buf = wkb.polygon_wkb([shell, hole1, hole2])
+    rect1 = _rect_pts(XMIN + 500_000, YMIN + 500_000,
+                      XMIN + 600_000, YMIN + 620_000)
+    rect2 = _rect_pts(XMIN + 900_000, YMIN + 200_000,
+                      XMIN + 1_000_000, YMIN + 260_000)
+    return shell, rect1, rect2
+
+
+def boundary_land(spark: SparkSession) -> DataFrame:
+    """bc_boundary_land analogue: the coast shell with the two
+    rectangles as interior holes."""
+    shell, rect1, rect2 = _coast_rings()
+    buf = wkb.polygon_wkb([shell, rect1[::-1], rect2[::-1]])
     return spark.createDataFrame(
         [("bc_boundary_land", bytearray(buf))],
         "bc_boundary string, geom binary")
@@ -138,31 +145,14 @@ def boundary_land(spark: SparkSession) -> DataFrame:
 
 def boundary_pieces(spark: SparkSession) -> DataFrame:
     """RAW inputs for the A9 boundary build (designatedlands.py:624-721
-    analogue): the ragged coast shell as a 'land' piece plus two marine
-    rectangles that claim space FIRST — the composed result's land
-    class has identical coverage to the old fabricated polygon-with-
-    holes (plans.boundary.build_boundary does the composition)."""
-    east = XMIN + 1_400_000.0
-    south = YMIN + 30_000.0
-    north = YMIN + 1_300_000.0
-    west_base = XMIN + 60_000.0
-    pts = [(east, south), (east, north)]
-    n_teeth = 24
-    ys = np.linspace(north, south, n_teeth + 1)
-    for i, y in enumerate(ys):
-        amp = 40_000.0 if i % 2 == 0 else 110_000.0
-        pts.append((west_base + amp, float(y)))
-    pts.append((east, south))
-    shell = np.array(pts, dtype=np.float64)
-    if wkb.ring_area(shell) < 0:
-        shell = shell[::-1]
-    hole1 = _rect_pts(XMIN + 500_000, YMIN + 500_000,
-                      XMIN + 600_000, YMIN + 620_000)
-    hole2 = _rect_pts(XMIN + 900_000, YMIN + 200_000,
-                      XMIN + 1_000_000, YMIN + 260_000)
+    analogue): the coast shell as a 'land' piece plus the two
+    rectangles as 'marine' pieces that claim space FIRST — the composed
+    result's land class has identical coverage to boundary_land
+    (plans.boundary.build_boundary does the composition)."""
+    shell, rect1, rect2 = _coast_rings()
     rows = [
-        ("marine", 1, bytearray(wkb.polygon_wkb([hole1]))),
-        ("marine", 1, bytearray(wkb.polygon_wkb([hole2]))),
+        ("marine", 1, bytearray(wkb.polygon_wkb([rect1]))),
+        ("marine", 1, bytearray(wkb.polygon_wkb([rect2]))),
         ("land", 2, bytearray(wkb.polygon_wkb([shell]))),
     ]
     return spark.createDataFrame(

@@ -31,7 +31,7 @@ def connected_components(pairs: DataFrame, a: str = "doc_a",
     """(node, component) for every node in >= 1 pair; component =
     min node id reachable. Deterministic for any partitioning.
 
-    DISPATCH (the dissolve_auto / decontaminate-guard house pattern):
+    DISPATCH (as `curation.decontaminate` picks broadcast vs shuffle):
     near-dup candidate graphs are dup-bounded — usually tiny relative
     to the corpus — and the distributed loop pays ~1-2 s of job
     latency PER PASS (edge persist + propagation join + convergence

@@ -85,16 +85,7 @@ def _minhash_band_rows(spark, shingles: bool = False):
     toward all-pairs; shingle banding buckets true near-dups only).
     Docs with fewer than 3 tokens have no shingles and are excluded
     (they cannot be 3-gram near-dups of anything)."""
-    return minhash_bands_for(spark.table("documents"), shingles)
-
-
-def minhash_bands_for(df, shingles: bool = False):
-    """The band-row builder over ANY (doc_id, text, ...) DataFrame —
-    batch queries and the STREAMING near-dup twin share this exact
-    expression tree (streaming/stateful.py::stream_dedup_minhash), so
-    the two paths cannot compute different signatures. Extra columns
-    ride through untouched."""
-    extra = [c for c in df.columns if c not in ("doc_id", "text")]
+    df = spark.table("documents")
     if shingles:
         units = _SHINGLES
         base = _with_ts(df.where(F.expr("size(split(text, ' ')) >= 3")))
@@ -103,19 +94,19 @@ def minhash_bands_for(df, shingles: bool = False):
         base = df
     hs = (f"transform({units}, t -> cast(conv(substring(md5(t),"
           f" 1, 15), 16, 10) as bigint) % {M31})")
-    doc = base.select("doc_id", *extra, F.expr(hs).alias("hs"))
+    doc = base.select("doc_id", F.expr(hs).alias("hs"))
     mins = [F.expr(f"aggregate(hs, cast({M31} as bigint), (acc, h) -> "
                    f"least(acc, (h * {MINHASH_A[p]}L + {MINHASH_B[p]}L)"
                    f" % {M31}))").alias(f"mh{p}")
             for p in range(8)]
-    mh = doc.select("doc_id", *extra, *mins)
+    mh = doc.select("doc_id", *mins)
     entries = F.array(*[
         F.struct(F.lit(b).alias("band"),
                  F.concat_ws("_", f"mh{2 * b}", f"mh{2 * b + 1}")
                  .alias("bucket"))
         for b in range(4)])
-    return (mh.select("doc_id", *extra, F.explode(entries).alias("e"))
-              .select("doc_id", *extra, F.col("e.band").alias("band"),
+    return (mh.select("doc_id", F.explode(entries).alias("e"))
+              .select("doc_id", F.col("e.band").alias("band"),
                       F.col("e.bucket").alias("bucket")))
 
 
@@ -572,14 +563,14 @@ def q_streaming_decon_rollup(spark, sf):
     (trigger availableNow, fresh checkpoint per invocation), the
     static eval split's broadcast shingle index applied per
     micro-batch via foreachBatch running the SAME batch operator
-    (streaming/stateful.py::stream_decontaminate — zero cross-batch
-    state because each doc is batch-atomic and the bench side is
-    static). Oracle = the batch decontamination SQL; multi-batch
-    equality is additionally pytest-proven with maxFilesPerTrigger=1."""
+    (streaming.py::stream_decontaminate — zero cross-batch state
+    because each doc is batch-atomic and the bench side is static).
+    Oracle = the batch decontamination SQL; multi-batch equality is
+    additionally pytest-proven with maxFilesPerTrigger=1."""
     import shutil
     import tempfile
 
-    from .streaming.stateful import stream_decontaminate
+    from .streaming import stream_decontaminate
     register_tables(spark, sf)
     bench = spark.table("documents").where(
         F.expr("doc_id % 11 = 3")).select("doc_id", "text")
@@ -2162,16 +2153,15 @@ def q_streaming_window_rollup(spark, sf):
     bounded events table with trigger(availableNow) into a memory
     sink, re-shaped to the batch twin's schema. Oracle = the batch
     SQL — on bounded input the streaming drain must equal the batch
-    aggregation EXACTLY (multi-drain resume and late-data drop
-    semantics are additionally pytest-proven in
-    tests/test_streaming_stateful.py). Each invocation drains from a
-    fresh checkpoint, so results are reproducible; the returned frame
-    reads the materialized in-memory sink table."""
+    aggregation EXACTLY (multi-drain resume is gated separately by
+    streaming_resume_rollup). Each invocation drains from a fresh
+    checkpoint, so results are reproducible; the returned frame reads
+    the materialized in-memory sink table."""
     import shutil
     import tempfile
     from pathlib import Path
 
-    from .streaming.stateful import EVENTS_SCHEMA
+    from .streaming import EVENTS_SCHEMA
     ck = tempfile.mkdtemp(prefix="dle_stream_gate_")
     # file-source streaming needs a DIRECTORY: stream the sf dir with
     # a glob filter (driver tables are single files, not dirs)
@@ -2220,8 +2210,7 @@ def q_streaming_resume_rollup(spark, sf):
     import tempfile
     from pathlib import Path
 
-    from .streaming.availablenow import run_available_now
-    from .streaming.stateful import EVENTS_SCHEMA
+    from .streaming import EVENTS_SCHEMA, run_available_now
     register_tables(spark, sf)
     ev = spark.table("events").select(
         "event_id", "user_id", "event_type", "value", "ts")

@@ -157,7 +157,7 @@ def test_stream_decontaminate_multibatch_equals_batch(spark, tmp_path):
     parquet files) produce exactly the batch operator's result — the
     zero-cross-batch-state claim in stream_decontaminate's docstring,
     proven, not assumed."""
-    from dle.streaming.stateful import stream_decontaminate
+    from dle.streaming import stream_decontaminate
 
     corpus = [(0, "a b c d e f g h"), (1, "a b c x y z q r"),
               (3, "a b c d e f g h i j"), (7, "p q r s t u v")]

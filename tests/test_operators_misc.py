@@ -1,4 +1,4 @@
-"""Salting, subdivide, generic overlay, registry, dump, streaming."""
+"""Salting, subdivide, generic overlay, dump, sketches, config."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ from dle.operators.intersect import spatial_overlay
 from dle.operators.overlay import dissolve, with_area
 from dle.operators.skew import dissolve_salted, subdivide
 from dle.sources import io as dio
-from dle.sources.registry import Source, to_dataframe, validate
 
 SF = "/root/testdata/sf0.001"
 
@@ -101,26 +100,6 @@ def test_spatial_overlay_schema_and_collision(spark):
         spatial_overlay(a, a, depth=3)
 
 
-def test_registry_validation():
-    good = [Source(process_order=i + 1, designation=f"d{i}")
-            for i in range(4)]
-    assert [s.designation for s in validate(good)] == [
-        "d0", "d1", "d2", "d3"]
-    # exclusions are dropped before the contiguity check
-    withex = good + [Source(process_order=99, designation="x",
-                            exclude="T")]
-    assert len(validate(withex)) == 4
-    with pytest.raises(ValueError, match="contiguous"):
-        validate([Source(process_order=2, designation="a"),
-                  Source(process_order=3, designation="b")])
-    with pytest.raises(ValueError, match="not in 0..5"):
-        validate([Source(process_order=1, designation="a",
-                         forest_restriction=9)])
-    with pytest.raises(ValueError, match="duplicate"):
-        validate([Source(process_order=1, designation="a"),
-                  Source(process_order=2, designation="a")])
-
-
 def test_dump_flattens_arrays(spark, tmp_path):
     df = spark.createDataFrame(
         [("000", ["a", "b"], [1, 2]), ("001", ["c"], [3])],
@@ -131,62 +110,6 @@ def test_dump_flattens_arrays(spark, tmp_path):
            for r in back.collect()}
     assert got["000"] == ("a;b", "1;2")
     assert got["001"] == ("c", "3")
-
-
-def test_registry_from_csv(tmp_path):
-    """C3: parse the reference's sources CSV format — restriction
-    class names map to levels, excluded rows survive parsing (dropped
-    by validate), unknown class names raise."""
-    from dle.sources.registry import from_csv, validate
-
-    p = tmp_path / "sources.csv"
-    p.write_text(
-        "process_order,exclude,name,designation,source_id_col,"
-        "source_name_col,forest_restriction,og_restriction,"
-        "mine_restriction,url,preprocess_operation,preprocess_args\n"
-        "1,,Parks,park,PID,PNAME,Protected,Protected,Protected,"
-        "https://x.example/a,,\n"
-        "2,,Wildlife,wha,WID,WNAME,High,Medium,Low,"
-        "https://x.example/b,clip,land\n"
-        "3,T,Excluded,ex,,,None,None,None,,,\n")
-    srcs = from_csv(str(p))
-    assert [s.process_order for s in srcs] == [1, 2, 3]
-    assert srcs[0].forest_restriction == 5
-    assert srcs[1].og_restriction == 2 and srcs[1].mine_restriction == 1
-    assert srcs[1].preprocess_operation == "clip"
-    assert srcs[0].extras["url"] == "https://x.example/a"
-    kept = validate(srcs)
-    assert [s.designation for s in kept] == ["park", "wha"]
-
-    bad = tmp_path / "bad.csv"
-    bad.write_text(
-        "process_order,designation,forest_restriction,og_restriction,"
-        "mine_restriction\n1,x,Sorta,None,None\n")
-    with pytest.raises(ValueError, match="Invalid forest_restriction"):
-        from_csv(str(bad))
-
-
-def test_registry_to_dataframe(spark):
-    df = to_dataframe(spark, [Source(process_order=1, designation="a")])
-    assert df.collect()[0]["designation"] == "a"
-
-
-def test_streaming_available_now(spark, tmp_path):
-    from dle.streaming.availablenow import stream_cell_counts
-    src = str(tmp_path / "in")
-    pts = spark.createDataFrame(
-        [(1, 0, 400000.0, 500000.0), (2, 0, 900000.0, 900000.0)],
-        "page_id bigint, cand_i int, px double, py double")
-    pts.write.parquet(src)
-    acc: list = []
-    stream_cell_counts(spark, src, acc, str(tmp_path / "ckpt"))
-    assert len(acc) >= 1
-    total = sum(sum(d.values()) for d in acc)
-    assert total == 2
-    # restart: nothing new to process -> no new counted rows
-    acc2: list = []
-    stream_cell_counts(spark, src, acc2, str(tmp_path / "ckpt"))
-    assert sum(sum(d.values()) for d in acc2) == 0
 
 
 def test_kmv_sketch_merge_and_accuracy(spark):
@@ -380,7 +303,7 @@ def test_config_ini_front_end(tmp_path):
     reference's typing rules (designatedlands.py:265-285, :338-353):
     out_path lowercased, n_processes/resolution int()ed, n_processes=-1
     resolved to cores-1 and clamped at the core count, unknown keys
-    carried through, engine `extent` extension parsed to 4 floats."""
+    carried through."""
     import multiprocessing
 
     import pytest
@@ -401,7 +324,6 @@ def test_config_ini_front_end(tmp_path):
     assert cfg["out_path"] == "outputs"           # lowercased
     assert cfg["resolution"] == 25                # int()ed
     assert cfg["n_processes"] == min(4, multiprocessing.cpu_count())
-    assert cfg["extent"] == (0.0, 0.0, 1000.0, 2000.0)
     assert cfg["custom_key"] == "kept"            # plain dict update
     assert cfg["depth"] == DEFAULT_DEPTH          # default preserved
 
