@@ -6,7 +6,7 @@ Precedence is the per-cell fold `insert_difference_fused`: tiled
 layers never interact across cells, so the reference's layer-serial
 loop (/root/reference/designatedlands.py:693-707) runs as one grouped
 UDF over all cells. With `ckpt_root` it is one `checkpoint.run_stage`
-stage, resumable per cell.
+stage, committed and resumed whole.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from ..operators.overlay import (
     clip, dissolve, insert_difference_fused, planarize, with_area,
 )
 from ..sqlgen import dir_fingerprint
-from .checkpoint import Manifest, prune, run_stage
+from .checkpoint import Manifest, run_stage
 
 REG_KEYS = ["designation", "src_id", "src_name", "process_order",
             "forest_restriction", "og_restriction", "mine_restriction"]
@@ -86,22 +86,22 @@ def process_vector(spark: SparkSession, sf_dir: str,
     # differences — the reference's aggregated_insert_difference
     # (sql/aggregated_insert_difference.sql:16-30) — so two same-layer
     # features with different src_id never overlap in the output.
-    def precedence(skip=()):
-        return insert_difference_fused(prune(overlapping, skip).select(
+    def precedence():
+        return insert_difference_fused(overlapping.select(
             "cell", "designation", "process_order", "geom"))
 
     if ckpt_root is None:
         designatedlands = precedence()
     else:
         # Cluster-safe and resumable: the fold commits to reliable
-        # storage through the manifest; a resume folds only the cells
-        # the manifest does not hold. Every input that shapes the
-        # output must fingerprint, the parquet content included, or a
-        # resume against different data reloads a stale stage.
+        # storage, and a rerun whose stage record matches folds
+        # nothing. Every input that shapes the output must
+        # fingerprint, the parquet content included, or a resume
+        # against different data reloads a stale stage.
         designatedlands = run_stage(
             spark, Manifest(f"{ckpt_root}/manifest"), "precedence",
             f"{sf_dir}|{dir_fingerprint(sf_dir)}|depth={depth}"
-            f"|orders={n_orders}|v3",
+            f"|orders={n_orders}|v4",
             precedence, ckpt_root)
 
     # A7 planarize.

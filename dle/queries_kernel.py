@@ -602,19 +602,17 @@ def q_pipeline_resume_rollup(spark, sf, n_orders: int = 8):
     headline resumability, /root/reference/designatedlands.py:503,
     :549-561): the precedence fold (which unions each group itself,
     so the stage is one grouped UDF) as one checkpointed stage
-    (Manifest + run_stage, idempotent dynamic-partition-overwrite
-    commits) is run TWICE against the same checkpoint root; the second
-    pass must find the stage's completion row, so it builds and folds
-    nothing and appends no manifest row, and the rollup is computed
-    from the RESUMED output.
+    (`run_stage`) is run TWICE against the same checkpoint root; the
+    second pass must find the stage's record, so it builds nothing,
+    and the rollup is computed from the RESUMED output.
     Oracle = the same 1-D precedence islands as
     overlay_precedence_area_1d, plus a constant `resumed_ok` column
-    that is 1 only if pass 2 appended no manifest row."""
+    that is 1 only if pass 2 did not build the stage."""
     import hashlib
     import tempfile
     from pathlib import Path
 
-    from .plans.checkpoint import Manifest, prune, run_stage
+    from .plans.checkpoint import Manifest, run_stage
 
     b = datagen.bands_1d(spark, sf, n_orders=n_orders).withColumn(
         "cell", F.col("band").cast("string"))
@@ -626,22 +624,23 @@ def q_pipeline_resume_rollup(spark, sf, n_orders: int = 8):
     tag = hashlib.md5(
         f"{sf}|{sqlgen.dir_fingerprint(sf)}".encode()).hexdigest()[:12]
     root = Path(tempfile.gettempdir()) / f"dle_resume_{tag}"
-    fingerprint = f"{sf}|{tag}|orders={n_orders}|v2"
+    fingerprint = f"{sf}|{tag}|orders={n_orders}|v3"
     man = Manifest(str(root / "manifest"))
+    builds = []
 
-    def precedence(skip):
-        src = prune(b, skip).select(
-            "cell", "designation", "process_order", "geom")
-        return insert_difference_fused(src)
+    def precedence():
+        builds.append(1)
+        return insert_difference_fused(
+            b.select("cell", "designation", "process_order", "geom"))
 
     def run():
         return run_stage(spark, man, "precedence", fingerprint,
                          precedence, str(root))
 
     run()                           # pass 1: compute (or resume) + commit
-    n_rows = len(man.rows("precedence"))
-    acc = run()                     # pass 2: every cell already done
-    resumed_ok = len(man.rows("precedence")) == n_rows
+    n_builds = len(builds)
+    acc = run()                     # pass 2: resumes the committed stage
+    resumed_ok = len(builds) == n_builds
     out = with_area(acc).groupBy("designation").agg(
         F.round(F.sum("area_m2"), 0).cast("bigint").alias("area_m2"))
     return out.withColumn(

@@ -4,9 +4,10 @@
     spark-submit --master <cluster> --py-files dist/dle.zip \
         jobs/process_vector_job.py <sf_dir> <out_dir> [depth]
 
-Runs A4 -> A5/A6 precedence -> A7 planarize with the checkpoint
-manifest (resume-safe: re-running skips completed cells), writes the
-planarized faces + qa rollup JSON to <out_dir>.
+Runs A4 -> A5/A6 precedence -> A7 planarize, with the precedence and
+planarized stages checkpointed under <out_dir>: a rerun against the
+same input resumes each committed stage whole instead of building it.
+Dumps the precedence layer and writes the qa rollup JSON to <out_dir>.
 """
 
 from __future__ import annotations
@@ -33,9 +34,10 @@ def main():
 
     spark = SparkSession.builder.appName("dle-process-vector") \
         .getOrCreate()
-    from dle.operators.overlay import planarize
+    from dataclasses import replace
+
     from dle.plans.pipeline import process_vector, qa_rollups
-    from dle.plans.checkpoint import Manifest, prune, run_stage
+    from dle.plans.checkpoint import Manifest, run_stage
     from dle.sqlgen import dir_fingerprint
     from dle.sources.io import dump
 
@@ -47,14 +49,12 @@ def main():
     # (resume-safe on executor loss).
     out = process_vector(spark, sf_dir, depth=depth,
                          ckpt_root=f"{out_dir}/stages")
-    fingerprint = f"{sf_dir}|{dir_fingerprint(sf_dir)}|depth={depth}"
-    planar = run_stage(
-        spark, man, "planarized", fingerprint,
-        lambda skip: planarize(prune(out.overlapping, skip),
-                               prune(out.boundary_tiled, skip)),
-        out_dir)
+    fingerprint = f"{sf_dir}|{dir_fingerprint(sf_dir)}|depth={depth}|v2"
+    planar = run_stage(spark, man, "planarized", fingerprint,
+                       lambda: out.planarized, out_dir)
     dump(out.designatedlands, f"{out_dir}/designatedlands")
-    qa = qa_rollups(out)
+    # qa reads the committed faces instead of planarizing per rollup
+    qa = qa_rollups(replace(out, planarized=planar))
     qa_flat = {
         "total_land_ha": qa["total_land_ha"],
         "total_planarized_ha": qa["total_planarized_ha"],

@@ -265,23 +265,30 @@ def test_boundary_north_buffer(spark):
         add1 + add2, rel=1e-6)
 
 
-def test_run_stage_reraises_on_corrupt_parquet(tmp_path, spark):
-    """ADVICE r3: a read-back failure with part files PRESENT must not
-    be recorded as an empty completed stage."""
+def test_run_stage_reraises_on_corrupt_parquet(tmp_path, spark,
+                                               monkeypatch):
+    """ADVICE r3: a read-back failure of a committed stage must raise
+    and must not be recorded as a completed stage."""
+    from pathlib import Path
+
+    from pyspark.sql.readwriter import DataFrameReader
+
     from dle.plans.checkpoint import Manifest, run_stage
 
     man = Manifest(str(tmp_path / "manifest"))
     df = spark.createDataFrame([("c1", 1)], "cell string, v int")
-    run_stage(spark, man, "s1", "fp", lambda skip: df, str(tmp_path))
-    # corrupt every part file of the committed stage
-    parts = list((tmp_path / "s1").rglob("*.parquet"))
-    assert parts
-    for p in parts:
-        p.write_bytes(b"corrupt")
-    man.clear("s1")
-    # second run commits a DIFFERENT cell, so the corrupt c1 part file
-    # survives into the whole-directory read-back
-    df2 = spark.createDataFrame([("c2", 2)], "cell string, v int")
+    real = DataFrameReader.parquet
+    corrupted = []
+
+    def corrupt_then_read(self, *paths, **kw):
+        # corrupt every part file the write committed, then read back
+        for f in (f for p in paths for f in Path(p).rglob("*.parquet")):
+            f.write_bytes(b"corrupt")
+            corrupted.append(f)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", corrupt_then_read)
     with pytest.raises(Exception):
-        run_stage(spark, man, "s1", "fp", lambda skip: df2,
-                  str(tmp_path))
+        run_stage(spark, man, "s1", "fp", lambda: df, str(tmp_path))
+    assert corrupted
+    assert man.record("s1") is None

@@ -1,5 +1,5 @@
-"""Checkpoint manifest: idempotent commits, zero-row cell recording,
-manifest-only resume of a finished stage, and kill/resume for the
+"""Checkpointed stages: idempotent commits, zero-row stages, a
+finished stage resumed from its record alone, and kill/resume for the
 checkpointed precedence stage (north rule: "resumable from checkpoint
 with per-partition lineage + metrics"; VERDICT r1 next-steps #9 +
 ADVICE medium finding)."""
@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dle.plans import pipeline
-from dle.plans.checkpoint import STAGE_DONE, Manifest, prune, run_stage
+from dle.plans.checkpoint import Manifest, run_stage
 
 SF = "/root/testdata/sf0.001"
 
@@ -22,68 +22,97 @@ def _input(spark):
 
 
 def test_run_stage_recommit_is_idempotent(spark, tmp_path):
-    """Crash between parquet commit and manifest append must NOT
-    duplicate rows on resume: the recomputed cell REPLACES its
-    partition (dynamic partition overwrite)."""
+    """A crash between the parquet commit and the record write must NOT
+    duplicate rows on the rebuild: its overwrite replaces the whole
+    stage directory."""
     man = Manifest(str(tmp_path / "m"))
     df = _input(spark)
-    out = run_stage(spark, man, "s", "fp", lambda skip: df,
-                    str(tmp_path / "o"))
+    out = run_stage(spark, man, "s", "fp", lambda: df, str(tmp_path / "o"))
     assert out.count() == 4
-    # simulate the crash: parquet committed, manifest lost
+    # simulate the crash: parquet committed, record lost
     man.clear("s")
-    out2 = run_stage(spark, man, "s", "fp", lambda skip: df,
+    out2 = run_stage(spark, man, "s", "fp", lambda: df,
                      str(tmp_path / "o"))
     assert out2.count() == 4  # not 8
-    assert {r["cell"] for r in man.rows("s")
-            if r["cell"] != STAGE_DONE} == {"000", "001", "002"}
+    assert man.record("s")["cells"] == {"000": 2, "001": 1, "002": 1}
 
 
-def test_run_stage_skips_done_cells(spark, tmp_path):
+def test_run_stage_record_counts_cells(spark, tmp_path):
+    """The stage record holds the per-cell row counts of the frame the
+    call returns, and their total."""
+    man = Manifest(str(tmp_path / "m"))
+    df = _input(spark).union(spark.createDataFrame(
+        [("003", 5), ("003", 6), ("003", 7)], "cell string, v int"))
+    out = run_stage(spark, man, "s", "fp", lambda: df, str(tmp_path / "o"))
+    rec = man.record("s")
+    assert rec["cells"] == {r["cell"]: r["count"] for r in
+                            out.groupBy("cell").count().collect()}
+    assert rec["rows"] == out.count() == 7
+
+
+def test_run_stage_keeps_quadkey_strings_under_type_inference(
+        spark, tmp_path):
+    """With partition-column type inference on (a plain session's
+    default), the computing call and the resuming call return the same
+    `cell` strings: quadkeys keep their leading zeros."""
+    conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "true")
+    try:
+        man = Manifest(str(tmp_path / "m"))
+        df = spark.createDataFrame([("0232", 1), ("0001", 2)],
+                                   "cell string, v int")
+
+        def cells():
+            out = run_stage(spark, man, "s", "fp", lambda: df,
+                            str(tmp_path / "o"))
+            return sorted(r["cell"] for r in out.collect())
+
+        assert cells() == cells() == ["0001", "0232"]
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def test_run_stage_failed_rebuild_leaves_no_stale_resume(spark, tmp_path):
+    """A stage committed under fingerprint A, then a rebuild under B
+    that raises mid-write: a call under A builds the stage again and
+    returns its rows, not the directory the failed write emptied."""
     man = Manifest(str(tmp_path / "m"))
     df = _input(spark)
-    run_stage(spark, man, "s", "fp", lambda skip: df,
-              str(tmp_path / "o"))
-    # without its completion row the stage resumes cell by cell
-    cells = [r for r in man.rows("s") if r["cell"] != STAGE_DONE]
-    man.clear("s")
-    man.append("s", cells)
-    seen = []
+    want = sorted(run_stage(spark, man, "s", "A", lambda: df,
+                            str(tmp_path / "o")).collect())
+    with pytest.raises(Exception, match="raised on cell 001"):
+        run_stage(spark, man, "s", "B",
+                  lambda: df.mapInPandas(_raise_on(["001"]), df.schema),
+                  str(tmp_path / "o"))
+    assert man.record("s") is None
+    calls = []
 
-    def build(skip):
-        seen.append(set(skip))
+    def build():
+        calls.append(1)
+        return df
+
+    got = run_stage(spark, man, "s", "A", build, str(tmp_path / "o"))
+    assert calls and sorted(got.collect()) == want
+
+
+def test_run_stage_unreadable_record_rebuilds(spark, tmp_path):
+    """A manifest file that does not parse is no record: the stage is
+    built again, and the rebuild does not double its rows."""
+    man = Manifest(str(tmp_path / "m"))
+    df = _input(spark)
+    run_stage(spark, man, "s", "fp", lambda: df, str(tmp_path / "o"))
+    rec = man.record("s")
+    man._path("s").write_bytes(b'{"stage": "s", "fingerp\x00')
+    calls = []
+
+    def build():
+        calls.append(1)
         return df
 
     out = run_stage(spark, man, "s", "fp", build, str(tmp_path / "o"))
-    assert seen[0] == {"000", "001", "002"}
-    assert out.count() == 4  # done cells retained from parquet
-
-
-def test_manifest_append_after_torn_line_keeps_first_record(tmp_path):
-    """A kill mid-append leaves a torn last line; the next append ends
-    it first, so its own first record is not glued onto the torn line
-    and lost with it."""
-    man = Manifest(str(tmp_path / "m"))
-    a, c, done = ({"cell": k} for k in ("a", "c", STAGE_DONE))
-    man.append("s", [a])
-    with man._path("s").open("a") as f:
-        f.write('{"cell": "b", "fingerp')
-    man.append("s", [c, done])
-    assert man.rows("s") == [a, c, done]
-
-
-def test_run_stage_zero_row_cell_among_nonempty(spark, tmp_path):
-    man = Manifest(str(tmp_path / "m"))
-    df = _input(spark).where("cell <> '002'")
-    run_stage(spark, man, "s", "fp", lambda skip: df,
-              str(tmp_path / "o"),
-              planned_cells=["000", "001", "002"])
-    recs = {r["cell"]: r["rows"] for r in man.rows("s")
-            if r["cell"] != STAGE_DONE}
-    assert recs == {"000": 2, "001": 1, "002": 0}
-    # resume: the zero-row cell is NOT recomputed
-    done = man.done_cells("s", "fp")
-    assert "002" in done
+    assert calls and out.count() == 4
+    assert man.record("s")["cells"] == rec["cells"]
 
 
 def test_run_stage_zero_row_stage_no_crash(spark, tmp_path):
@@ -93,34 +122,33 @@ def test_run_stage_zero_row_stage_no_crash(spark, tmp_path):
     the stage as done so resumes skip it."""
     man = Manifest(str(tmp_path / "m"))
     empty = _input(spark).where("v > 99")
-    out = run_stage(spark, man, "s", "fp", lambda skip: empty,
+    out = run_stage(spark, man, "s", "fp", lambda: empty,
                     str(tmp_path / "o"))
     assert out.count() == 0
     assert set(out.columns) == {"cell", "v"}
-    rows = man.rows("s")
-    assert rows and sum(r["rows"] for r in rows) == 0
-    # re-entry is also crash-free and does not duplicate the marker
-    out2 = run_stage(spark, man, "s", "fp", lambda skip: empty,
+    rec = man.record("s")
+    assert rec["rows"] == 0 and rec["cells"] == {}
+    # re-entry is also crash-free and leaves the record as it was
+    out2 = run_stage(spark, man, "s", "fp", lambda: empty,
                      str(tmp_path / "o"))
     assert out2.count() == 0
-    assert len(man.rows("s")) == len(rows)
+    assert man.record("s") == rec
 
 
 @pytest.mark.parametrize("where", ["true", "v > 99"],
                          ids=["rows", "zero_rows"])
 def test_run_stage_complete_stage_starts_no_job(spark, tmp_path, where):
-    """A stage whose manifest holds its completion row resumes from the
-    manifest alone: build_df is never called, no job runs in the call's
-    job group, and the frame has the computing call's schema, column
-    order and rows (an empty frame of the build schema for a stage with
-    no output)."""
+    """A stage whose record matches resumes from the record alone:
+    build is never called, no job runs in the call's job group, and
+    the frame has the computing call's schema, column order and rows
+    (an empty frame of the build schema for a stage with no output)."""
     sc = spark.sparkContext
     man = Manifest(str(tmp_path / "m"))
     df = _input(spark).where(where)
     calls = []
 
-    def build(skip):
-        calls.append(set(skip))
+    def build():
+        calls.append(1)
         return df
 
     def in_group(group):
@@ -134,38 +162,34 @@ def test_run_stage_complete_stage_starts_no_job(spark, tmp_path, where):
 
     first, first_jobs = in_group(f"ckpt-compute-{where}")
     assert len(calls) == 1 and first_jobs
-    n_rows = len(man.rows("s"))
+    rec = man.record("s")
     resumed, resumed_jobs = in_group(f"ckpt-resume-{where}")
     assert len(calls) == 1
     assert resumed_jobs == []
     assert resumed.schema == first.schema  # column order included
     assert sorted(resumed.collect()) == sorted(first.collect())
-    assert len(man.rows("s")) == n_rows
+    assert man.record("s") == rec
     if where != "true":
         assert resumed.schema == df.schema
 
 
 def test_run_stage_cell_without_output_reruns_no_cell(spark, tmp_path):
-    """An input cell whose output is empty, with no planned_cells to
-    record it, is not recomputed on a rerun: the completed stage folds
-    no input row at all."""
+    """An input cell whose output is empty is not recomputed on a
+    rerun: the completed stage folds no input row at all."""
     man = Manifest(str(tmp_path / "m"))
     src = _input(spark)
 
-    def build(skip, guard=False):
-        kept = prune(src, skip)
-        if guard:
-            kept = kept.mapInPandas(_raise_on(), kept.schema)
+    def build(guard=False):
+        kept = src.mapInPandas(_raise_on(), src.schema) if guard else src
         return kept.where("cell <> '002'")
 
     out = run_stage(spark, man, "s", "fp", build, str(tmp_path / "o"))
     assert out.count() == 3
-    rows = man.rows("s")
-    out2 = run_stage(spark, man, "s", "fp",
-                     lambda skip: build(skip, guard=True),
+    rec = man.record("s")
+    out2 = run_stage(spark, man, "s", "fp", lambda: build(guard=True),
                      str(tmp_path / "o"))
     assert out2.count() == 3
-    assert man.rows("s") == rows
+    assert man.record("s") == rec
 
 
 def _rollup(df):
@@ -217,34 +241,11 @@ def test_precedence_stage_resumes_after_kill(spark, tmp_path,
     with pytest.raises(Exception, match=f"raised on cell {victim}"):
         pipeline.process_vector(spark, SF, depth=2, ckpt_root=ckpt)
     monkeypatch.undo()
-    assert not Manifest(f"{ckpt}/manifest").rows("precedence")
+    assert Manifest(f"{ckpt}/manifest").record("precedence") is None
 
     resumed = pipeline.process_vector(spark, SF, depth=2,
                                       ckpt_root=ckpt)
     assert _rollup(resumed.designatedlands) == baseline
-
-
-def test_precedence_stage_resume_folds_only_unfinished_cells(
-        spark, tmp_path, monkeypatch):
-    """A manifest that lost half its cells (a kill between the parquet
-    commit and the manifest append) resumes by folding only the lost
-    cells; done cells never reach the fold."""
-    ckpt = str(tmp_path / "ck")
-    full = _rollup(pipeline.process_vector(
-        spark, SF, depth=2, ckpt_root=ckpt).designatedlands)
-    man = Manifest(f"{ckpt}/manifest")
-    rows = man.rows("precedence")
-    kept = rows[: len(rows) // 2]
-    assert kept and len(kept) < len(rows)
-    man.clear("precedence")
-    man.append("precedence", kept)
-
-    _guard_fold(monkeypatch, [r["cell"] for r in kept])
-    resumed = pipeline.process_vector(spark, SF, depth=2,
-                                      ckpt_root=ckpt)
-    assert _rollup(resumed.designatedlands) == full
-    assert sorted(r["cell"] for r in man.rows("precedence")) == \
-        sorted(r["cell"] for r in rows)
 
 
 def test_precedence_stage_drops_eclipsed_designation(spark, tmp_path,
@@ -279,8 +280,8 @@ def test_precedence_stage_drops_eclipsed_designation(spark, tmp_path,
               .distinct().collect()}
     assert desigs and "eclipsed" not in desigs
     man = Manifest(f"{ckpt}/manifest")
-    n_rows = len(man.rows("precedence"))
-    assert n_rows
+    rec = man.record("precedence")
+    assert rec
 
     monkeypatch.undo()
     _guard_fold(monkeypatch)
@@ -289,7 +290,7 @@ def test_precedence_stage_drops_eclipsed_designation(spark, tmp_path,
     assert {r["designation"] for r in
             resumed.designatedlands.select("designation")
             .distinct().collect()} == desigs
-    assert len(man.rows("precedence")) == n_rows
+    assert man.record("precedence") == rec
 
 
 def test_pipeline_resume_rollup_reruns_on_same_size_same_mtime_rewrite(

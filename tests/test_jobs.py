@@ -7,6 +7,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+from conftest import SF_SMOKE
+
 REPO = Path(__file__).resolve().parents[1]
 
 
@@ -99,3 +101,31 @@ def test_text_pipeline_job_end_to_end(tmp_path):
         f"select count(*) from '{out_dir}/*.parquet'"
         " where doc_id % 11 = 3").fetchone()
     assert n_eval == 0
+
+
+def test_process_vector_job_reruns_from_stage_records(tmp_path):
+    """The process-vector entry point run twice into one out dir: the
+    rerun resumes both checkpointed stages (their records stay byte for
+    byte), reports the same qa rollup, and both runs dump quadkey cells
+    with their leading zeros (depth 2: every cell is 2 characters)."""
+    out_dir = tmp_path / "pv"
+    records = [out_dir / "stages" / "manifest" / "precedence.manifest.jsonl",
+               out_dir / "manifest" / "planarized.manifest.jsonl"]
+
+    def run():
+        res = subprocess.run(
+            [sys.executable, "jobs/process_vector_job.py",
+             SF_SMOKE, str(out_dir), "2"],
+            capture_output=True, text=True, cwd=REPO, timeout=600)
+        assert res.returncode == 0, res.stderr[-2000:]
+        cells = [p.name.removeprefix("cell=") for p in
+                 (out_dir / "designatedlands").glob("cell=*")]
+        return ([p.read_bytes() for p in records],
+                json.loads((out_dir / "qa.json").read_text()), cells)
+
+    recs1, qa1, cells1 = run()
+    recs2, qa2, cells2 = run()
+    assert recs2 == recs1
+    assert qa2 == qa1
+    assert cells1 and cells2
+    assert all(len(c) == 2 for c in cells1 + cells2), (cells1, cells2)

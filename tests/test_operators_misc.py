@@ -301,11 +301,8 @@ def test_tile_geoms_mixed_prefix_and_area(spark):
 def test_config_ini_front_end(tmp_path):
     """VERDICT r5 #6: reference-format INI merge over defaults with the
     reference's typing rules (designatedlands.py:265-285, :338-353):
-    out_path lowercased, n_processes/resolution int()ed, n_processes=-1
-    resolved to cores-1 and clamped at the core count, unknown keys
-    carried through."""
-    import multiprocessing
-
+    out_path lowercased, depth int()ed, keys no job reads carried
+    through."""
     import pytest
 
     from dle.config import (ConfigValueError, DEFAULT_DEPTH,
@@ -322,20 +319,13 @@ def test_config_ini_front_end(tmp_path):
         "custom_key=kept\n")
     cfg = load_config(str(cfg_file))
     assert cfg["out_path"] == "outputs"           # lowercased
-    assert cfg["resolution"] == 25                # int()ed
-    assert cfg["n_processes"] == min(4, multiprocessing.cpu_count())
     assert cfg["custom_key"] == "kept"            # plain dict update
     assert cfg["depth"] == DEFAULT_DEPTH          # default preserved
-
-    # defaults only: n_processes -1 -> cores-1 (designatedlands:280-285)
-    d = load_config(None)
-    assert d["n_processes"] == multiprocessing.cpu_count() - 1
-    assert d["resolution"] == 10
 
     with pytest.raises(ConfigValueError):
         load_config(str(tmp_path / "missing.cfg"))
     bad = tmp_path / "bad.cfg"
-    bad.write_text("[designatedlands]\nresolution=ten\n")
+    bad.write_text("[designatedlands]\ndepth=ten\n")
     with pytest.raises(ConfigValueError):
         load_config(str(bad))
 
@@ -343,4 +333,4 @@ def test_config_ini_front_end(tmp_path):
     argv = ["--config", str(cfg_file), "in_dir", "out_dir"]
     got = pop_config(argv)
     assert argv == ["in_dir", "out_dir"]
-    assert got["resolution"] == 25
+    assert got == cfg
