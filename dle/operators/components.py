@@ -24,38 +24,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
+# Edge-count cap of the driver union-find (see connected_components) and
+# the pass cap of the distributed loop.
+DRIVER_MAX_EDGES = 400_000
+MAX_ITERS = 32
+
+
 def connected_components(pairs: DataFrame, a: str = "doc_a",
-                         b: str = "doc_b",
-                         max_iters: int = 32,
-                         driver_max_edges: int = 400_000) -> DataFrame:
+                         b: str = "doc_b") -> DataFrame:
     """(node, component) for every node in >= 1 pair; component =
     min node id reachable. Deterministic for any partitioning.
 
-    DISPATCH (as `curation.decontaminate` picks broadcast vs shuffle):
-    near-dup candidate graphs are dup-bounded — usually tiny relative
-    to the corpus — and the distributed loop pays ~1-2 s of job
-    latency PER PASS (edge persist + propagation join + convergence
-    collect).  At or under ``driver_max_edges`` the edge list is
+    DISPATCH: near-dup candidate graphs are dup-bounded — usually tiny
+    relative to the corpus — and the distributed loop pays ~1-2 s of
+    job latency PER PASS (edge persist + propagation join + convergence
+    collect).  At or under ``DRIVER_MAX_EDGES`` the edge list is
     collected once and closed with a path-compressed min-root
-    union-find on the driver: identical output (pytest-pinned), one
-    job total.  The probe is ``limit(cap+1).collect()`` — when under
-    the cap the collected rows ARE the edges, so the probe costs no
-    second execution of the (often expensive) pair plan.  Above the
-    cap — crawl-scale graphs where dup sets are a large corpus
-    fraction — the O(diameter) min-label propagation below runs
-    unchanged.  Pass ``driver_max_edges=0`` to force the distributed
-    path.
+    union-find on the driver: identical output (pytest-pinned on both
+    sides of the cap), one job total.  The probe is
+    ``limit(cap+1).collect()`` — when under the cap the collected rows
+    ARE the edges, so the probe costs no second execution of the
+    (often expensive) pair plan.  Above the cap — crawl-scale graphs
+    where dup sets are a large corpus fraction — the O(diameter)
+    min-label propagation below runs, at most ``MAX_ITERS`` passes.
 
     DRIVER-MEMORY NOTE (ADVICE/VERDICT r6 #3): the cap bounds a
-    driver-side collect of PySpark Row objects at ~100+ bytes each —
-    the old 2M default meant hundreds of MB of Python heap on a stock
-    8-16 GB production driver. 400k edges ≈ tens of MB, safe on a
-    default driver; heavy callers with big driver heaps can opt in to
-    a larger cap explicitly."""
-    if driver_max_edges:
-        rows = pairs.limit(driver_max_edges + 1).collect()
-        if len(rows) <= driver_max_edges:
-            return _driver_components(pairs, rows, a, b)
+    driver-side collect of PySpark Row objects at ~100+ bytes each;
+    400k edges ≈ tens of MB, safe on a default 8-16 GB driver."""
+    rows = pairs.limit(DRIVER_MAX_EDGES + 1).collect()
+    if len(rows) <= DRIVER_MAX_EDGES:
+        return _driver_components(pairs, rows, a, b)
     edges = (pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
              .unionByName(pairs.select(F.col(b).alias("u"),
                                        F.col(a).alias("v")))
@@ -64,7 +62,7 @@ def connected_components(pairs: DataFrame, a: str = "doc_a",
               .select("node", F.col("node").alias("label"))
               .localCheckpoint())
     prev = labels.agg(F.sum("label")).collect()[0][0]
-    for _ in range(max_iters):
+    for _ in range(MAX_ITERS):
         prop = (edges.join(labels, edges.v == F.col("node"))
                 .groupBy("u").agg(F.min("label").alias("nl")))
         labels = (labels.join(prop, labels.node == prop.u, "left")
@@ -126,10 +124,9 @@ def dedup_survivors(corpus: DataFrame, pairs: DataFrame,
     id (AQE broadcasts it when the graph is small, shuffle-hash
     otherwise); the corpus is touched exactly once. Driver-side
     materialization is bounded by connected_components' dispatch: at
-    or under its ``driver_max_edges`` cap the candidate edge list is
-    collected once for the union-find fast path; above it the
-    distributed loop collects only a single convergence scalar per
-    pass.
+    or under ``DRIVER_MAX_EDGES`` the candidate edge list is collected
+    once for the union-find fast path; above it the distributed loop
+    collects only a single convergence scalar per pass.
 
     Every corpus column passes through (e.g. a cluster id for semantic
     dedup); output appends (canonical_id, kept). ``canonical_id`` is

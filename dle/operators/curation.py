@@ -5,10 +5,10 @@ the engine did not yet expose as first-class operators.
 Scale shapes (the 100-TB story):
 
 * ``decontaminate`` — the benchmark/eval side is KB-MB scale in
-  production (a few thousand eval documents), so its shingle inverted
-  index is BROADCAST; the corpus side computes shingles in-scan
-  (array HOF + in-task explode, no shuffle) and the broadcast hash
-  join drops every non-matching shingle map-side.  The only exchange
+  production (a few thousand eval documents), so Spark's planner
+  broadcasts its shingle rows; the corpus side computes shingles
+  in-scan (array HOF + in-task explode, no shuffle) and the broadcast
+  hash join drops every non-matching shingle map-side.  The only exchange
   carries MATCHED (doc, bench, shingle) rows — bounded by actual
   contamination volume, not corpus size.  No O(corpus x bench) pair
   enumeration ever exists.
@@ -50,8 +50,7 @@ def shingle_expr(n: int = 3, text_col: str = "text",
 def decontaminate(corpus: DataFrame, bench: DataFrame, *, n: int = 3,
                   min_shared: int = 3, id_col: str = "doc_id",
                   bench_id_col: str = "bench_id",
-                  text_col: str = "text",
-                  max_broadcast_shingles: int = 5_000_000) -> DataFrame:
+                  text_col: str = "text") -> DataFrame:
     """Flag corpus documents sharing >= ``min_shared`` distinct word
     ``n``-gram shingles with any benchmark document.
 
@@ -65,20 +64,14 @@ def decontaminate(corpus: DataFrame, bench: DataFrame, *, n: int = 3,
     split); docs shorter than ``n`` tokens cannot share an n-gram and
     are dropped on both sides.
 
-    AUTO-DISPATCH (VERDICT r5 #2, the pip_polygon_precedence_fold
-    pattern): the bench side is broadcast only while its exploded
-    shingle row count stays at or under ``max_broadcast_shingles``
-    (production eval suites are KB-MB — thousands of docs, well
-    under); a mega-benchmark suite above the cap transparently falls
-    back to a shuffle shingle join (both sides exchange on `_sh`),
-    which returns identical results (pytest-pinned on the gate
-    fixture).  The probe is a limit(cap+1).count() — it never
-    materializes more than cap+1 bench shingle rows.
+    The shingle join is a plain equi-join on the shingle: Spark's
+    planner picks its strategy from the bench side's size estimate,
+    and broadcasts a KB-MB eval suite (pytest plan-asserted). Building
+    the frame starts no Spark job.
     """
     ov = _overlap_pairs(corpus, bench, n=n, min_shared=min_shared,
                         id_col=id_col, bench_id_col=bench_id_col,
-                        text_col=text_col,
-                        max_broadcast_shingles=max_broadcast_shingles)
+                        text_col=text_col)
     return ov.groupBy(id_col).agg(
         F.count("*").alias("n_bench"),
         F.max("shared").alias("max_shared"),
@@ -87,13 +80,12 @@ def decontaminate(corpus: DataFrame, bench: DataFrame, *, n: int = 3,
 
 def _overlap_pairs(corpus: DataFrame, bench: DataFrame, *, n: int,
                    min_shared: int, id_col: str, bench_id_col: str,
-                   text_col: str,
-                   max_broadcast_shingles: int) -> DataFrame:
+                   text_col: str) -> DataFrame:
     """(id_col, bench_id_col, shared) for every corpus x bench doc
     pair sharing >= ``min_shared`` distinct word n-gram shingles —
     the physical core shared by ``decontaminate`` (per-corpus-doc
-    rollup) and ``contamination_report`` (per-bench-doc rollup).
-    Broadcast-vs-shuffle dispatch as documented on ``decontaminate``."""
+    rollup) and ``contamination_report`` (per-bench-doc rollup); the
+    join strategy is Spark's, as documented on ``decontaminate``."""
     sh = shingle_expr(n, text_col, toks="_toks")
     guard = f"size(split({text_col}, ' ')) >= {n}"
 
@@ -104,14 +96,7 @@ def _overlap_pairs(corpus: DataFrame, bench: DataFrame, *, n: int,
                   .select(F.col(id_col).alias(out_id),
                           F.explode(F.expr(sh)).alias("_sh")))
 
-    bench_rows = rows(bench, bench_id_col)
-    n_probe = bench_rows.limit(max_broadcast_shingles + 1).count()
-    if n_probe > max_broadcast_shingles:
-        joined = rows(corpus, id_col).join(
-            bench_rows.hint("shuffle_hash"), "_sh")
-    else:
-        joined = rows(corpus, id_col).join(F.broadcast(bench_rows), "_sh")
-    return (joined
+    return (rows(corpus, id_col).join(rows(bench, bench_id_col), "_sh")
             .groupBy(id_col, bench_id_col)
             .agg(F.count("*").alias("shared"))
             .where(F.col("shared") >= min_shared))
@@ -121,9 +106,7 @@ def contamination_report(corpus: DataFrame, bench: DataFrame, *,
                          n: int = 3, min_shared: int = 3,
                          id_col: str = "doc_id",
                          bench_id_col: str = "bench_id",
-                         text_col: str = "text",
-                         max_broadcast_shingles: int = 5_000_000
-                         ) -> DataFrame:
+                         text_col: str = "text") -> DataFrame:
     """The TRANSPOSED decontamination rollup — one row per BENCHMARK
     doc (all of them, zeros included): how many training docs leak it
     (``n_contaminating``), the largest single-doc shingle overlap
@@ -138,8 +121,7 @@ def contamination_report(corpus: DataFrame, bench: DataFrame, *,
     once, map-side."""
     ov = _overlap_pairs(corpus, bench, n=n, min_shared=min_shared,
                         id_col=id_col, bench_id_col=bench_id_col,
-                        text_col=text_col,
-                        max_broadcast_shingles=max_broadcast_shingles)
+                        text_col=text_col)
     per = ov.groupBy(bench_id_col).agg(
         F.count("*").alias("_n"), F.max("shared").alias("_mx"),
         F.sum("shared").alias("_sm"))

@@ -46,13 +46,9 @@ def _collect_features(rects: DataFrame, op: str):
     """The feature table as numpy arrays (fid, x0, y0, x1, y1) ordered by
     feat_id — array position is the feat_id tiebreak rank. One bounded
     driver collect: raises ValueError above MAX_BROADCAST_FEATURES."""
-    cap = spatial_join.MAX_BROADCAST_FEATURES
-    rows = (rects.select("feat_id", "x0", "y0", "x1", "y1")
-            .orderBy("feat_id").limit(cap + 1).collect())
-    if len(rows) > cap:
-        raise ValueError(
-            f"{op}: feature table exceeds the {cap}-row broadcast cap "
-            "(MAX_BROADCAST_FEATURES)")
+    rows = spatial_join.collect_dimension(
+        rects.select("feat_id", "x0", "y0", "x1", "y1").orderBy("feat_id"),
+        op)
     cols = list(zip(*rows)) or [()] * 5
     return (np.array(cols[0], dtype=np.int64),
             *(np.array(c, dtype=np.float64) for c in cols[1:]))

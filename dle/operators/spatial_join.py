@@ -30,6 +30,20 @@ from ..cells import sql_cell_xy, sql_cover_xy, sql_quadkey
 MAX_BROADCAST_FEATURES = 200_000
 
 
+def collect_dimension(df: DataFrame, op: str) -> list:
+    """The rows of dimension table `df`, in one bounded driver collect
+    of at most MAX_BROADCAST_FEATURES + 1 rows; raises ValueError,
+    naming `op` and the cap, when there are more. The cap is read at
+    call time, so one setting covers every caller."""
+    cap = MAX_BROADCAST_FEATURES
+    rows = df.limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(
+            f"{op}: feature table exceeds the {cap}-row broadcast cap "
+            "(MAX_BROADCAST_FEATURES)")
+    return rows
+
+
 def _cell_col(x_expr: str, y_expr: str, depth: int) -> Column:
     cx, cy = sql_cell_xy(x_expr, y_expr, depth)
     return F.expr(sql_quadkey(cx, cy, depth, "spark"))
@@ -65,7 +79,7 @@ def with_cover_cells(df: DataFrame, depth: int) -> DataFrame:
 
 
 def _cell_join(points: DataFrame, feats: DataFrame, depths: list[int],
-               px: str, py: str, broadcast: bool = True) -> DataFrame:
+               px: str, py: str) -> DataFrame:
     """The one cell equi-join of the point pair joins: each point takes
     its quadkey at every depth in `depths`, joins the cell-keyed
     `feats` (broadcast: the dimension side), and keeps the pairs whose
@@ -73,8 +87,7 @@ def _cell_join(points: DataFrame, feats: DataFrame, depths: list[int],
     cells = [_cell_col(px, py, d) for d in sorted(set(depths))]
     p = points.withColumn(
         "cell", cells[0] if len(cells) == 1 else F.explode(F.array(*cells)))
-    f = F.broadcast(feats) if broadcast else feats
-    return p.join(f, "cell").where(F.expr(_in_bbox(px, py)))
+    return p.join(F.broadcast(feats), "cell").where(F.expr(_in_bbox(px, py)))
 
 
 def pip_join_rects(points: DataFrame, rects: DataFrame, depth: int,
@@ -176,8 +189,7 @@ def _pip_refine_udf():
 
 def pip_join_polygons(points: DataFrame, polys: DataFrame, depth: int,
                       px: str = "px", py: str = "py",
-                      geom: str = "geom",
-                      broadcast_polys: bool = True) -> DataFrame:
+                      geom: str = "geom") -> DataFrame:
     """Point-in-POLYGON spatial join for arbitrary WKB features — the
     exact-predicate form of the reference's per-tile ST_Intersects /
     ST_Contains joins (/root/reference/sql/tile.sql:52,
@@ -190,10 +202,9 @@ def pip_join_polygons(points: DataFrame, polys: DataFrame, depth: int,
     Arrow-batch kernel over the surviving candidates only. At 100 TB
     the refine cost is bounded by candidate pairs (bbox-filtered), not
     points x features, and runs scan-side in the same stage as the
-    broadcast join. `broadcast_polys=False` shuffles both sides by cell
-    instead (the big-dimension fallback)."""
+    broadcast join."""
     cand = _cell_join(points, with_cover_cells(polys, depth), [depth],
-                      px, py, broadcast_polys)
+                      px, py)
     refine = _pip_refine_udf()
     return cand.where(refine(F.col(px), F.col(py), F.col(geom)))
 
@@ -204,9 +215,6 @@ def pip_polygon_precedence_fold(points: DataFrame, polys: DataFrame,
                                 geom: str = "geom",
                                 order_col: str = "process_order",
                                 tiebreak: str = "feat_id",
-                                point_keys: list[str] | None = None,
-                                max_broadcast_features: int = (
-                                    MAX_BROADCAST_FEATURES),
                                 ) -> DataFrame:
     """ZERO-POINT-EXCHANGE precedence over ARBITRARY polygon layers —
     the polygon-exact analogue of the rect path's in-scan fold
@@ -226,8 +234,9 @@ def pip_polygon_precedence_fold(points: DataFrame, polys: DataFrame,
     Arrow deserialize each cell's features (incl. WKB) once PER POINT,
     which dominated the stage (measured 8.5 s -> this form 2.5 s at
     sf0.1). The collect is dimension-sized — the reference registry is
-    42 layers / thousands of features; for feature sets too large to
-    broadcast, use pip_join_polygons + precedence_resolve instead.
+    42 layers / thousands of features — and bounded: above
+    MAX_BROADCAST_FEATURES rows the call raises (collect_dimension), as
+    the kNN joins do.
 
     Inside the UDF, candidate rows are grouped by FEATURE across the
     whole batch (points arrive cell-shuffled, so per-cell grouping
@@ -242,36 +251,16 @@ def pip_polygon_precedence_fold(points: DataFrame, polys: DataFrame,
     per-batch grouping keys candidates by tiebreak, so a duplicate id
     would winding-test points against the wrong geometry) and must fit
     the int64 winner encoding: 0 <= tiebreak < 2^33 and
-    0 <= order < 2^30 (ADVICE r4).
-
-    AUTO-DISPATCH (VERDICT r4 #2): when the dimension side exceeds
-    `max_broadcast_features` rows (the reference registry is 42 layers
-    / thousands of features — far below it), the driver-broadcast
-    index is no longer the right physical shape; the call transparently
-    falls back to the shuffle-safe pair-emit path (pip_join_polygons +
-    a map-side-combinable argmin + a left join back onto the points),
-    which returns the IDENTICAL schema and values (pytest-pinned on
-    the triangle fixture). The fallback groups by `point_keys`
-    (default: every point column except px/py)."""
+    0 <= order < 2^30 (ADVICE r4)."""
     import pandas as pd
 
     from ..cells import cover, point_cell_np
     from ..geom import kernel as K
     from ..geom import wkb as W
 
-    # Single dimension-side job for dispatch + index build (ADVICE r5
-    # #2): collect at most cap+1 rows; if the cap is exceeded fall back
-    # (only then does the pair path re-execute the dim plan), otherwise
-    # the collected rows ARE the full dimension side — the old separate
-    # count() ran the dim plan twice on the common broadcast path.
-    dim_rows = (polys.select("x0", "y0", "x1", "y1", order_col,
-                             tiebreak, geom)
-                .limit(max_broadcast_features + 1).collect())
-    if len(dim_rows) > max_broadcast_features:
-        return _pip_polygon_precedence_pairs(
-            points, polys, depth, px=px, py=py, geom=geom,
-            order_col=order_col, tiebreak=tiebreak,
-            point_keys=point_keys)
+    dim_rows = collect_dimension(
+        polys.select("x0", "y0", "x1", "y1", order_col, tiebreak, geom),
+        "pip_polygon_precedence_fold")
 
     index: dict = {}
     seen: dict = {}
@@ -342,58 +331,3 @@ def pip_polygon_precedence_fold(points: DataFrame, polys: DataFrame,
             .withColumn(f"win_{tiebreak}",
                         F.when(F.col("_w.c"), F.col("_w.t")))
             .drop("_w"))
-
-
-def _pip_polygon_precedence_pairs(points: DataFrame, polys: DataFrame,
-                                  depth: int, px: str, py: str,
-                                  geom: str, order_col: str,
-                                  tiebreak: str,
-                                  point_keys: list[str] | None
-                                  ) -> DataFrame:
-    """Big-dimension fallback for pip_polygon_precedence_fold: pair-emit
-    cell join (NO broadcast — both sides shuffle-partition by cell),
-    exact winding refine, map-side-combinable argmin per point, left
-    join back onto the points to restore the fold's all-points +
-    null-when-uncovered contract. `point_keys` must uniquely identify
-    point rows (the left join would otherwise fan out)."""
-    if point_keys is None:
-        point_keys = [c for c in points.columns if c not in (px, py)]
-    if not point_keys:
-        raise ValueError(
-            "pip_polygon_precedence_fold fallback needs point_keys: the"
-            " points frame has no identifying columns besides px/py")
-    pairs = pip_join_polygons(
-        points.select(*point_keys, px, py), polys, depth,
-        px=px, py=py, geom=geom, broadcast_polys=False)
-    won = precedence_resolve(pairs, point_keys,
-                             order_col=order_col, tiebreak=tiebreak)
-    won = won.select(
-        *point_keys,
-        F.col(order_col).cast("bigint").alias(f"win_{order_col}"),
-        F.col(tiebreak).cast("bigint").alias(f"win_{tiebreak}"))
-    return (points.join(won, point_keys, "left")
-            .select(*points.columns,
-                    f"win_{order_col}", f"win_{tiebreak}"))
-
-
-def precedence_resolve(pairs: DataFrame, point_keys: list[str],
-                       order_col: str = "process_order",
-                       tiebreak: str = "feat_id",
-                       keep: list[str] | None = None) -> DataFrame:
-    """Designation-precedence overlay for points (SURVEY §2 A5 analogue).
-
-    The reference inserts layers in ascending process_order, so the part
-    of space already claimed is never overwritten
-    (/root/reference/sql/insert_difference.sql:16-127). For a point the
-    winning layer is therefore argmin (process_order, feat_id) over all
-    containing features. Implemented as a single map-side-combinable
-    `min(struct(...))` — no window, no second shuffle.
-    """
-    keep = keep or []
-    w = F.min(F.struct(order_col, tiebreak, *keep)).alias("_w")
-    out = pairs.groupBy(*point_keys).agg(w)
-    cols = [F.col(f"_w.{order_col}").alias(order_col),
-            F.col(f"_w.{tiebreak}").alias(tiebreak)]
-    cols += [F.col(f"_w.{k}").alias(k) for k in keep]
-    return out.select(*point_keys, *cols)
-

@@ -39,17 +39,16 @@ class VectorOutputs:
 def process_vector(spark: SparkSession, sf_dir: str,
                    depth: int = DEFAULT_DEPTH,
                    ckpt_root: str | None = None,
-                   n_orders: int = 8,
-                   two_scale: bool = True,
-                   coarse_depth: int | None = None) -> VectorOutputs:
-    """`two_scale=True` (the DEFAULT — VERDICT r5 #4) makes the
-    reference's two-scale grid the standard path: the composed
+                   n_orders: int = 8) -> VectorOutputs:
+    """The pipeline's frames at quadtree `depth`. For depth > 1 the
+    layers tile on the reference's two-scale grid: the composed
     boundary's LAND cells define where the grid is fine
-    (create_tiles.sql:45-63 keeps 1:20k tiles on land, 1:250k at sea);
-    layer features tile coarse outside those cells, so marine-heavy
-    features never explode into fine cells the land clip would only
-    discard. Output is IDENTICAL to single-depth (pytest-pinned) —
-    coarse pieces are exactly the ones with no land overlap."""
+    (create_tiles.sql:45-63 keeps 1:20k tiles on land, 1:250k at sea),
+    and layer features tile at depth ``max(1, depth - 2)`` outside
+    those cells, so marine-heavy features never explode into fine
+    cells the land clip would only discard. Output equals single-depth
+    tiling (pytest-pinned at the clip) — coarse pieces are exactly the
+    ones with no land overlap."""
     layers = datagen.layers_poly(spark, sf_dir, n_orders=n_orders)
     # A9: compose bc_boundary from raw pieces (marine union + subdivide
     # + tile + precedence insert — designatedlands.py:624-721) instead
@@ -64,9 +63,8 @@ def process_vector(spark: SparkSession, sf_dir: str,
     # refined to fine depth; everything else stays coarse. Driver-side
     # distinct over coarse prefixes of the (already fine-tiled) land
     # boundary — bounded by 4^coarse_depth rows.
-    if two_scale and depth > 1:
-        cd = coarse_depth if coarse_depth is not None \
-            else max(1, depth - 2)
+    if depth > 1:
+        cd = max(1, depth - 2)
         fine_cells = {r["p"] for r in boundary_t.select(
             F.col("cell").substr(1, cd).alias("p")).distinct().collect()}
     else:

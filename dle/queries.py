@@ -420,9 +420,9 @@ def q_spatial_polygon_precedence(spark, sf):
     over the containing triangles, decided by the exact winding test
     INSIDE the point scan — the polygon analogue of the rect path's
     in-scan fold, with the dimension side shipped as a driver-built
-    Python broadcast index (cell -> feature list). ZERO exchanges in
-    the whole point plan. (The pair-emit + groupBy form stays covered
-    via pip_join_polygons in the spatial_pip_polygon gate + pytest.)"""
+    Python broadcast index (cell -> feature list) from one bounded
+    collect that raises above MAX_BROADCAST_FEATURES. ZERO exchanges
+    in the whole point plan."""
     from . import datagen
     from .operators.spatial_join import pip_polygon_precedence_fold
     pts = _points(spark, sf).select("page_id", "cand_i", "px", "py")

@@ -482,9 +482,10 @@ def q_decon_overlap(spark, sf):
     """Train/eval decontamination: flag training docs sharing >= 3
     distinct word-3-gram shingles with any benchmark doc (deterministic
     split: doc_id % 11 == 3 is the "eval suite", the rest is the
-    training corpus). The eval side is broadcast (production eval
-    suites are KB-MB); corpus shingles are computed in-scan and
-    non-matching shingles die map-side inside the broadcast hash join,
+    training corpus). Spark's planner broadcasts the eval side
+    (production eval suites are KB-MB), with no size probe; corpus
+    shingles are computed in-scan and non-matching shingles die
+    map-side inside the broadcast hash join,
     so the only exchange carries matched rows — contamination-volume
     sized, never corpus-sized (operators/curation.py::decontaminate)."""
     from .operators.curation import decontaminate

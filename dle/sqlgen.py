@@ -245,7 +245,6 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 # CLAUDE.md). NO query RESULTS are cached anywhere — memoized view
 # DataFrames are lazy plans; every action recomputes from the parquet.
 _REGISTERED: dict = {}  # id(spark) -> (spark, sf_dir, fingerprint)
-_VIEWS: dict = {}       # (id(spark), sf_dir, name) -> (spark, fp, df)
 _FRAMES: dict = {}      # (id(spark), sf_dir, key) -> (spark, fp, df)
 
 
@@ -265,7 +264,7 @@ def dir_fingerprint(sf_dir: str) -> str:
 
 
 def _prune_stopped_sessions() -> None:
-    for store in (_REGISTERED, _VIEWS, _FRAMES):
+    for store in (_REGISTERED, _FRAMES):
         for k in list(store):
             sess = store[k][0]
             try:
@@ -316,10 +315,10 @@ def register_tables(spark, sf_dir: str) -> None:
 
 def memo_frame(spark, sf_dir, key, build):
     """Memoize a LAZY generated-input DataFrame per (session, dir, key,
-    parquet fingerprint) — same contract as the spark_view memo: plans
-    only, every action recomputes from the parquet inputs. Used by
-    datagen's WKB fixture builders, whose per-call SQL parse + UDF
-    plan construction is identical every time."""
+    parquet fingerprint): plans only, every action recomputes from the
+    parquet inputs. Used by spark_view and by datagen's WKB fixture
+    builders, whose per-call SQL parse + UDF plan construction is
+    identical every time."""
     fp = dir_fingerprint(sf_dir) if sf_dir is not None else ""
     k = (id(spark), sf_dir, key)
     hit = _FRAMES.get(k)
@@ -340,17 +339,14 @@ def spark_view(spark, sf_dir: str, name: str):
     memoized frame still recomputes from the parquet inputs — an
     analyzed plan binds the file relations, never results."""
     register_tables(spark, sf_dir)
-    fp = _REGISTERED[id(spark)][2]
-    key = (id(spark), sf_dir, name)
-    hit = _VIEWS.get(key)
-    if hit is not None and hit[0] is spark and hit[1] == fp:
-        return hit[2]
-    need_pages = name in ("pages", "captures", "points")
-    need_bands = name == "bands"
-    need_tris = name == "tris"
-    pre = preamble("spark", pages=need_pages, bands=need_bands,
-                   tris=need_tris,
-                   layers=not (need_pages or need_bands or need_tris))
-    df = spark.sql(f"{pre} select * from {name}")
-    _VIEWS[key] = (spark, fp, df)
-    return df
+
+    def build():
+        need_pages = name in ("pages", "captures", "points")
+        need_bands = name == "bands"
+        need_tris = name == "tris"
+        pre = preamble("spark", pages=need_pages, bands=need_bands,
+                       tris=need_tris,
+                       layers=not (need_pages or need_bands or need_tris))
+        return spark.sql(f"{pre} select * from {name}")
+
+    return memo_frame(spark, sf_dir, ("view", name), build)

@@ -192,10 +192,9 @@ def test_pip_join_polygons_triangles(spark):
     assert got == sorted(want)
 
 
-def test_pip_join_polygons_with_holes_both_modes(spark):
+def test_pip_join_polygons_with_holes(spark):
     """Operator-level hole semantics: a donut feature must match ring
-    points but not hole points — in both the broadcast and the
-    shuffle-join physical modes."""
+    points but not hole points."""
     from dle.config import XMIN, YMIN
     from dle.operators.spatial_join import pip_join_polygons
 
@@ -217,10 +216,9 @@ def test_pip_join_polygons_with_holes_both_modes(spark):
          (3, x0 + 70_000.5, y0 + 40_000.5),   # ring: inside
          (4, x0 + 90_000.5, y0 + 40_000.5)],  # beyond bbox: outside
         "pid int, px double, py double")
-    for bc in (True, False):
-        got = sorted(r["pid"] for r in pip_join_polygons(
-            pts, polys, 7, broadcast_polys=bc).collect())
-        assert got == [1, 3], f"broadcast_polys={bc}"
+    got = sorted(r["pid"] for r in pip_join_polygons(
+        pts, polys, 7).collect())
+    assert got == [1, 3]
 
 
 def test_buffer_geoms_drops_eroded_away_rows(spark):

