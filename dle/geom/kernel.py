@@ -310,10 +310,6 @@ def _sweep(tagged: list[tuple[int, list]], grid: float,
 
 # -------------------------------------------------------- assembly
 
-def _q(v: float) -> float:
-    return np.rint(v * _Q) / _Q
-
-
 def _assemble(traps: list[Trap], grid: float) -> list:
     """Stitch trapezoids into rings (meters, CCW shells / CW holes)."""
     if not traps:
@@ -331,9 +327,8 @@ def _assemble(traps: list[Trap], grid: float) -> list:
             segs[(p0, p1)] += 1
 
     bounds: dict[float, list] = defaultdict(list)
-    # OPTIMIZATION r7: quantize all six trap coords in ONE vectorized
-    # pass instead of six numpy-scalar _q calls per trap (same IEEE
-    # ops elementwise; .tolist() round-trips float64 exactly)
+    # quantize all six trap coords in ONE vectorized pass, rint(v *
+    # _Q) / _Q elementwise (.tolist() round-trips float64 exactly)
     qarr = np.rint(np.array(
         [(t.xa, t.xb, t.ya_b, t.yb_b, t.ya_t, t.yb_t) for t in traps],
         dtype=np.float64) * _Q) / _Q
@@ -361,7 +356,7 @@ def _assemble(traps: list[Trap], grid: float) -> list:
         for ylo, yhi, side in ivals:
             s = 0 if side < 0 else 1  # 0: covered on left, 1: on right
             # ylo/yhi are already quantized above; _Q is a power of
-            # two, so _q is exactly idempotent — no re-quantize
+            # two, so quantizing is exactly idempotent — no re-quantize
             events[ylo][s] += 1
             events[yhi][s] -= 1
         lc = rc = 0

@@ -1,6 +1,6 @@
 """End-to-end vector pipeline — the `process-vector` analogue
 (SURVEY §3.1): designation layers -> land clip + attribute stamping
-(A4) -> precedence overlay (A5) -> planarize (A7) -> qa rollups.
+(A4) -> precedence overlay (A5) -> planarize (A7) -> QA frames.
 
 Precedence is the per-cell fold `insert_difference_fused`: tiled
 layers never interact across cells, so the reference's layer-serial
@@ -109,74 +109,53 @@ def process_vector(spark: SparkSession, sf_dir: str,
                          designatedlands, planarized)
 
 
-def qa_rollups(out: VectorOutputs) -> dict:
-    """The reference's golden QA invariants as numbers
-    (/root/reference/sql/qa.sql):
+QA_CLASSES = ("forest", "og", "mine")
 
-      total_land        — dissolved land-boundary area (ha)
-      total_planarized  — sum of face areas (must ~= total_land, :42-43)
-      per_designation   — overlapping vs precedence area per designation
-      per_class_sums    — per restriction class, sum over levels of face
-                          area (each must ~= total_land, :190-213)
+
+@dataclass
+class QAFrames:
+    totals: DataFrame      # one row: land_m2, planarized_m2
+    compare: DataFrame     # designation, overlapping_m2, planarized_m2
+    class_sums: DataFrame  # cls, level, area_m2
+
+
+def qa_frames(land: DataFrame, overlapping: DataFrame,
+              planarized: DataFrame) -> QAFrames:
+    """The reference's QA checks (its sql/qa.sql) as lazy
+    frames of unrounded m2 sums, each holding when its columns agree:
+
+      totals      — land area vs summed face area (:42-43)
+      compare     — qa_compare (:8-38): per designation, the overlapping
+                    area dissolved per (cell, designation) vs the area
+                    of the faces whose designation array contains it,
+                    the reference's `o.designation && p.designation`
+                    as an arrays_overlap join (E7); a designation on
+                    one side only reads 0 on the other
+      class_sums  — per restriction class and level, face area; each
+                    class's levels partition the land (:190-213)
     """
-    land = with_area(out.boundary_tiled)
-    total_land = land.agg(F.sum("area_m2")).collect()[0][0] / 1e4
+    land_m2 = with_area(land).agg(F.sum("area_m2").alias("land_m2"))
+    plan_m2 = planarized.agg(F.sum("area_m2").alias("planarized_m2"))
 
-    total_plan = out.planarized.agg(
-        F.sum("area_m2")).collect()[0][0] / 1e4
+    over = with_area(dissolve(
+        overlapping.select("cell", "designation", "geom"),
+        ["cell", "designation"])) \
+        .groupBy("designation").agg(F.sum("area_m2").alias("overlapping_m2"))
+    dim = overlapping.select(F.col("designation").alias("d")).distinct()
+    plan = (planarized.join(F.broadcast(dim),
+                            F.expr("arrays_overlap(designation, array(d))"))
+            .groupBy(F.col("d").alias("designation"))
+            .agg(F.sum("area_m2").alias("planarized_m2")))
+    compare = over.join(plan, "designation", "full") \
+        .fillna(0.0, ["overlapping_m2", "planarized_m2"])
 
-    over = with_area(out.overlapping).groupBy("designation").agg(
-        (F.sum("area_m2") / 1e4).alias("overlapping_ha"))
-    prec = with_area(out.designatedlands).groupBy("designation").agg(
-        (F.sum("area_m2") / 1e4).alias("precedence_ha"))
-    per_desig = {
-        r["designation"]: (r["overlapping_ha"], r["precedence_ha"])
-        for r in over.join(prec, "designation", "outer").collect()}
-
-    per_class = {}
-    for c in ("forest_restriction_max", "og_restriction_max",
-              "mine_restriction_max"):
-        rows = out.planarized.groupBy(c).agg(
-            (F.sum("area_m2") / 1e4).alias("ha")).collect()
-        per_class[c] = {r[c]: r["ha"] for r in rows}
-
-    # qa_compare_outputs (/root/reference/sql/qa.sql:8-38): dissolved
-    # per-designation area in the OVERLAPPING output vs total area of
-    # planarized faces whose attribute array contains the designation
-    # (the reference's `o.designation && p.designation` intarray-overlap
-    # join) — must agree to snap tolerance.
-    over_dis = with_area(dissolve(
-        out.overlapping.select("cell", "designation", "geom"),
-        ["cell", "designation"]))
-    over_d = {r["designation"]: r["ha"] for r in
-              over_dis.groupBy("designation")
-              .agg((F.sum("area_m2") / 1e4).alias("ha")).collect()}
-    plan_d = {
-        r["d"]: r["ha"]
-        for r in out.planarized
-        .select(F.explode(F.array_distinct("designation")).alias("d"),
-                "area_m2")
-        .groupBy("d").agg((F.sum("area_m2") / 1e4).alias("ha"))
-        .collect()}
-    qa_compare = {
-        d: {"overlapping_ha": over_d.get(d, 0.0),
-            "planarized_ha": plan_d.get(d, 0.0),
-            "pct_diff": (100.0 * abs(over_d.get(d, 0.0)
-                                     - plan_d.get(d, 0.0))
-                         / max(over_d.get(d, 0.0), 1e-9))}
-        for d in sorted(set(over_d) | set(plan_d))}
-
-    from .. import telemetry
-    return {
-        "total_land_ha": total_land,
-        "total_planarized_ha": total_plan,
-        "per_designation_ha": per_desig,
-        "per_class_ha": per_class,
-        "qa_compare": qa_compare,
-        # lossy-fallback metric (reference logs NOTICEs per lossy
-        # repair, sql/ST_Safe_Difference.sql:70-80): count of ring
-        # fragments defensively dropped across all executors, if the
-        # caller enabled telemetry before building the pipeline.
-        "lossy_fragments": (telemetry.LOSSY_ACC.value
-                            if telemetry.LOSSY_ACC is not None else None),
-    }
+    stacked = planarized.select(
+        F.explode(F.array(*[
+            F.struct(F.lit(c).alias("cls"),
+                     F.col(f"{c}_restriction_max").alias("level"))
+            for c in QA_CLASSES])).alias("e"),
+        "area_m2")
+    class_sums = stacked.groupBy(
+        F.col("e.cls").alias("cls"), F.col("e.level").alias("level")) \
+        .agg(F.sum("area_m2").alias("area_m2"))
+    return QAFrames(land_m2.crossJoin(plan_m2), compare, class_sums)

@@ -18,8 +18,9 @@ from pyspark.sql import functions as F
 
 from . import datagen, sqlgen
 from .operators.overlay import (
-    dissolve, insert_difference_fused, with_agg_id, with_area,
+    dissolve, insert_difference_fused, planarize, with_agg_id, with_area,
 )
+from .plans.pipeline import QA_CLASSES, qa_frames
 from .sqlgen import preamble
 
 BAND_H = 40000.0
@@ -27,6 +28,28 @@ BAND_H = 40000.0
 
 def _bands_wkb(spark, sf):
     return datagen.bands_1d(spark, sf)
+
+
+def _islands(src: str, keys: str, name: str = "islands",
+             gap: float = 0.0) -> str:
+    """Gaps-and-islands CTEs ending in `name(<keys>, g, x0, x1)`: per
+    `keys`, the runs of `src`'s [bx0, bx1] intervals in (bx0, bx1)
+    order, where an interval starting more than `gap` past every
+    earlier end opens a new run."""
+    past = f" + {gap!r}" if gap else ""
+    return f"""
+ marked_{name} as (
+   select {keys}, bx0, bx1,
+          case when bx0 > max(bx1) over (
+                 partition by {keys} order by bx0, bx1
+                 rows between unbounded preceding and 1 preceding){past}
+               then 1 else 0 end as brk
+   from {src}),
+ grp_{name} as (select *, sum(brk) over (
+           partition by {keys} order by bx0, bx1
+           rows unbounded preceding) as g from marked_{name}),
+ {name} as (select {keys}, g, min(bx0) as x0, max(bx1) as x1
+            from grp_{name} group by {keys}, g)"""
 
 
 def q_dissolve_area_1d(spark, sf):
@@ -40,18 +63,7 @@ def q_dissolve_area_1d(spark, sf):
 
 def o_dissolve_area_1d():
     return (preamble("duckdb", pages=False, layers=False, bands=True) + f"""
- , marked as (
-   select designation, band, bx0, bx1,
-          case when bx0 > max(bx1) over (
-                 partition by designation, band order by bx0, bx1
-                 rows between unbounded preceding and 1 preceding)
-               then 1 else 0 end as brk
-   from bands),
- grp as (select *, sum(brk) over (
-           partition by designation, band order by bx0, bx1
-           rows unbounded preceding) as g from marked),
- islands as (select designation, band, g, min(bx0) as x0, max(bx1) as x1
-             from grp group by designation, band, g)
+ , {_islands("bands", "designation, band")}
  select designation, band,
         cast(round(sum((x1 - x0) * {BAND_H!r}), 0) as bigint) as area_m2
  from islands group by designation, band""")
@@ -80,34 +92,30 @@ def q_precedence_area_42(spark, sf):
     return q_precedence_area_1d(spark, sf, n_orders=42)
 
 
-def o_precedence_area_1d(n_orders: int = 8):
+def _precedence_deltas(n_orders: int) -> str:
+    """Band preamble + CTEs ending in `deltas(band, kk, dl)`: the length
+    order kk adds to its band's union of orders <= kk, which is what
+    the reference's layer loop leaves designation kk."""
     k = sqlgen.series(n_orders, "k", "i", "duckdb")
     return (preamble("duckdb", pages=False, layers=False, bands=True,
                      n_orders=n_orders) + f"""
  , expanded as (
    select b.band, k.i + 1 as kk, b.bx0, b.bx1
    from bands b, {k} where b.process_order <= k.i + 1),
- marked as (
-   select band, kk, bx0, bx1,
-          case when bx0 > max(bx1) over (
-                 partition by band, kk order by bx0, bx1
-                 rows between unbounded preceding and 1 preceding)
-               then 1 else 0 end as brk
-   from expanded),
- grp as (select *, sum(brk) over (
-           partition by band, kk order by bx0, bx1
-           rows unbounded preceding) as g from marked),
- islands as (select band, kk, g, min(bx0) as x0, max(bx1) as x1
-             from grp group by band, kk, g),
+ {_islands("expanded", "band, kk")},
  lens as (select band, kk, sum(x1 - x0) as len from islands
           group by band, kk),
  deltas as (select band, kk,
                    len - coalesce(lag(len) over (
                      partition by band order by kk), 0.0) as dl
-            from lens)
+            from lens)""")
+
+
+def o_precedence_area_1d(n_orders: int = 8):
+    return _precedence_deltas(n_orders) + f"""
  select concat('desig_', lpad(cast(kk as string), 2, '0')) as designation,
         cast(round(sum(dl) * {BAND_H!r}, 0) as bigint) as area_m2
- from deltas group by kk""")
+ from deltas group by kk"""
 
 
 def o_precedence_area_42():
@@ -137,30 +145,7 @@ def q_precedence_multi(spark, sf, n_orders: int = 8):
 
 
 def o_precedence_multi(n_orders: int = 8):
-    k = sqlgen.series(n_orders, "k", "i", "duckdb")
-    return (preamble("duckdb", pages=False, layers=False, bands=True,
-                     n_orders=n_orders) + f"""
- , expanded as (
-   select b.band, k.i + 1 as kk, b.bx0, b.bx1
-   from bands b, {k} where b.process_order <= k.i + 1),
- marked as (
-   select band, kk, bx0, bx1,
-          case when bx0 > max(bx1) over (
-                 partition by band, kk order by bx0, bx1
-                 rows between unbounded preceding and 1 preceding)
-               then 1 else 0 end as brk
-   from expanded),
- grp as (select *, sum(brk) over (
-           partition by band, kk order by bx0, bx1
-           rows unbounded preceding) as g from marked),
- islands as (select band, kk, g, min(bx0) as x0, max(bx1) as x1
-             from grp group by band, kk, g),
- lens as (select band, kk, sum(x1 - x0) as len from islands
-          group by band, kk),
- deltas as (select band, kk,
-                   len - coalesce(lag(len) over (
-                     partition by band order by kk), 0.0) as dl
-            from lens)
+    return _precedence_deltas(n_orders) + f"""
  select concat('desig_', lpad(cast(kk as string), 2, '0')) as designation,
         cast(round(sum(dl) * {BAND_H!r}, 0) as bigint) as area_m2,
         cast(count(case when dl > 0 then 1 end) as bigint) as n_groups,
@@ -169,7 +154,7 @@ def o_precedence_multi(n_orders: int = 8):
               cast(band as varchar),
               concat('desig_', lpad(cast(kk as string), 2, '0')),
               cast(kk as varchar))) end) as min_agg_id
- from deltas group by kk""")
+ from deltas group by kk"""
 
 
 def q_planarize_coverage_1d(spark, sf):
@@ -359,7 +344,8 @@ QB_AREA = int((QB[2] - QB[0]) * (QB[3] - QB[1]))
 
 def _qa_world(spark, sf):
     """Tiled designations (with registry-style columns derived from
-    feat_id) + tiled band-world boundary, both at DEFAULT_DEPTH."""
+    feat_id: class i of QA_CLASSES is stamped `(feat_id + i) % 6`) +
+    tiled band-world boundary, both at DEFAULT_DEPTH."""
     import numpy as np
 
     from .config import DEFAULT_DEPTH
@@ -369,9 +355,8 @@ def _qa_world(spark, sf):
     b = _bands_wkb(spark, sf).select(
         "designation", "process_order", "feat_id", "geom",
         F.concat_ws("-", "designation", "feat_id").alias("src_id"),
-        (F.col("feat_id") % 6).cast("int").alias("forest_restriction"),
-        ((F.col("feat_id") + 1) % 6).cast("int").alias("og_restriction"),
-        ((F.col("feat_id") + 2) % 6).cast("int").alias("mine_restriction"))
+        *[((F.col("feat_id") + i) % 6).cast("int")
+          .alias(f"{c}_restriction") for i, c in enumerate(QA_CLASSES)])
     tiled = tile_geoms(b, DEFAULT_DEPTH)
     bnd = spark.createDataFrame(
         [(bytearray(W.polygon_wkb([np.array(
@@ -382,19 +367,19 @@ def _qa_world(spark, sf):
     return tiled, bnd_t
 
 
+def _qa_gate(tiled, bnd_t, frame: str):
+    """`qa_frames`' `frame` over the band world planarized by the A7
+    kernel, its m2 sums rounded to bigint (integral areas: exact)."""
+    df = getattr(qa_frames(bnd_t, tiled, planarize(tiled, bnd_t)), frame)
+    return df.select(*[F.round(c, 0).cast("bigint").alias(c)
+                       if c.endswith("_m2") else c for c in df.columns])
+
+
 def q_qa_planarized_totals(spark, sf):
     """qa.sql:42-43: sum of planarized face areas == land area, both
     engine-computed (faces via the A7 kernel, land via tile+area);
     oracle = the closed-form rectangle area on both columns."""
-    from .operators.overlay import planarize, with_area
-    tiled, bnd_t = _qa_world(spark, sf)
-    faces = planarize(tiled, bnd_t)
-    land = with_area(bnd_t).agg(
-        F.round(F.sum("area_m2"), 0).cast("bigint").alias("land_m2"))
-    plan = faces.agg(
-        F.round(F.sum("area_m2"), 0).cast("bigint")
-        .alias("planarized_m2"))
-    return land.crossJoin(plan)
+    return _qa_gate(*_qa_world(spark, sf), "totals")
 
 
 def o_qa_planarized_totals():
@@ -413,57 +398,23 @@ def q_qa_compare_designation(spark, sf):
     consumers — the overlapping dissolve, the planarize pass and the
     designation dim — so without materialization the bands scan + WKB
     build + Arrow tiling kernel executed three times per invocation
-    (measured 6.7 s at sf0.1). One eager localCheckpoint computes it
-    once; every bench/oracle invocation still recomputes from parquet
+    (measured 6.7 s at sf0.1). One localCheckpoint computes it once;
+    every bench/oracle invocation still recomputes from parquet
     (localCheckpoint is per-DataFrame-object, never shared across
     calls)."""
-    from .operators.overlay import dissolve, planarize, with_area
     tiled, bnd_t = _qa_world(spark, sf)
-    tiled = tiled.localCheckpoint(eager=False)
-    over = with_area(dissolve(
-        tiled.select("cell", "designation", "geom"),
-        ["cell", "designation"]))
-    over_d = over.groupBy("designation").agg(
-        F.round(F.sum("area_m2"), 0).cast("bigint")
-        .alias("overlapping_m2"))
-    faces = planarize(tiled, bnd_t)
-    dim = tiled.select("designation").distinct() \
-        .select(F.col("designation").alias("d"))
-    plan_d = (faces.join(
-        F.broadcast(dim),
-        F.expr("arrays_overlap(designation, array(d))"))
-        .groupBy("d")
-        .agg(F.round(F.sum("area_m2"), 0).cast("bigint")
-             .alias("planarized_m2")))
-    return over_d.join(plan_d,
-                       over_d.designation == plan_d.d).select(
-        "designation", "overlapping_m2", "planarized_m2")
+    return _qa_gate(tiled.localCheckpoint(eager=False), bnd_t, "compare")
 
 
 def o_qa_compare_designation():
     return (preamble("duckdb", pages=False, layers=False, bands=True) + f"""
- , marked as (
-   select designation, band, bx0, bx1,
-          case when bx0 > max(bx1) over (
-                 partition by designation, band order by bx0, bx1
-                 rows between unbounded preceding and 1 preceding)
-               then 1 else 0 end as brk
-   from bands),
- grp as (select *, sum(brk) over (
-           partition by designation, band order by bx0, bx1
-           rows unbounded preceding) as g from marked),
- islands as (select designation, band, g, min(bx0) as x0, max(bx1) as x1
-             from grp group by designation, band, g),
+ , {_islands("bands", "designation, band")},
  tot as (select designation,
                 cast(round(sum((x1 - x0) * {BAND_H!r}), 0) as bigint)
                   as area_m2
          from islands group by designation)
  select designation, area_m2 as overlapping_m2, area_m2 as planarized_m2
  from tot""")
-
-
-# (class name, feat_id offset) — must mirror _qa_world's stamping
-_QA_CLASSES = [("forest", 0), ("og", 1), ("mine", 2)]
 
 
 def q_qa_class_sums(spark, sf):
@@ -475,20 +426,7 @@ def q_qa_class_sums(spark, sf):
     (the faces carry all three *_restriction_max columns). Oracle =
     per-segment MAX restriction over covering intervals plus the
     closed-form uncovered remainder, per class."""
-    from .operators.overlay import planarize
-    tiled, bnd_t = _qa_world(spark, sf)
-    faces = planarize(tiled, bnd_t)
-    stacked = faces.select(
-        F.explode(F.array(*[
-            F.struct(F.lit(cls).alias("cls"),
-                     F.col(f"{cls}_restriction_max").alias("level"))
-            for cls, _ in _QA_CLASSES])).alias("e"),
-        "area_m2")
-    return (stacked
-            .groupBy(F.col("e.cls").alias("cls"),
-                     F.col("e.level").alias("level"))
-            .agg(F.round(F.sum("area_m2"), 0).cast("bigint")
-                 .alias("area_m2")))
+    return _qa_gate(*_qa_world(spark, sf), "class_sums")
 
 
 def o_qa_class_sums():
@@ -496,7 +434,7 @@ def o_qa_class_sums():
     # covered segments take max((feat_id + off) % 6) per class;
     # everything else in B is level 0 (strip remainders + gaps).
     per_cls = []
-    for cls, off in _QA_CLASSES:
+    for off, cls in enumerate(QA_CLASSES):
         per_cls.append(f"""
  cov_{cls} as (select s.band, s.sx0, s.sx1,
                 max(cast((b.feat_id + {off}) % 6 as int)) as lvl
@@ -512,9 +450,9 @@ def o_qa_class_sums():
                  cast({QB_AREA} as double)
                    - (select count(distinct band) from bands)
                      * ({QB[2]!r} - {QB[0]!r}) * {BAND_H!r} as a"""
-        for cls, _ in _QA_CLASSES)
+        for cls in QA_CLASSES)
     strips = " union all ".join(
-        f"select * from strip_{cls}" for cls, _ in _QA_CLASSES)
+        f"select * from strip_{cls}" for cls in QA_CLASSES)
     return (preamble("duckdb", pages=False, layers=False, bands=True) + f"""
  , pts as (
    select distinct band, bx0 as x from bands
@@ -575,20 +513,7 @@ def o_buffer_area():
     # BAND_H + 2r, and the closed region is span x BAND_H.
     r2 = 2 * BUF_R
     return (preamble("duckdb", pages=False, layers=False, bands=True) + f"""
- , marked as (
-   select designation, band, bx0, bx1,
-          case when bx0 > max(bx1) over (
-                 partition by designation, band order by bx0, bx1
-                 rows between unbounded preceding and 1 preceding)
-                 + {r2!r}
-               then 1 else 0 end as brk
-   from bands),
- grp as (select *, sum(brk) over (
-           partition by designation, band order by bx0, bx1
-           rows unbounded preceding) as g from marked),
- islands as (select designation, band, g,
-                    min(bx0) as x0, max(bx1) as x1
-             from grp group by designation, band, g)
+ , {_islands("bands", "designation, band", gap=r2)}
  select designation,
         cast(round(sum((x1 - x0 + {r2!r}) * {BAND_H + r2!r}), 0)
              as bigint) as dilated_m2,
@@ -673,19 +598,7 @@ def q_boundary_build_area(spark, sf):
 
 def o_boundary_build_area():
     def islands(src, name):
-        return f"""
- marked_{name} as (
-   select band, bx0, bx1,
-          case when bx0 > max(bx1) over (
-                 partition by band order by bx0, bx1
-                 rows between unbounded preceding and 1 preceding)
-               then 1 else 0 end as brk
-   from {src}),
- grp_{name} as (select *, sum(brk) over (
-           partition by band order by bx0, bx1
-           rows unbounded preceding) as g from marked_{name}),
- isl_{name} as (select band, g, min(bx0) as x0, max(bx1) as x1
-                from grp_{name} group by band, g),
+        return f"""{_islands(src, "band", f"isl_{name}")},
  len_{name} as (select band, sum(x1 - x0) as len from isl_{name}
                 group by band)"""
 

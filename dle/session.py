@@ -1,17 +1,20 @@
 """SparkSession factory with scale-oriented defaults.
 
 Tuned for the engine's workload shape: wide shuffles keyed by spatial
-cell, Arrow-batched pandas UDF geometry kernels, AQE for skew (dense
-coastal cells) and partition coalescing. On a real cluster the same
-builder is used via ``spark-submit --py-files dle.zip``; only
+cell, Arrow-batched pandas UDF geometry kernels, and AQE for skew
+(dense coastal cells) with partition coalescing off. On a real cluster
+the same builder is used via ``spark-submit --py-files dle.zip``; only
 master/memory change.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+_ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def default_cpus() -> int:
@@ -26,12 +29,19 @@ def get_spark(app: str = "dle", master: str | None = None,
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cpus, 32)
+    # Python workers unpickle UDFs that import `dle`: put the repo root
+    # on their path whatever the working directory. The JVM, and the
+    # workers it forks, inherit this environment when it launches.
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+             if p]
+    if _ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([_ROOT, *paths])
     b = (
         SparkSession.builder.appName(app)
         .master(master)
-        # local-mode driver IS the executor: size the heap for 32
-        # concurrent tasks (takes effect when this process launches
-        # the JVM; a no-op on an already-running session)
+        # local-mode driver IS the executor: size the heap for all
+        # `cpus` concurrent tasks (takes effect when this process
+        # launches the JVM; a no-op on an already-running session)
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
         .config("spark.sql.session.timeZone", "UTC")

@@ -7,7 +7,7 @@
 Runs A4 -> A5/A6 precedence -> A7 planarize, with the precedence and
 planarized stages checkpointed under <out_dir>: a rerun against the
 same input resumes each committed stage whole instead of building it.
-Dumps the precedence layer and writes the qa rollup JSON to <out_dir>.
+Dumps the precedence layer and writes the QA totals JSON to <out_dir>.
 """
 
 from __future__ import annotations
@@ -34,9 +34,7 @@ def main():
 
     spark = SparkSession.builder.appName("dle-process-vector") \
         .getOrCreate()
-    from dataclasses import replace
-
-    from dle.plans.pipeline import process_vector, qa_rollups
+    from dle.plans.pipeline import process_vector, qa_frames
     from dle.plans.checkpoint import Manifest, run_stage
     from dle.sqlgen import dir_fingerprint
     from dle.sources.io import dump
@@ -53,13 +51,17 @@ def main():
     planar = run_stage(spark, man, "planarized", fingerprint,
                        lambda: out.planarized, out_dir)
     dump(out.designatedlands, f"{out_dir}/designatedlands")
-    # qa reads the committed faces instead of planarizing per rollup
-    qa = qa_rollups(replace(out, planarized=planar))
+    # qa reads the committed faces instead of planarizing again
+    totals = qa_frames(out.boundary_tiled, out.overlapping,
+                       planar).totals.collect()[0]
     qa_flat = {
-        "total_land_ha": qa["total_land_ha"],
-        "total_planarized_ha": qa["total_planarized_ha"],
-        "n_faces": planar.count(),
-        "lossy_fragments": qa["lossy_fragments"],
+        "total_land_ha": totals["land_m2"] / 1e4,
+        "total_planarized_ha": totals["planarized_m2"] / 1e4,
+        "n_faces": man.record("planarized")["rows"],
+        # ring fragments the kernels dropped defensively (the
+        # reference's NOTICE per lossy repair,
+        # sql/ST_Safe_Difference.sql:70-80), summed over executors
+        "lossy_fragments": telemetry.LOSSY_ACC.value,
     }
     with open(f"{out_dir}/qa.json", "w") as f:
         json.dump(qa_flat, f, indent=2)

@@ -11,7 +11,9 @@ from dle import datagen
 from dle.geom import kernel as K
 from dle.geom import wkb
 from dle.operators.overlay import clip, dissolve, tile_geoms, with_area
-from dle.plans.pipeline import REG_KEYS, process_vector, qa_rollups
+from dle.plans.pipeline import (
+    QA_CLASSES, REG_KEYS, process_vector, qa_frames,
+)
 
 SF = "/root/testdata/sf0.001"
 DEPTH = 3  # 8x8 cells — keeps the tiny-sf pipeline fast
@@ -24,37 +26,55 @@ def outputs(spark):
 
 @pytest.fixture(scope="module")
 def qa(outputs):
-    return qa_rollups(outputs)
+    return qa_frames(outputs.boundary_tiled, outputs.overlapping,
+                     outputs.planarized)
 
 
-def test_planarized_total_equals_land(qa):
+@pytest.fixture(scope="module")
+def totals(qa):
+    return qa.totals.collect()[0]
+
+
+def test_planarized_total_equals_land(totals):
     """qa.sql:42-43 — planarized faces tile the land exactly."""
-    assert qa["total_planarized_ha"] == pytest.approx(
-        qa["total_land_ha"], rel=1e-6)
+    assert totals["planarized_m2"] == pytest.approx(
+        totals["land_m2"], rel=1e-6)
 
 
-def test_restriction_class_sums_equal_land(qa):
+def test_restriction_class_sums_equal_land(qa, totals):
     """qa.sql:190-213 — each class's level areas sum to total land."""
-    for cls, levels in qa["per_class_ha"].items():
-        assert sum(levels.values()) == pytest.approx(
-            qa["total_land_ha"], rel=1e-6), cls
+    sums = {r["cls"]: r["m2"] for r in qa.class_sums.groupBy("cls")
+            .agg(F.sum("area_m2").alias("m2")).collect()}
+    assert set(sums) == set(QA_CLASSES)
+    for cls, m2 in sums.items():
+        assert m2 == pytest.approx(totals["land_m2"], rel=1e-6), cls
 
 
 def test_qa_compare_overlapping_vs_planarized(qa):
     """qa.sql:8-38 — per designation, dissolved overlapping area equals
-    the total area of planarized faces containing the designation."""
-    assert qa["qa_compare"]
-    for d, row in qa["qa_compare"].items():
-        assert row["pct_diff"] < 1e-4, (d, row)
+    the total area of planarized faces containing the designation (a
+    designation on one side only reads 0 on the other and fails)."""
+    rows = qa.compare.collect()
+    assert rows
+    for r in rows:
+        assert r["planarized_m2"] == pytest.approx(
+            r["overlapping_m2"], rel=1e-6), r
 
 
-def test_precedence_areas_le_overlapping(qa):
+def test_precedence_areas_le_overlapping(outputs, qa):
     """precedence output is the non-overlapping partition of each
     designation's claim: per designation it can never exceed the
     dissolved overlapping area."""
-    for d, (over_ha, prec_ha) in qa["per_designation_ha"].items():
-        assert prec_ha <= over_ha * (1 + 1e-9), d
-        assert prec_ha > 0, d
+    over = {r["designation"]: r["overlapping_m2"]
+            for r in qa.compare.collect()}
+    prec = {r["designation"]: r["m2"]
+            for r in with_area(outputs.designatedlands)
+            .groupBy("designation").agg(F.sum("area_m2").alias("m2"))
+            .collect()}
+    assert set(prec) == set(over)
+    for d, m2 in prec.items():
+        assert m2 <= over[d] * (1 + 1e-9), d
+        assert m2 > 0, d
 
 
 def test_precedence_total_equals_union(outputs, spark):

@@ -80,6 +80,26 @@ def test_check_oracle_rejects_unknown_names():
     assert "failures" not in r.stdout
 
 
+def test_check_oracle_from_another_directory(tmp_path):
+    """Run from outside the repo, the CLI's Python workers still import
+    `dle` to unpickle a UDF gate. The repo root is stripped from the
+    inherited PYTHONPATH, so only the session factory can supply it."""
+    import os
+    import subprocess
+    import sys
+    root = Path(__file__).resolve().parents[1]
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and Path(p).resolve() != root)
+    r = subprocess.run(
+        [sys.executable, str(root / "tools" / "check_oracle.py"), SF,
+         "spatial_pip_polygon"],
+        capture_output=True, text=True, timeout=300, cwd=tmp_path, env=env)
+    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
+    assert "PASS spatial_pip_polygon" in r.stdout
+
+
 def test_pip_join_partition_invariance(spark):
     df = q.q_spatial_pip_join(spark, SF)
     a = sorted(map(tuple, df.coalesce(1).collect()))
